@@ -96,9 +96,14 @@ object PlanAudit {
   /** Corpus-sized scans reachable from `p` without crossing a row-limiting
     * operator, as (name, scanBytes). Descends through AQE wrappers, reused
     * exchanges and cached relations; joins are walked on BOTH children (a
-    * semi/inner join does not bound its streamed side). */
+    * semi/inner join does not bound its streamed side). Only the
+    * Final/Complete side of an aggregate bounds rows to the group count —
+    * it is the side that requires its input clustered by the grouping
+    * keys. A Partial aggregate bounds rows only per input partition, so
+    * the walk goes through it. */
   def unboundedCorpusScans(p: SparkPlan): Seq[(String, Long)] = p match {
-    case _: BaseAggregateExec => Nil
+    case a: BaseAggregateExec if a.requiredChildDistributionExpressions.isDefined =>
+      Nil
     case _: GlobalLimitExec | _: LocalLimitExec |
          _: TakeOrderedAndProjectExec | _: CollectLimitExec => Nil
     case f: FileSourceScanExec =>

@@ -700,7 +700,7 @@ object QueriesExtra {
       fn = (s, dir) => {
         // walks ride the STORED indexed adjacency (CSR-style layout fixture,
         // Tables.coPurchaseAdjacency) — re-ranking the edge list per query
-        // was ~3 s of every call (r10 BenchOne); production keeps the index.
+        // was ~3 s of every call (r10); production keeps the index.
         val adj = Tables.coPurchaseAdjacency(s, dir)
         val seeds = adj.select(col("src").as("id")).distinct()
           .filter(col("id") % 1000 === 0).orderBy(col("id")).limit(8)

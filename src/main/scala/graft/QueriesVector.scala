@@ -1604,8 +1604,8 @@ object QueriesVector {
     // resident adjacency. The PROBE work is corpus-independent
     // (|queries|·ef·K rows per round); the round's join still streams the
     // resident adjacency, so single-node latency ∝ resident-index scan,
-    // not corpus × queries — ScaleProbe's beam_query measured ~2× latency
-    // over a 16× corpus (SCALE.md r11 wave 1). The stored layout IS
+    // not corpus × queries — a beam-query scaling probe measured ~2×
+    // latency over a 16× corpus (SCALE.md r11 wave 1). The stored layout IS
     // bucketed by node id (ensureKnnGraph partitionBy(a_bkt_<B>)) and the hop
     // join (Vectors.graphHops) dynamic-partition-prunes a cold probe to
     // the probed buckets (KnnGraphLayoutSpec), which is why graph indexes
@@ -1628,7 +1628,7 @@ object QueriesVector {
         // cached relation has no partitions to prune and the DPP probe
         // machinery measured ~+0.9 s/call of pure overhead against it
         // (r12 bench flag). The cold/cluster path keeps the bucket column and prunes
-        // (KnnGraphLayoutSpec, ScaleProbe beam_query_cold_bucketed).
+        // (KnnGraphLayoutSpec).
         // CacheOnce (not bare persist): these pins are deliberately left
         // cached across calls — the resident serving contract — so rep 2+
         // would otherwise WARN-flood the bench log (r12 verdict item 4)
@@ -1657,7 +1657,7 @@ object QueriesVector {
         val wq = org.apache.spark.sql.expressions.Window
           .partitionBy(col("q")).orderBy(col("d9"), col("id"))
         // beam loop factored into Vectors.beamSearch (identical computation)
-        // so ScaleProbe's beam_query kernel times the same serving path
+        // so KnnGraphLayoutSpec exercises the same serving path
         val beam = Vectors.beamSearch(g1, emb, qs, seeds, ef, rounds)
         val top = beam.withColumn("rnk", row_number().over(wq))
           .filter(col("rnk") <= K).persist()

@@ -1,9 +1,8 @@
 package graft
 import org.apache.spark.sql.SparkSession
 
-/** Shared performance defaults for every graft session (Bench / BenchOne /
-  * Verify / VerifyOne / Explain / PlanAudit / ScaleProbe). Env-overridable
-  * so A/Bs can flip them without recompiling.
+/** Shared performance defaults for every graft session (Verify / Explain /
+  * PlanAudit and the storage benchmark's session).
   *
   * `spark.sql.autoBroadcastJoinThreshold = 64m` (guide §3.1): many of the
   * registry's mid-size join sides are lazy join/agg derivations whose size
@@ -21,7 +20,7 @@ import org.apache.spark.sql.SparkSession
   * j3_orphan_db −14%, dedup_cc_incremental −13%; worst regression
   * a4_first_per_prefix +15% (0.11 s absolute).
   *
-  * Rejected after the same A/B (OPTIMIZATION_r13.md "Session join policy"):
+  * Rejected after the same r13 A/B:
   * `spark.sql.join.preferSortMergeJoin=false` +
   * `spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold=64m` measured
   * +26% total — shuffled-hash map builds lose to sort-merge on this
@@ -29,6 +28,5 @@ import org.apache.spark.sql.SparkSession
   */
 object Tuning {
   def apply(b: SparkSession.Builder): SparkSession.Builder = b
-    .config("spark.sql.autoBroadcastJoinThreshold",
-      sys.env.getOrElse("SPARK_GRAFT_BCAST", "64m"))
+    .config("spark.sql.autoBroadcastJoinThreshold", "64m")
 }

@@ -5,28 +5,36 @@ import java.nio.file.{Files, Paths}
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
-    // args: sfDir outDir [comma-separated query names] — the optional third
-    // arg restricts the dump for fast local spot-checks; the driver always
-    // calls with two args and gets the full registry.
+    // args: sfDir outDir [comma-separated query names]. The driver always
+    // calls with two args and gets the full registry. The optional third
+    // arg is the subset mode for local spot-checks: outDir is emptied first
+    // (stale results would grade as current) and oracle_sql.json lists only
+    // the named queries, so `tools/check.py <sf> <out>` grades just those.
     val sfDir = args(0)
     val outDir = args(1)
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
+    val unknown = only.getOrElse(Set.empty) -- SparkEntry.queries.keySet
+    require(unknown.isEmpty,
+      s"unknown query name(s): ${unknown.toSeq.sorted.mkString(", ")}")
+    def selected(name: String): Boolean = only.forall(_.contains(name))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       math.min(Runtime.getRuntime.availableProcessors, 32).toString)
     val spark = Tuning(SparkSession.builder())
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
-      // per-process path: concurrent Verify/Bench runs would otherwise race
-      // on the drop-and-recreate of the bucketed signature tables
+      // per-process path: concurrent sessions would otherwise race on the
+      // drop-and-recreate of the bucketed signature tables
       .config("spark.sql.warehouse.dir", Warehouse.dir)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    new java.io.File(outDir).mkdirs()
+    val out = new java.io.File(outDir)
+    if (only.isDefined) rmTree(out)
+    out.mkdirs()
     SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
+      .filter { case (name, _) => selected(name) }
       .foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
@@ -34,11 +42,7 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
         // remove any stale output from a previous run — a failed query must
         // not masquerade as a (wrong) result in the compare
-        val d = new java.io.File(s"$outDir/$name")
-        if (d.exists()) {
-          d.listFiles().foreach(_.delete())
-          d.delete()
-        }
+        rmTree(new java.io.File(s"$outDir/$name"))
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
@@ -54,9 +58,15 @@ object Verify {
       case c => c.toString
     } + "\""
     val json = SparkEntry.oracleSql
+      .filter { case (name, _) => selected(name) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
     Warehouse.cleanup()
+  }
+
+  private def rmTree(f: java.io.File): Unit = {
+    if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rmTree))
+    f.delete()
   }
 }

@@ -1,33 +1,17 @@
 package graft
 
 /** Per-process warehouse dir for the bucketed signature tables: unique per
-  * pid so concurrent Verify/Bench runs can't race the drop-and-recreate,
-  * deleted on session close so runs don't permanently leak table files
-  * into /tmp (r4 advice).
+  * pid so concurrent sessions (a Verify run beside a test or benchmark JVM)
+  * can't race the drop-and-recreate, deleted on session close so runs don't
+  * permanently leak table files into /tmp (r4 advice).
   */
 object Warehouse {
   def dir: String = s"/tmp/graft_warehouse_${ProcessHandle.current().pid()}"
 
   /** Canonical per-sf path of the stored kNN graph (built once per process
-    * by Vectors.ensureKnnGraph; read by the beam-search row, Bench's
-    * resident lap, and BenchOne's resident mode). */
+    * by Vectors.ensureKnnGraph; read by the beam-search row). */
   def knnGraphPath(sfDir: String): String =
     dir + "/knn_graph_" + sfDir.replaceAll("[^A-Za-z0-9]", "_")
-
-  /** The stored relations the graph/v3/embedding families probe — the
-    * resident lap's pin set. Shared between Bench and BenchOne's
-    * `resident` mode so pinned-vs-cold A/Bs always measure the SAME
-    * contract. */
-  def residentPins(spark: org.apache.spark.sql.SparkSession,
-                   sfDir: String): Seq[org.apache.spark.sql.DataFrame] = Seq(
-    // coPurchaseEdges dropped from the pin set in r13: the last three
-    // multi-edge consumers (bfs_layers, harmonic_centrality,
-    // assortativity) now probe the stored DISTINCT adjacency like the
-    // rest of the family, so pinning the expansion bought nothing
-    Tables.coPurchasePairs(spark, sfDir),
-    Tables.coPurchaseAdjacency(spark, sfDir),
-    spark.read.parquet(knnGraphPath(sfDir)),
-    Tables.embeddings(spark, sfDir))
 
   def cleanup(): Unit = {
     def rm(f: java.io.File): Unit = {

@@ -10,7 +10,7 @@ import org.apache.spark.sql.types.IntegerType
   * API (`VectorExprs.vecDot`) — same Expression node, same codegen, same
   * bit-level numerics. Registered either through [[graft.plans
   * .GraftExtensions]] (`spark.sql.extensions` — the cluster config path)
-  * or in-session via [[install]] (tests, Verify, Bench).
+  * or in-session via [[install]] (tests, Verify).
   *
   * This is the seam that lets a SQL-only client of the engine (BI tool,
   * notebook `%%sql`, the driver's own `spark.sql`) reach the hot-loop

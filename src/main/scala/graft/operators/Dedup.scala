@@ -240,7 +240,7 @@ object Dedup {
     * exploded form's multi-second shuffle+aggregate — but the md5 count is
     * identical, so the win is the removed explode/shuffle, not the digests.
     * The flat ~10 s bench lines in rounds 2-3 were one-time MD5 JIT warmup
-    * plus a 4-thread bench default, both fixed in Bench.scala — the
+    * plus a 4-thread session default of the old harness — the
     * steady-state query is ~1 s.) */
   def minhashLshPairs(df: DataFrame, idCol: String, textCol: String,
                       bands: Int = 16, rows: Int = 4,

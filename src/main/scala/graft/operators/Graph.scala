@@ -320,13 +320,8 @@ object Graph {
     } else lit(m2) * col("kic") - col("k") * totLessSelf
   }
 
-  /** `roundPlanHook(round, cNew)` sees each round's pre-checkpoint argmax
-    * relation — plan-evidence capture for the loop-internal join shape
-    * (ExplainLouvainRound); a no-op in every query path. */
   def louvainSync(edges: DataFrame, rounds: Int,
-                  assumeDistinct: Boolean = false,
-                  roundPlanHook: (Int, DataFrame) => Unit = (_, _) => ())
-      : DataFrame = {
+                  assumeDistinct: Boolean = false): DataFrame = {
     require(rounds >= 1, s"need at least one round, got $rounds")
     val mem = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val nPart = edges.sparkSession.conf
@@ -373,7 +368,6 @@ object Graph {
       val cNew = sc.groupBy(col("v"))
         .agg(min(struct((-col("score")).as("ns"), col("cc").as("l"))).as("m"))
         .select(col("v"), col("m.l").as("c"))
-      roundPlanHook(round, cNew)
       c = cNew.localCheckpoint()
     }
     val out = c.join(deg, Seq("v")).select(col("v"), col("c"), col("k"))

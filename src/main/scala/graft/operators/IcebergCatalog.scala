@@ -103,6 +103,11 @@ object IcebergCatalog {
     * deletable set is the J2-style anti-join — no step holds more than the
     * distinct-file relation, and nothing ever touches data bytes.
     *
+    * Precondition: `bytes` is a function of (table_id, file) — every ref
+    * to the same table file carries the same size. The per-file
+    * aggregation keeps `max(bytes)`, so refs that disagree on a file's
+    * size are not detected and `deletable_bytes` counts the largest.
+    *
     * Returns one census row per table: (table_id, n_snapshots, n_expired,
     * n_live_files, n_deletable_files, deletable_bytes). */
   def expireSnapshots(snapshots: DataFrame, refs: DataFrame,
@@ -121,9 +126,10 @@ object IcebergCatalog {
     // then ran TWO distincts (live / expired file sets) plus a left-anti
     // join between them — three exchanges of file-sized relations and a
     // corpus-sized cache pin. A file is deletable iff it has >= 1 expired
-    // ref and 0 live refs, and its bytes are a function of the file key,
-    // so one groupBy(table_id, file) with any(live)/any(expired)/any(bytes)
-    // decides everything: same sets, one exchange, nothing pinned.
+    // ref and 0 live refs, and (by the precondition above) its bytes are
+    // one value per file, so one groupBy(table_id, file) with
+    // any(live)/any(expired)/any(bytes) decides everything: same sets, one
+    // exchange, nothing pinned.
     val g = refs
       .join(broadcast(flagged.select(col("snapshot_id"), col("table_id"),
         col("expired"))), Seq("snapshot_id"))

@@ -963,7 +963,7 @@ object TextAnalysis {
     // + doc roster), so documents is scanned+exploded 4x where the
     // algorithm needs 2. Pinning both and cutting with a localCheckpoint
     // was tried in r14 and REVERTED: an interleaved same-JVM shape A/B
-    // (graft.AbRocchio) measured the pinned form 1.6-1.9x SLOWER steady
+    // measured the pinned form 1.6-1.9x SLOWER steady
     // state (1.59 s vs ~2.96 s at sf0.1/32c) — the persist
     // materialization + checkpoint cut cost more than the two explodes
     // they save, and two full bench laps flagged the pinned form against

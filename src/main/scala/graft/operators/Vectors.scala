@@ -106,8 +106,8 @@ object Vectors {
     * `nPlanes` controls the LSH seed fan-in: 2^nPlanes buckets, so the seed
     * self-join costs ~n²/2^nPlanes pairs. At a FIXED nPlanes the build is
     * quadratic in corpus size; holding bucket occupancy constant means
-    * nPlanes ≈ log2(n / target_bucket_size), which keeps the build linear —
-    * ScaleProbe's `knn_graph_build` kernel measures exactly that regime. */
+    * nPlanes ≈ log2(n / target_bucket_size), which keeps the build linear
+    * (SCALE.md records the r11 scaling probe of exactly that regime). */
   def nnDescentKnnGraph(vectors: DataFrame, idCol: String, embCol: String,
                         k: Int = 5, nPlanes: Int = 4): DataFrame = {
     def d9(x: String, y: String): Column = quantizedCos9(col(x), col(y))
@@ -154,8 +154,8 @@ object Vectors {
     * needed (deterministic idempotent scoring re-ranks revisits
     * identically). Returns the final beam (q, id, d9), ≤ ef rows/query.
     * Cost shape: each round joins a |queries|·ef relation against the
-    * resident adjacency and embedding relations — ScaleProbe's `beam_query`
-    * kernel measures the corpus-size dependence of that probe. */
+    * resident adjacency and embedding relations (SCALE.md r11 records the
+    * corpus-size dependence of that probe). */
   /** The stored layout's bucket column name, `a_bkt_<B>` — SELF-DESCRIBING:
     * the probe side must re-derive `pmod(a, B)` with the EXACT B the writer
     * used, and reading B out of the column name (rather than a shared
@@ -238,11 +238,9 @@ object Vectors {
     * index. */
   val KnnGraphBuckets = 16
 
-  /** The ONE writer of the bucketed adjacency layout (shared by
-    * [[ensureKnnGraph]] and ScaleProbe's cold-probe A/B kernel, so the
-    * measured layout cannot drift from the production one): (a, b) edges
-    * written partitionBy(`a_bkt_<buckets>`), src-sorted within each
-    * bucket. */
+  /** The ONE writer of the bucketed adjacency layout (used by
+    * [[ensureKnnGraph]]): (a, b) edges written partitionBy(`a_bkt_<buckets>`),
+    * src-sorted within each bucket. */
   def writeKnnGraphBucketed(graph: DataFrame, path: String,
                             buckets: Int = KnnGraphBuckets): Unit = {
     val bktCol = knnBucketCol(buckets)
@@ -937,8 +935,8 @@ object Vectors {
     * hot (the expected case for clustered data), additional pivots compose
     * by INTERSECTION: a pair is a candidate only if it is annulus-adjacent
     * under every pivot, so the hot cell is cut by each extra pivot's
-    * independent partition of it (ScaleProbe kernel `dbscan_hot` measures
-    * the candidate-pair drop on a deliberately clustered corpus).
+    * independent partition of it (SCALE.md r11: on a hot 48k-point ring,
+    * 1.15B candidate pairs under one pivot drop to 49.5M under two).
     *
     * Semantics: with `selfInclusive = true` (the default — Ester et al. /
     * scikit-learn convention), core ⇔ |N_ε(x)| ≥ minPts counting
@@ -1042,10 +1040,9 @@ object Vectors {
 
   /** Probe-only: the candidate-pair relation the composite-annulus equi-join
     * admits BEFORE the exact ε² check — the work the pruning could not
-    * avoid. Used by ScaleProbe's `dbscan_hot` kernels to measure how a
-    * second pivot's intersection cuts a hot annulus; [[dbscan]]'s own output
-    * is pivot-invariant (exactness), so the pre-filter count is the only
-    * observable difference. */
+    * avoid. DbscanSpec uses it to pin that a second pivot's intersection
+    * only prunes; [[dbscan]]'s own output is pivot-invariant (exactness),
+    * so the pre-filter count is the only observable difference. */
   def annulusCandidatePairs(points: DataFrame, idCol: String, vecCol: String,
                             eps: Double, pivots: Seq[Seq[Double]]): DataFrame = {
     val (keyed0, bktCols) = annulusKeys(points, idCol, vecCol, eps, pivots)

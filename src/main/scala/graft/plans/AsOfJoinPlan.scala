@@ -190,7 +190,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
 object AsOfJoinPlan {
   /** Idempotent in-session registration for sessions built without
-    * `spark.sql.extensions` (tests, Verify, Bench). */
+    * `spark.sql.extensions` (tests, Verify). */
   def install(spark: SparkSession): Unit = {
     val cs = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
     if (!cs.experimental.extraStrategies.contains(AsOfJoinStrategy))

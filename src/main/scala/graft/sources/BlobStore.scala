@@ -24,8 +24,8 @@ object BlobStore {
     * [[graft.Tables]]'s materialized relations so a driver regen can never
     * serve stale blobs. Writes happen executor-side (`foreachPartition`,
     * the shape S3 multipart PUTs would take) into a scratch directory that
-    * is atomically renamed into place, so concurrent Verify/Bench runs
-    * cannot observe a half-written tree.
+    * is atomically renamed into place, so concurrent sessions cannot
+    * observe a half-written tree.
     */
   def ensureBlobTree(spark: SparkSession, dir: String): String = {
     val out = s"/tmp/graft_blobs/${graft.Tables.sourceFingerprint(dir)}"

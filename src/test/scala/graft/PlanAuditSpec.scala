@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.spark.sql.catalyst.expressions.aggregate.Partial
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.aggregate.HashAggregateExec
 import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -45,8 +47,18 @@ class PlanAuditSpec extends SparkTestBase {
     assert(scans(corpus.filter(col("l_orderkey") % 100 === 0)) ==
       Seq("lineitem.parquet"),
       "a filter does NOT bound rows — the estimate-trusting shape must flag")
-    assert(scans(corpus.groupBy(col("l_orderkey") % 10).count()).isEmpty,
+    val grouped = corpus.groupBy(col("l_orderkey") % 10).count()
+    assert(scans(grouped).isEmpty,
       "an aggregate bounds rows to the group count")
+    // ...but only its Final side: the Partial half of the split bounds rows
+    // per input partition, not globally, so the walk must go through it
+    val partial = PlanAudit.allNodes(grouped.queryExecution.executedPlan)
+      .collectFirst { case a: HashAggregateExec
+        if a.aggregateExpressions.nonEmpty &&
+          a.aggregateExpressions.forall(_.mode == Partial) => a }
+      .getOrElse(fail("fixture plan has no Partial HashAggregateExec"))
+    assert(PlanAudit.unboundedCorpusScans(partial).map(_._1) ==
+      Seq("lineitem.parquet"), "a Partial aggregate must not bound rows")
     assert(scans(corpus.limit(10)).isEmpty, "a limit bounds rows")
     val other = s"$dir/tiny_dim.parquet"
     spark.range(10).toDF("k").write.mode("overwrite").parquet(other)

@@ -2,12 +2,13 @@
 # The mandatory pre-snapshot gate (r5/r6 verdicts: two rounds shipped
 # ungated; this script IS the last step before any end-of-round commit).
 #
-# Runs, in order, appending to GATE_r07.log with timestamps + HEAD:
+# Runs, in order, appending to GATE_<tag>.log with timestamps + HEAD:
 #   1. sbt test              (all ScalaTest suites)
 #   2. graft.Verify          (full registry -> parquet + oracle_sql.json, sf0.01)
 #   3. tools/check.py        (DuckDB oracle compare, driver-parity)
 #   4. graft.PlanAudit       (registry-wide plan linter)
-#   5. graft.Bench           (sf0.1, local[32] -> one JSON line)
+#   5. perfbench/run.py      (api_mix + vector_query, seed 1, 15 s; each run
+#                             must exit 0 and report "correct": true)
 #
 # Exit nonzero on ANY red step. Usage: tools/gate.sh [round-tag]
 set -o pipefail
@@ -52,13 +53,18 @@ if [ $RC -ne 0 ] || ! grep -qE "audit: 0 flagged" /tmp/gate_audit.log; then
   echo "GATE RED: PlanAudit rc=$RC" | tee -a "$LOG"; exit 1
 fi
 
-echo "--- Bench (sf0.1) ---" >> "$LOG"
-SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS=32 \
-  sbt -batch "runMain graft.Bench" > /tmp/gate_bench.log 2>&1
-RC=$?
-grep -E '\{"metric"' /tmp/gate_bench.log | tail -1 >> "$LOG"
-tail -1 /tmp/gate_bench.log >> "$LOG"
-if [ $RC -ne 0 ]; then echo "GATE RED: Bench rc=$RC" | tee -a "$LOG"; exit 1; fi
+for W in api_mix vector_query; do
+  echo "--- perfbench ${W} ---" >> "$LOG"
+  python3 perfbench/run.py --workload "$W" --seed 1 --seconds 15 --trace 0 \
+    > "/tmp/gate_perf_${W}.log" 2>&1
+  RC=$?
+  grep -E '^\{"correct":' "/tmp/gate_perf_${W}.log" | tail -1 >> "$LOG"
+  if [ $RC -ne 0 ] || \
+     ! grep -qE '^\{"correct": true,' "/tmp/gate_perf_${W}.log"; then
+    echo "GATE RED: perfbench ${W} rc=$RC (see /tmp/gate_perf_${W}.log)" \
+      | tee -a "$LOG"; exit 1
+  fi
+done
 
 echo "=== GATE ${TAG} — finished $(date -u '+%F %T') UTC — ALL GREEN ===" >> "$LOG"
 echo "GATE GREEN"
