@@ -1,34 +1,14 @@
 package graft
 
-import graft.operators.{Dedup, Sampling, TextAnalysis}
+import graft.operators.{Sampling, TextAnalysis}
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-/** North-star text-pipeline queries over `documents`: dedup (exact, n-gram
-  * Jaccard, MinHash-LSH, SimHash, embedding-cosine) and text analysis
-  * (tokens, quality, lang-id, fingerprint). The corpus has no natural
-  * duplicates, so dedup queries splice in synthetic variants (doc_id +
-  * 1,000,000) — the same construction in the oracle SQL.
+/** Text-pipeline queries over `documents`: text analysis (tokens, quality,
+  * lang-id, fingerprint, language models, tokenizers), sampling, packing and
+  * line/URL/boilerplate cleanup.
   */
 object QueriesText {
-
-  /** Shared corpus-with-duplicates: every 3rd doc re-appears verbatim. */
-  private val corpusCte =
-    """corpus AS (
-      |  SELECT doc_id, text FROM documents
-      |  UNION ALL
-      |  SELECT doc_id + 1000000 AS doc_id, text FROM documents WHERE doc_id % 3 = 0
-      |)""".stripMargin
-
-  /** Near-dup corpus: every 5th doc re-appears with a 5-word tail appended. */
-  private val nearDupCte =
-    """corpus AS (
-      |  SELECT doc_id, text FROM documents
-      |  UNION ALL
-      |  SELECT doc_id + 1000000 AS doc_id,
-      |         concat(text, ' quality data pipeline tail marker') AS text
-      |  FROM documents WHERE doc_id % 5 = 0
-      |)""".stripMargin
 
   private val wordsSql = "string_split_regex(lower(trim(text)), '\\s+')"
 
@@ -55,129 +35,6 @@ object QueriesText {
        |  ORDER BY c DESC, piece LIMIT 64),
        |vocab AS (SELECT * FROM p1 UNION ALL SELECT * FROM pk)""".stripMargin
 
-  /** DuckDB twin of [[graft.operators.Dedup.cdcChunks]] (m=8) with
-    * CTE-name prefix `p` over source CTE `src` (must expose doc_id, text):
-    * boundary after word i when md5(w[i-1] ' ' w[i]) ≡ 0 (mod 8), doc end
-    * closes the last chunk. list_distinct SCRAMBLES order in DuckDB, so
-    * both twins sort explicitly. Exposes `${p}ch(doc_id, chunk)`. */
-  private def cdcChunkCtes(p: String, src: String): String =
-    s"""${p}w AS (SELECT doc_id, $wordsSql AS ws FROM $src),
-       |${p}bl AS (SELECT doc_id, ws, list_sort(list_distinct(list_concat(
-       |    list_filter(generate_series(2, greatest(len(ws), 2)),
-       |      i -> i <= len(ws)
-       |        AND CAST('0x' || substr(md5(ws[i-1] || ' ' || ws[i]), 1, 15) AS BIGINT) % 8 = 0),
-       |    [len(ws)]))) AS bnds FROM ${p}w),
-       |${p}ch AS (SELECT doc_id,
-       |    array_to_string(ws[(CASE WHEN k = 1 THEN 0 ELSE bnds[k-1] END) + 1 : bnds[k]], ' ') AS chunk
-       |  FROM (SELECT doc_id, ws, bnds,
-       |          unnest(generate_series(1, len(bnds))) AS k FROM ${p}bl))""".stripMargin
-
-  /** Shared cluster-resolution CTE chain (over a `corpus` CTE): df-capped
-    * shared-shingle Jaccard pairs → undirected edges → recursive
-    * reachability. Twin of `Dedup.jaccardPairs(n=3, 0.5, maxDf=8)` +
-    * `Dedup.resolveClusters`. Compose after a `WITH RECURSIVE corpus...`. */
-  private val clusterCtes =
-    s"""sh AS (SELECT doc_id AS id, list_distinct(list_transform(
-       |    generate_series(1, greatest(len($wordsSql) - 2, 1)),
-       |    i -> array_to_string(($wordsSql)[i:i+2], ' '))) AS shl FROM corpus),
-       |e0 AS (SELECT id, unnest(shl) AS s FROM sh),
-       |hot AS (SELECT s FROM e0 GROUP BY s HAVING count(*) > 8),
-       |f AS (SELECT * FROM e0 WHERE s NOT IN (SELECT s FROM hot)),
-       |e AS (SELECT f.id, s, n_sh FROM f
-       |      JOIN (SELECT id, count(*) AS n_sh FROM f GROUP BY id) n USING (id)),
-       |p AS (SELECT a.id AS id_a, b.id AS id_b, a.n_sh AS na, b.n_sh AS nb,
-       |             count(*) AS inter
-       |      FROM e a JOIN e b ON a.s = b.s AND a.id < b.id GROUP BY 1, 2, 3, 4),
-       |pairs AS (SELECT id_a, id_b FROM p
-       |          WHERE CAST(inter AS DOUBLE) / (na + nb - inter) >= 0.5),
-       |edges AS (SELECT id_a AS src, id_b AS dst FROM pairs
-       |          UNION ALL SELECT id_b, id_a FROM pairs),
-       |nodes AS (SELECT DISTINCT src AS id FROM edges),
-       |reach AS (SELECT id, id AS label FROM nodes
-       |          UNION
-       |          SELECT e.src, r.label FROM edges e JOIN reach r ON r.id = e.dst)""".stripMargin
-
-  /** DuckDB twin of [[graft.operators.Dedup.minhashLshPairs]] (16 bands × 4
-    * rows): portable md5-derived double hashing h_i = (h1 + i·h2) mod 2^60, band join on
-    * slice equality (Spark joins on xxhash64 of the same slice — equality-
-    * equivalent), signature-agreement estimate. The 64 min-aggregates are
-    * generated here rather than hand-written. `tail` replaces the default
-    * final SELECT (it may open with `, extraCte AS (...)` to extend the
-    * chain — used by the split-leakage queries to consume `pairs`). */
-  private def minhashOracle(corpus: String, pairFilter: String = "",
-                            tail: String = ""): String = {
-    // sig_i = (h1 + i·h2) mod 2^60 with FULL-width h2 (the Spark kernel's
-    // wrap-and-mask, see MinHashMd5Sig). int64-safe replay: split h2 into
-    // lo (54 bits) + hi (6 bits); i·h2 ≡ i·lo + ((i·hi) mod 2^6)·2^54
-    // (mod 2^60), every term < 2^61 — no BIGINT overflow.
-    val minExprs = (0 until 64).map(i =>
-      s"min((h1 + $i*h2lo + (($i*h2hi) % 64) * 18014398509481984) " +
-        s"% 1152921504606846976) AS s$i").mkString(", ")
-    val sigArr = (0 until 64).map(i => s"s$i").mkString("[", ", ", "]")
-    val bandArr = (0 until 16).map(b =>
-      s"struct_pack(band := $b, bucket := array_to_string(sig[${b * 4 + 1}:${b * 4 + 4}], ','))")
-      .mkString("[", ", ", "]")
-    s"""WITH $corpus,
-       |sh AS (SELECT doc_id AS id, list_distinct(list_transform(
-       |    generate_series(1, greatest(len($wordsSql) - 2, 1)),
-       |    i -> array_to_string(($wordsSql)[i:i+2], ' '))) AS shl FROM corpus),
-       |e AS (SELECT id, unnest(shl) AS s FROM sh),
-       |h AS (SELECT id, h1, h2 % 18014398509481984 AS h2lo, h2 // 18014398509481984 AS h2hi
-       |      FROM (SELECT id, CAST('0x' || substr(md5(s), 1, 15) AS BIGINT) AS h1,
-       |              CAST('0x' || substr(md5(s), 17, 15) AS BIGINT) AS h2 FROM e)),
-       |sig AS (SELECT id, $sigArr AS sig FROM (SELECT id, $minExprs FROM h GROUP BY id)),
-       |bands AS (SELECT id, bb.band AS band, bb.bucket AS bucket
-       |          FROM (SELECT id, unnest($bandArr) AS bb FROM sig)),
-       |cand AS (SELECT DISTINCT a.id AS id_a, b.id AS id_b FROM bands a
-       |         JOIN bands b ON a.band = b.band AND a.bucket = b.bucket AND a.id < b.id$pairFilter),
-       |est AS (SELECT c.id_a, c.id_b,
-       |        round(len(list_filter(list_zip(sa.sig, sb.sig), z -> z[1] = z[2])) / 64.0, 6) AS est_jaccard
-       |        FROM cand c JOIN sig sa ON c.id_a = sa.id JOIN sig sb ON c.id_b = sb.id),
-       |pairs AS (SELECT id_a, id_b, est_jaccard FROM est WHERE est_jaccard >= 0.5)
-       |${if (tail.nonEmpty) tail
-           else "SELECT id_a, id_b, est_jaccard FROM pairs ORDER BY id_a, id_b"}""".stripMargin
-  }
-
-
-  /** DuckDB twin of [[graft.operators.Dedup.minhashParamSweep]]: one shared
-    * 64-slot signature chain, one banded candidate CTE per (bands, rows)
-    * arm, each reduced to the S-curve census row. */
-  private def minhashSweepOracle(corpus: String, arms: Seq[(Int, Int)]): String = {
-    val minExprs = (0 until 64).map(i =>
-      s"min((h1 + $i*h2lo + (($i*h2hi) % 64) * 18014398509481984) " +
-        s"% 1152921504606846976) AS s$i").mkString(", ")
-    val sigArr = (0 until 64).map(i => s"s$i").mkString("[", ", ", "]")
-    def bandArr(b: Int, r: Int) = (0 until b).map(i =>
-      s"struct_pack(band := $i, bucket := array_to_string(sig[${i * r + 1}:${i * r + r}], ','))")
-      .mkString("[", ", ", "]")
-    val armCtes = arms.map { case (b, r) =>
-      s"""bands_${b}_$r AS (SELECT id, bb.band AS band, bb.bucket AS bucket
-         |  FROM (SELECT id, unnest(${bandArr(b, r)}) AS bb FROM sig)),
-         |cand_${b}_$r AS (SELECT DISTINCT a.id AS id_a, b.id AS id_b FROM bands_${b}_$r a
-         |  JOIN bands_${b}_$r b ON a.band = b.band AND a.bucket = b.bucket AND a.id < b.id),
-         |arm_${b}_$r AS (SELECT $b AS bands, $r AS rows_per_band,
-         |    count(*) AS n_candidates,
-         |    coalesce(CAST(sum(agree) AS BIGINT), 0) AS sum_agreement,
-         |    coalesce(CAST(sum(CASE WHEN agree * 2 >= 64 THEN 1 ELSE 0 END) AS BIGINT), 0) AS n_dup_pairs
-         |  FROM (SELECT CAST(len(list_filter(list_zip(sa.sig, sb.sig), z -> z[1] = z[2])) AS BIGINT) AS agree
-         |        FROM cand_${b}_$r c JOIN sig sa ON c.id_a = sa.id JOIN sig sb ON c.id_b = sb.id))""".stripMargin
-    }.mkString(",\n")
-    val unions = arms.map { case (b, r) => s"SELECT * FROM arm_${b}_$r" }
-      .mkString("\nUNION ALL ")
-    s"""WITH $corpus,
-       |sh AS (SELECT doc_id AS id, list_distinct(list_transform(
-       |    generate_series(1, greatest(len($wordsSql) - 2, 1)),
-       |    i -> array_to_string(($wordsSql)[i:i+2], ' '))) AS shl FROM corpus),
-       |e AS (SELECT id, unnest(shl) AS s FROM sh),
-       |h AS (SELECT id, h1, h2 % 18014398509481984 AS h2lo, h2 // 18014398509481984 AS h2hi
-       |      FROM (SELECT id, CAST('0x' || substr(md5(s), 1, 15) AS BIGINT) AS h1,
-       |              CAST('0x' || substr(md5(s), 17, 15) AS BIGINT) AS h2 FROM e)),
-       |sig AS (SELECT id, $sigArr AS sig FROM (SELECT id, $minExprs FROM h GROUP BY id)),
-       |$armCtes
-       |$unions
-       |ORDER BY bands""".stripMargin
-  }
-
   /** Deterministic train/val/test assignment, 8/1/1 by portable hash shard
     * — a narrow per-row expression (no shuffle, no RNG state), so split
     * membership survives reruns, repartitioning, and engine changes. */
@@ -194,45 +51,6 @@ object QueriesText {
       |  FROM (SELECT doc_id, CAST('0x' || substr(md5(concat('split1',
       |          CAST(doc_id AS VARCHAR))), 1, 15) AS BIGINT) % 10 AS b
       |        FROM corpus))""".stripMargin
-
-  /** Shared fingerprint CTE chain (over a `corpus` CTE): 60-bit portable
-    * SimHash fingerprints — md5-derived word hashes, signed bit sums. */
-  private val simhashFpCtes: String = {
-    val bitSums = (0 until 60).map(j =>
-      s"sum(CASE WHEN (h >> $j) & 1 = 1 THEN 1 ELSE -1 END) AS b$j").mkString(", ")
-    val fp = (0 until 60).map(j =>
-      s"(CASE WHEN b$j > 0 THEN (1::BIGINT << $j) ELSE 0 END)").mkString(" + ")
-    s"""w AS (SELECT doc_id AS id, unnest($wordsSql) AS w FROM corpus),
-       |h AS (SELECT id, CAST('0x' || substr(md5(w), 1, 15) AS BIGINT) AS h FROM w),
-       |bits AS (SELECT id, $bitSums FROM h GROUP BY id),
-       |fp AS (SELECT id, $fp AS sim FROM bits)""".stripMargin
-  }
-
-  /** DuckDB twin of [[graft.operators.Dedup.simhashPairs]]: 4×15-bit
-    * multi-block candidates (any block equal), hamming ≤ maxDist. */
-  private def simhashOracle(corpus: String, maxDist: Int): String =
-    s"""WITH $corpus,
-       |$simhashFpCtes,
-       |blk AS (SELECT id, sim, b, (sim >> (15 * b)) & 32767 AS bv
-       |        FROM fp CROSS JOIN (SELECT unnest([0, 1, 2, 3]) AS b)),
-       |p AS (SELECT DISTINCT a.id AS id_a, b.id AS id_b,
-       |      CAST(bit_count(xor(a.sim, b.sim)) AS INT) AS hamming
-       |      FROM blk a JOIN blk b ON a.b = b.b AND a.bv = b.bv AND a.id < b.id)
-       |SELECT id_a, id_b, hamming FROM p WHERE hamming <= $maxDist
-       |ORDER BY id_a, id_b""".stripMargin
-
-  /** Oracle for [[graft.operators.Dedup.simhashPairsExhaustive]]: brute-force
-    * ALL-pairs hamming — no candidate structure at all. The Spark side only
-    * hash-matches this if its blocked tables are exhaustive at `maxDist`,
-    * which is exactly what the graded row proves. */
-  private def simhashExhaustiveOracle(corpus: String, maxDist: Int): String =
-    s"""WITH $corpus,
-       |$simhashFpCtes
-       |SELECT a.id AS id_a, b.id AS id_b,
-       |       CAST(bit_count(xor(a.sim, b.sim)) AS INT) AS hamming
-       |FROM fp a JOIN fp b ON a.id < b.id
-       |WHERE bit_count(xor(a.sim, b.sim)) <= $maxDist
-       |ORDER BY id_a, id_b""".stripMargin
 
   /** Shared by `text_perplexity` (single LM join) and
     * `text_perplexity_tiered` (head-broadcast + tail join) — one oracle,
@@ -309,333 +127,6 @@ object QueriesText {
 
   def queries: Map[String, Q] = Map(
 
-    // Exact dedup: content-hash groupBy, min-id winner.
-    "dedup_exact" -> Q(
-      fn = (s, dir) => {
-        val d = Tables.documents(s, dir)
-        val corpus = d.select(col("doc_id"), col("text"))
-          .unionByName(d.filter(col("doc_id") % 3 === 0)
-            .select((col("doc_id") + 1000000).as("doc_id"), col("text")))
-        Dedup.exactDedup(corpus, "doc_id", "text").orderBy(col("content_hash"))
-      },
-      oracle = Some(
-        s"""WITH $corpusCte
-           |SELECT md5(text) AS content_hash, min(doc_id) AS keep_id,
-           |       count(*) AS n_copies
-           |FROM corpus GROUP BY 1 ORDER BY content_hash""".stripMargin),
-      doc = "exact dedup via content hash"),
-
-    // Exact n-gram Jaccard near-dup pairs (shared-shingle candidate join),
-    // df-capped at 8: corpus-common shingles would pair df² docs (the sf0.01
-    // fixture's hottest shingle has df=100 → 4950 pairs from one key); the cap
-    // drops them from the Jaccard universe before the self-join. The pair set
-    // at threshold 0.5 is unchanged for this corpus (asserted in PropertySpec).
-    "dedup_jaccard_pairs" -> Q(
-      fn = (s, dir) => {
-        val d = Tables.documents(s, dir)
-        val corpus = d.select(col("doc_id"), col("text"))
-          .unionByName(d.filter(col("doc_id") % 5 === 0)
-            .select((col("doc_id") + 1000000).as("doc_id"),
-              concat(col("text"), lit(" quality data pipeline tail marker")).as("text")))
-        Dedup.jaccardPairs(corpus, "doc_id", "text", 3, 0.5, maxDf = 8)
-          .orderBy(col("id_a"), col("id_b"))
-      },
-      oracle = Some(
-        s"""WITH $nearDupCte,
-           |sh AS (SELECT doc_id AS id, list_distinct(list_transform(
-           |    generate_series(1, greatest(len($wordsSql) - 2, 1)),
-           |    i -> array_to_string(($wordsSql)[i:i+2], ' '))) AS shl FROM corpus),
-           |e0 AS (SELECT id, unnest(shl) AS s FROM sh),
-           |hot AS (SELECT s FROM e0 GROUP BY s HAVING count(*) > 8),
-           |f AS (SELECT * FROM e0 WHERE s NOT IN (SELECT s FROM hot)),
-           |e AS (SELECT f.id, s, n_sh FROM f
-           |      JOIN (SELECT id, count(*) AS n_sh FROM f GROUP BY id) n USING (id)),
-           |p AS (SELECT a.id AS id_a, b.id AS id_b, a.n_sh AS na, b.n_sh AS nb,
-           |             count(*) AS inter
-           |      FROM e a JOIN e b ON a.s = b.s AND a.id < b.id GROUP BY 1, 2, 3, 4),
-           |j AS (SELECT id_a, id_b,
-           |             round(CAST(inter AS DOUBLE) / (na + nb - inter), 6) AS jaccard
-           |      FROM p)
-           |SELECT id_a, id_b, jaccard FROM j WHERE jaccard >= 0.5
-           |ORDER BY id_a, id_b""".stripMargin),
-      doc = "n-gram Jaccard near-dup (exact, shingle-join candidates, df-capped)"),
-
-    // MinHash-LSH near-dup pairs — approximate scale path, hash-checked:
-    // signatures use portable md5-derived double hashing (Dedup.hash60).
-    "dedup_minhash_lsh" -> Q(
-      fn = (s, dir) => {
-        val d = Tables.documents(s, dir)
-        val corpus = d.select(col("doc_id"), col("text"))
-          .unionByName(d.filter(col("doc_id") % 5 === 0)
-            .select((col("doc_id") + 1000000).as("doc_id"),
-              concat(col("text"), lit(" quality data pipeline tail marker")).as("text")))
-        Dedup.minhashLshPairs(corpus, "doc_id", "text", 16, 4, 0.5)
-          .orderBy(col("id_a"), col("id_b"))
-      },
-      oracle = Some(minhashOracle(nearDupCte)),
-      doc = "MinHash+LSH near-dup (banded, sub-quadratic)"),
-
-    // Incremental MinHash-LSH: the daily-batch shape — new docs (the %5
-    // near-dup variants) dedup against the BASE corpus's persisted signature
-    // table + within the batch; existing×existing pairs are never touched.
-    // Oracle: the full-corpus pass restricted to pairs involving a new id —
-    // provably the same set, which is exactly the incremental contract.
-    "dedup_minhash_incremental" -> Q(
-      fn = (s, dir) => {
-        val d = Tables.documents(s, dir)
-        val newDocs = d.filter(col("doc_id") % 5 === 0)
-          .select((col("doc_id") + 1000000).as("doc_id"),
-            concat(col("text"), lit(" quality data pipeline tail marker")).as("text"))
-        val baseSigs = Dedup.minhashSignatures(
-          d.select(col("doc_id"), col("text")), "doc_id", "text", 16, 4)
-        Dedup.minhashLshIncremental(newDocs, "doc_id", "text", baseSigs, 16, 4, 0.5)
-          .orderBy(col("id_a"), col("id_b"))
-      },
-      oracle = Some(minhashOracle(nearDupCte,
-        " AND (a.id >= 1000000 OR b.id >= 1000000)")),
-      doc = "incremental MinHash-LSH (new batch vs persisted signature table)"),
-
-    // Bucketed-layout incremental MinHash-LSH: the corpus's banded relation
-    // and signature table are WRITTEN as bucketed+sorted tables (the 100 TB
-    // storage layout) and the incremental join runs against them with no
-    // corpus-side shuffle. Same oracle as dedup_minhash_incremental — the
-    // hash-match proves the layout change is result-invariant.
-    "dedup_minhash_lsh_bucketed" -> Q(
-      fn = (s, dir) => {
-        val d = Tables.documents(s, dir)
-        val newDocs = d.filter(col("doc_id") % 5 === 0)
-          .select((col("doc_id") + 1000000).as("doc_id"),
-            concat(col("text"), lit(" quality data pipeline tail marker")).as("text"))
-        // build-if-absent: the layout CTAS is the one-time storage cost,
-        // so every call after the first measures the incremental PROBE
-        // (the recurring daily cost)
-        Dedup.ensureSignatureTables(s, Dedup.minhashSignatures(
-          d.select(col("doc_id"), col("text")), "doc_id", "text", 16, 4),
-          "mh_corpus", numBuckets = 16)
-        Dedup.minhashLshIncrementalBucketed(newDocs, "doc_id", "text",
-          "mh_corpus", 16, 4, 0.5)
-          .orderBy(col("id_a"), col("id_b"))
-      },
-      oracle = Some(minhashOracle(nearDupCte,
-        " AND (a.id >= 1000000 OR b.id >= 1000000)")),
-      doc = "incremental MinHash-LSH over bucketed signature tables (corpus-shuffle-free)"),
-
-    // Sketch-calibration audit: for EVERY LSH candidate pair (threshold 0),
-    // the MinHash agreement count (of 64) against the EXACT shingle-set
-    // overlap, censused per agreement level — the production check that the
-    // banded estimator tracks ground truth before a threshold is trusted at
-    // corpus scale. Entirely integer outputs (agreement, Σ|∩|, Σ|∪|); the
-    // exact side rides the candidate pairs (Dedup.exactJaccardFor), never a
-    // corpus-scale pairwise pass.
-    "dedup_minhash_calibration" -> Q(
-      fn = (s, dir) => {
-        val d = Tables.documents(s, dir)
-        // three overlap regimes so the census has levels to calibrate:
-        // near-identical (+tail marker, J≈0.95), half-documents (J≈0.5 —
-        // ~64% band-collide at b=16,r=4), and the untouched corpus
-        val corpus = d.select(col("doc_id"), col("text"))
-          .unionByName(d.filter(col("doc_id") % 5 === 0)
-            .select((col("doc_id") + 1000000).as("doc_id"),
-              concat(col("text"), lit(" quality data pipeline tail marker")).as("text")))
-          .unionByName(d.filter(col("doc_id") % 7 === 1)
-            .withColumn("w", split(lower(trim(col("text"))), "\\s+"))
-            .select((col("doc_id") + 2000000).as("doc_id"),
-              expr("array_join(slice(w, 1, greatest(size(w) div 2, 3)), ' ')").as("text")))
-        val cand = Dedup.minhashLshPairs(corpus, "doc_id", "text", 16, 4, 0.0)
-          .select(col("id_a"), col("id_b"),
-            round(col("est_jaccard") * 64).cast("long").as("s_agree"))
-        Dedup.exactJaccardFor(cand, corpus, "doc_id", "text", 3)
-          .groupBy(col("s_agree"))
-          .agg(count(lit(1)).as("n_pairs"),
-            sum(col("n_inter")).as("total_inter"),
-            sum(col("n_union")).as("total_union"))
-          .orderBy(col("s_agree"))
-      },
-      oracle = Some(minhashOracle(
-        s"""corpus AS (
-           |  SELECT doc_id, text FROM documents
-           |  UNION ALL
-           |  SELECT doc_id + 1000000 AS doc_id,
-           |         concat(text, ' quality data pipeline tail marker') AS text
-           |  FROM documents WHERE doc_id % 5 = 0
-           |  UNION ALL
-           |  SELECT doc_id + 2000000 AS doc_id,
-           |         array_to_string(($wordsSql)[1:greatest(len($wordsSql)//2, 3)], ' ') AS text
-           |  FROM documents WHERE doc_id % 7 = 1
-           |)""".stripMargin, tail =
-        """, x AS (SELECT e.id_a, e.id_b,
-          |    CAST(round(e.est_jaccard * 64) AS BIGINT) AS s_agree,
-          |    len(list_intersect(a.shl, b.shl)) AS n_inter,
-          |    len(a.shl) + len(b.shl) - len(list_intersect(a.shl, b.shl)) AS n_union
-          |  FROM est e JOIN sh a ON e.id_a = a.id JOIN sh b ON e.id_b = b.id)
-          |SELECT s_agree, count(*) AS n_pairs,
-          |  CAST(sum(n_inter) AS BIGINT) AS total_inter,
-          |  CAST(sum(n_union) AS BIGINT) AS total_union
-          |FROM x GROUP BY s_agree ORDER BY s_agree""".stripMargin)),
-      doc = "MinHash-vs-exact calibration census over all LSH candidates (integer ground-truth audit)"),
-
-    // b-bit minwise hashing (Li & König, CACM'11): store only the LOWEST b
-    // bits of each minhash slot — at b=2 the 64-slot signature drops from
-    // 512 bytes to 16, a 32× cut in the signature table every 100 TB dedup
-    // pass scans and shuffles. Matching on truncated slots inflates
-    // agreement by chance collisions (C = 2^-b), so the unbiased estimator
-    // rescales: Ĵ_b = (P_b − C)/(1 − C). Graded per LSH candidate pair:
-    // integer full-width and b-bit agreement counts side by side, plus both
-    // estimators — the audit a pipeline runs before trusting the 32×
-    // cheaper signatures at corpus scale. The b-bit compare is a zip-fold
-    // over the already-joined signatures (no extra shuffle over the
-    // full-width pass).
-    "dedup_minhash_bbit" -> Q(
-      fn = (s, dir) => {
-        val d = Tables.documents(s, dir)
-        val corpus = d.select(col("doc_id"), col("text"))
-          .unionByName(d.filter(col("doc_id") % 5 === 0)
-            .select((col("doc_id") + 1000000).as("doc_id"),
-              concat(col("text"), lit(" quality data pipeline tail marker")).as("text")))
-        val sigs = Dedup.minhashSignatures(corpus, "doc_id", "text", 16, 4)
-        Dedup.minhashLshPairs(corpus, "doc_id", "text", 16, 4, 0.0)
-          .select(col("id_a"), col("id_b"))
-          .join(sigs.select(col("id").as("id_a"), col("sig").as("sig_a")), Seq("id_a"))
-          .join(sigs.select(col("id").as("id_b"), col("sig").as("sig_b")), Seq("id_b"))
-          .select(col("id_a"), col("id_b"),
-            graft.functions.VectorExprs.sigAgreement(col("sig_a"), col("sig_b"))
-              .cast("long").as("agree_full"),
-            aggregate(zip_with(col("sig_a"), col("sig_b"),
-                (x, y) => when(x % 4 === y % 4, 1L).otherwise(0L)),
-              lit(0L), (acc, v) => acc + v).as("agree_b2"))
-          .withColumn("est_full", round(col("agree_full").cast("double") / 64.0, 6) + 0.0)
-          .withColumn("est_b2",
-            round((col("agree_b2").cast("double") / 64.0 - 0.25) / 0.75, 6) + 0.0)
-          .orderBy(col("id_a"), col("id_b"))
-      },
-      oracle = Some(minhashOracle(nearDupCte, tail =
-        """, x AS (SELECT c.id_a, c.id_b,
-          |    CAST(len(list_filter(list_zip(sa.sig, sb.sig), z -> z[1] = z[2])) AS BIGINT) AS agree_full,
-          |    CAST(len(list_filter(list_zip(sa.sig, sb.sig), z -> z[1] % 4 = z[2] % 4)) AS BIGINT) AS agree_b2
-          |  FROM cand c JOIN sig sa ON c.id_a = sa.id JOIN sig sb ON c.id_b = sb.id)
-          |SELECT id_a, id_b, agree_full, agree_b2,
-          |  round(CAST(agree_full AS DOUBLE) / 64.0, 6) + 0.0 AS est_full,
-          |  round((CAST(agree_b2 AS DOUBLE) / 64.0 - 0.25) / 0.75, 6) + 0.0 AS est_b2
-          |FROM x ORDER BY id_a, id_b""".stripMargin)),
-      doc = "b-bit minwise hashing (Li-Konig): 2-bit signature agreement + unbiased estimator vs full-width, per LSH candidate pair"),
-
-    // SimHash near-dup pairs — hash-checked (portable 60-bit fingerprints).
-    "dedup_simhash" -> Q(
-      fn = (s, dir) => {
-        val d = Tables.documents(s, dir)
-        val corpus = d.select(col("doc_id"), col("text"))
-          .unionByName(d.filter(col("doc_id") % 5 === 0)
-            .select((col("doc_id") + 1000000).as("doc_id"),
-              concat(col("text"), lit(" quality data pipeline tail marker")).as("text")))
-        Dedup.simhashPairs(corpus, "doc_id", "text", 16)
-          .orderBy(col("id_a"), col("id_b"))
-      },
-      oracle = Some(simhashOracle(nearDupCte, 16)),
-      doc = "SimHash near-dup (blocked hamming)"),
-
-    // Manku exhaustive SimHash: 6 blocks (maxDist+1), provably complete at
-    // hamming <= 5 by pigeonhole. The oracle is BRUTE-FORCE all-pairs with no
-    // candidate structure — the hash-match is the exhaustiveness proof.
-    "dedup_simhash_manku" -> Q(
-      fn = (s, dir) => {
-        val d = Tables.documents(s, dir)
-        val corpus = d.select(col("doc_id"), col("text"))
-          .unionByName(d.filter(col("doc_id") % 5 === 0)
-            .select((col("doc_id") + 1000000).as("doc_id"),
-              concat(col("text"), lit(" quality data pipeline tail marker")).as("text")))
-        Dedup.simhashPairsExhaustive(corpus, "doc_id", "text", 5)
-          .orderBy(col("id_a"), col("id_b"))
-      },
-      oracle = Some(simhashExhaustiveOracle(nearDupCte, 5)),
-      doc = "SimHash exhaustive blocked candidates (Manku WWW'07 §3) vs brute-force oracle"),
-
-    // Corpus data-card statistics: the one-query summary every dataset
-    // release ships — doc/token counts, language mix, quality-gate pass
-    // rate, exact-dup rate, length quantiles. One scan + tiny aggregates;
-    // decimal casts keep the sums order-free.
-    "pipeline_corpus_stats" -> Q(
-      fn = (s, dir) => {
-        val d = Tables.documents(s, dir)
-        val enriched = d.select(col("doc_id"), col("lang"), col("n_chars"),
-          size(Dedup.words(col("text"))).cast("long").as("n_words"),
-          TextAnalysis.c4Keep(col("text")).as("keep"),
-          md5(col("text")).as("h"))
-        // combining two SINGLE-ROW aggregates: the nested-loop join this
-        // compiles to is 1x1 by construction — the one shape where a
-        // cartesian is the correct plan (constant keys fold away anyway)
-        val dups = enriched.groupBy(col("h")).agg(count(lit(1)).as("c"))
-          .agg(sum(when(col("c") > 1, col("c"))).as("_dup"))
-          .select(coalesce(col("_dup"), lit(0L)).as("n_dup_docs"))
-        enriched.agg(
-          count(lit(1)).as("n_docs"),
-          sum(col("n_words")).as("n_tokens"),
-          sum(col("n_chars")).as("n_chars"),
-          countDistinct(col("lang")).as("n_langs"),
-          sum(when(col("keep"), 1L).otherwise(0L)).as("n_keep"),
-          min(col("n_words")).cast("long").as("min_words"),
-          max(col("n_words")).cast("long").as("max_words"))
-          .crossJoin(dups)
-      },
-      oracle = Some(
-        s"""WITH e AS (SELECT doc_id, lang, n_chars,
-           |    CAST(len($wordsSql) AS BIGINT) AS n_words,
-           |    (len($wordsSql) BETWEEN 10 AND 100000)
-           |      AND (CAST(length(regexp_replace(text, '\\s', '', 'g')) AS DOUBLE) / len($wordsSql)
-           |        BETWEEN 3.0 AND 10.0)
-           |      AND NOT contains(lower(text), 'lorem ipsum')
-           |      AND NOT contains(text, '{')
-           |      AND NOT list_contains($wordsSql, 'javascript')
-           |      AND (length(text) - length(replace(text, '#', ''))) * 20 <= len($wordsSql)
-           |      AND len(list_filter($wordsSql, x -> regexp_matches(x, '[a-z]'))) * 5 >= len($wordsSql) * 4
-           |      AND len(list_filter($wordsSql, x -> x IN ('the','a','and','of','to','in','is','for','on','with'))) >= 2
-           |      AS keep,
-           |    md5(text) AS h
-           |  FROM documents),
-           |dups AS (SELECT COALESCE(CAST(sum(CASE WHEN c > 1 THEN c END) AS BIGINT), 0) AS n_dup_docs
-           |  FROM (SELECT h, count(*) AS c FROM e GROUP BY h))
-           |SELECT count(*) AS n_docs,
-           |       CAST(sum(n_words) AS BIGINT) AS n_tokens,
-           |       CAST(sum(n_chars) AS BIGINT) AS n_chars,
-           |       count(DISTINCT lang) AS n_langs,
-           |       CAST(sum(CASE WHEN keep THEN 1 ELSE 0 END) AS BIGINT) AS n_keep,
-           |       min(n_words) AS min_words, max(n_words) AS max_words,
-           |       (SELECT n_dup_docs FROM dups) AS n_dup_docs
-           |FROM e""".stripMargin),
-      doc = "corpus data-card statistics (docs/tokens/langs/quality/dup rate, one scan)"),
-
-    // Benchmark decontamination (GPT-3 appendix C): training docs sharing
-    // any 13-gram with the eval benchmark. Benchmark = 20-word middle slices
-    // of every 17th doc, so overlap is partial and synthesized from the
-    // corpus itself. Spark joins 64-bit shingle hashes (codegen, broadcast
-    // benchmark); the oracle joins the strings — counts agree because both
-    // sides count DISTINCT shared grams.
-    "text_contamination" -> Q(
-      fn = (s, dir) => {
-        val d = Tables.documents(s, dir)
-        val bench = d.filter(col("doc_id") % 17 === 0)
-          .select(col("doc_id").as("bench_id"),
-            array_join(slice(Dedup.words(col("text")), 3, 20), " ").as("text"))
-        Dedup.contamination(d, "doc_id", "text", bench, "bench_id", "text", 13)
-          .orderBy(col("doc_id"))
-      },
-      oracle = Some(
-        s"""WITH bench AS (SELECT doc_id AS bench_id,
-           |    array_to_string(($wordsSql)[3:22], ' ') AS btext
-           |  FROM documents WHERE doc_id % 17 = 0),
-           |tsh AS (SELECT doc_id, unnest(list_distinct(list_transform(
-           |    generate_series(1, greatest(len($wordsSql) - 12, 1)),
-           |    i -> array_to_string(($wordsSql)[i:i+12], ' ')))) AS s FROM documents),
-           |bw AS (SELECT bench_id,
-           |    string_split_regex(lower(trim(btext)), '\\s+') AS w2 FROM bench),
-           |bsh AS (SELECT bench_id, unnest(list_distinct(list_transform(
-           |    generate_series(1, greatest(len(w2) - 12, 1)),
-           |    i -> array_to_string(w2[i:i+12], ' ')))) AS s FROM bw)
-           |SELECT doc_id, count(DISTINCT t.s) AS n_shared_ngrams,
-           |       count(DISTINCT bench_id) AS n_bench_docs
-           |FROM tsh t JOIN bsh b ON t.s = b.s
-           |GROUP BY doc_id ORDER BY doc_id""".stripMargin),
-      doc = "benchmark decontamination: 13-gram overlap vs eval set (broadcast probe)"),
-
     // C4-style cross-document line dedup: duplicated lines keep only their
     // first occurrence; per-doc census of total/kept/duplicated lines. The
     // arg-min keeper is a single int64 aggregate — skew-proof for
@@ -679,74 +170,6 @@ object QueriesText {
            |GROUP BY item, n.n HAVING count(*) * 1000 >= n.n
            |ORDER BY cnt DESC, item""".stripMargin),
       doc = "exact heavy hitters via Misra-Gries candidates + exact verify (no full-vocab shuffle)"),
-
-    // Train/val/test hygiene: deterministic hash-split assignment (8/1/1
-    // via the portable md5 shard — rerun- and engine-stable) + a near-dup
-    // LEAKAGE census across split boundaries, the eval-contamination check
-    // every corpus release runs before shipping. Reuses the MinHash-LSH
-    // pair engine; a census cell is an UNORDERED split pair (least/greatest
-    // normalization) so the count is independent of pair id-ordering.
-    "split_leakage_audit" -> Q(
-      fn = (s, dir) => {
-        val d = Tables.documents(s, dir)
-        val corpus = d.select(col("doc_id"), col("text"))
-          .unionByName(d.filter(col("doc_id") % 5 === 0)
-            .select((col("doc_id") + 1000000).as("doc_id"),
-              concat(col("text"), lit(" quality data pipeline tail marker")).as("text")))
-        val sp = corpus.select(col("doc_id").as("id"), splitOf(col("doc_id")).as("split"))
-        Dedup.minhashLshPairs(corpus, "doc_id", "text", 16, 4, 0.5)
-          .join(sp.select(col("id").as("id_a"), col("split").as("sa")), Seq("id_a"))
-          .join(sp.select(col("id").as("id_b"), col("split").as("sb")), Seq("id_b"))
-          .select(least(col("sa"), col("sb")).as("split_x"),
-            greatest(col("sa"), col("sb")).as("split_y"))
-          .groupBy(col("split_x"), col("split_y"))
-          .agg(count(lit(1)).as("n_pairs"))
-          .withColumn("is_cross", when(col("split_x") =!= col("split_y"), 1).otherwise(0))
-          .orderBy(col("split_x"), col("split_y"))
-      },
-      oracle = Some(minhashOracle(nearDupCte, tail = s""",
-$splitCte
-SELECT split_x, split_y, count(*) AS n_pairs,
-       CASE WHEN split_x <> split_y THEN 1 ELSE 0 END AS is_cross
-FROM (SELECT least(sa.split, sb.split) AS split_x,
-             greatest(sa.split, sb.split) AS split_y
-      FROM pairs p JOIN sp sa ON p.id_a = sa.id JOIN sp sb ON p.id_b = sb.id)
-GROUP BY split_x, split_y ORDER BY split_x, split_y""")),
-      doc = "near-dup leakage census across train/val/test hash-split boundaries"),
-
-    // The actionable artifact behind the census: WHICH eval-side documents
-    // are contaminated — every val/test doc with a near-dup in train, with
-    // its train-dup count. Pairs are undirected, so each pair explodes to
-    // both orientations in ONE pass (no union-rescan of the pair engine).
-    "split_leaked_eval_docs" -> Q(
-      fn = (s, dir) => {
-        val d = Tables.documents(s, dir)
-        val corpus = d.select(col("doc_id"), col("text"))
-          .unionByName(d.filter(col("doc_id") % 5 === 0)
-            .select((col("doc_id") + 1000000).as("doc_id"),
-              concat(col("text"), lit(" quality data pipeline tail marker")).as("text")))
-        val sp = corpus.select(col("doc_id").as("id"), splitOf(col("doc_id")).as("split"))
-        Dedup.minhashLshPairs(corpus, "doc_id", "text", 16, 4, 0.5)
-          .select(explode(array(
-            struct(col("id_a").as("eid"), col("id_b").as("tid")),
-            struct(col("id_b").as("eid"), col("id_a").as("tid")))).as("u"))
-          .select(col("u.eid").as("eid"), col("u.tid").as("tid"))
-          .join(sp.select(col("id").as("eid"), col("split").as("esplit")), Seq("eid"))
-          .join(sp.select(col("id").as("tid"), col("split").as("tsplit")), Seq("tid"))
-          .filter(col("esplit").isin("val", "test") && col("tsplit") === "train")
-          .groupBy(col("eid").as("id"), col("esplit").as("split"))
-          .agg(count(lit(1)).as("n_train_dups"))
-          .orderBy(col("id"))
-      },
-      oracle = Some(minhashOracle(nearDupCte, tail = s""",
-$splitCte
-SELECT e.id AS id, e.split AS split, count(*) AS n_train_dups
-FROM (SELECT id_a AS eid, id_b AS tid FROM pairs
-      UNION ALL SELECT id_b, id_a FROM pairs) u
-JOIN sp e ON u.eid = e.id JOIN sp t ON u.tid = t.id
-WHERE e.split IN ('val', 'test') AND t.split = 'train'
-GROUP BY e.id, e.split ORDER BY e.id""")),
-      doc = "contaminated eval docs: val/test rows with a train-side near-dup"),
 
     // The web-corpus capstone: the three cleanup stages a crawl pipeline
     // runs BEFORE content dedup, composed end-to-end — URL-canonical dedup
@@ -984,146 +407,6 @@ GROUP BY e.id, e.split ORDER BY e.id""")),
            |FROM m GROUP BY doc_id ORDER BY doc_id""".stripMargin),
       doc = "within-host boilerplate removal (chrome lines on >= minDocs docs of a host)"),
 
-    // Embedding-cosine near-dup: exact duplicates spliced in at vec_id+100000.
-    // LSH-bucketed (4 seeded hyperplanes → 16 sign buckets): the self-join key
-    // is the bucket, so no all-pairs/constant-key join exists in the plan —
-    // the 100 TB shape. The oracle recomputes identical buckets from the same
-    // seeded planes as SQL literals (the v3_ann_lsh technique); exact-vs-
-    // bucketed recall is asserted in DedupVectorsSpec.
-    "dedup_embedding_cosine" -> Q(
-      fn = (s, dir) => {
-        val e = Tables.embeddings(s, dir)
-        val corpus = e.select(col("vec_id"), col("embedding"))
-          .unionByName(e.filter(col("vec_id") % 10 === 0)
-            .select((col("vec_id") + 100000).as("vec_id"), col("embedding")))
-        Dedup.embeddingNearDupPairs(corpus, "vec_id", "embedding", 0.9,
-          lshPlanes = 4, dim = 64)
-          .orderBy(col("id_a"), col("id_b"))
-      },
-      oracle = Some(
-        s"""WITH corpus AS (
-           |  SELECT vec_id, embedding FROM embeddings
-           |  UNION ALL
-           |  SELECT vec_id + 100000 AS vec_id, embedding FROM embeddings WHERE vec_id % 10 = 0),
-           |v AS (SELECT vec_id AS id, CAST(embedding AS DOUBLE[]) AS emb FROM corpus),
-           |bk AS (SELECT id, emb,
-           |  ${QueriesVector.lshBucketSql("emb", 4, 64)} AS bucket FROM v),
-           |p AS (SELECT a.id AS id_a, b.id AS id_b,
-           |  round(list_sum(list_transform(list_zip(a.emb, b.emb), z -> z[1]*z[2]))
-           |   / (sqrt(list_sum(list_transform(a.emb, x -> x*x)))
-           |    * sqrt(list_sum(list_transform(b.emb, x -> x*x)))), 6) AS cos_sim
-           |  FROM bk a JOIN bk b ON a.bucket = b.bucket AND a.id < b.id)
-           |SELECT id_a, id_b, cos_sim FROM p WHERE cos_sim >= 0.9
-           |ORDER BY id_a, id_b""".stripMargin),
-      doc = "embedding-cosine near-dup pairs (LSH-bucketed scale path)"),
-
-    // Duplicated n-gram spans (Lee et al. exact-substring-dedup signal):
-    // per-doc fraction of distinct 20-grams that also appear elsewhere in
-    // the corpus. The %5-spliced near-dups are caught with dup_ratio near
-    // 1.0 even though no whole-doc hash matches.
-    "dedup_ngram_spans" -> Q(
-      fn = (s, dir) => {
-        val d = Tables.documents(s, dir)
-        val corpus = d.select(col("doc_id"), col("text"))
-          .unionByName(d.filter(col("doc_id") % 5 === 0)
-            .select((col("doc_id") + 1000000).as("doc_id"),
-              concat(col("text"), lit(" quality data pipeline tail marker")).as("text")))
-        Dedup.duplicatedNgramSpans(corpus, "doc_id", "text", 20)
-          .orderBy(col("doc_id"))
-      },
-      oracle = Some(
-        s"""WITH $nearDupCte,
-           |g AS (SELECT doc_id, unnest(list_distinct(list_transform(
-           |    generate_series(1, greatest(len($wordsSql) - 19, 1)),
-           |    i -> array_to_string(($wordsSql)[i:i+19], ' ')))) AS s FROM corpus),
-           |df AS (SELECT s, count(*) AS df FROM g GROUP BY s)
-           |SELECT doc_id, count(*) AS n_grams,
-           |       CAST(sum(CASE WHEN df > 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_dup_grams,
-           |       round(CAST(sum(CASE WHEN df > 1 THEN 1 ELSE 0 END) AS DOUBLE)
-           |         / count(*), 6) AS dup_ratio
-           |FROM g JOIN df USING (s)
-           |GROUP BY doc_id ORDER BY doc_id""".stripMargin),
-      doc = "duplicated n-gram span fractions (Lee et al. exact-substring-dedup signal)"),
-
-    // Lee-et-al exact-substring REMOVAL (the census's action step): every
-    // duplicated 20-gram keeps its first (doc, pos) occurrence; all other
-    // occurrences cut their word range, and the doc text is reconstructed
-    // without them. The %5-spliced near-dups collapse to their shared
-    // prefix's first copy; hash-checking the reconstructed text certifies
-    // keeper choice, span clipping, and position arithmetic all at once.
-    "dedup_span_removal" -> Q(
-      fn = (s, dir) => {
-        val d = Tables.documents(s, dir)
-        val corpus = d.select(col("doc_id"), col("text"))
-          .unionByName(d.filter(col("doc_id") % 5 === 0)
-            .select((col("doc_id") + 1000000).as("doc_id"),
-              concat(col("text"), lit(" quality data pipeline tail marker")).as("text")))
-        Dedup.removeDuplicateSpans(corpus, "doc_id", "text", 20)
-          .orderBy(col("doc_id"))
-      },
-      oracle = Some(
-        s"""WITH $nearDupCte,
-           |d AS (SELECT doc_id, $wordsSql AS ws FROM corpus),
-           |g0 AS (SELECT doc_id, unnest(list_transform(
-           |    generate_series(1, greatest(len(ws) - 19, 1)),
-           |    i -> struct_pack(pos := i - 1, s := array_to_string(ws[i:i+19], ' ')))) AS u
-           |  FROM d),
-           |g AS (SELECT doc_id, CAST(u.pos AS BIGINT) AS pos, u.s AS s FROM g0),
-           |w AS (SELECT s, min(doc_id * 4294967296 + pos) AS keep_key FROM g GROUP BY s HAVING count(*) > 1),
-           |cuts AS (SELECT doc_id, list_sort(list(pos)) AS cut_starts
-           |         FROM g JOIN w USING (s)
-           |         WHERE doc_id * 4294967296 + pos != keep_key
-           |         GROUP BY doc_id),
-           |k AS (SELECT d.doc_id, d.ws,
-           |        list_filter(d.ws, (x, i) -> len(list_filter(
-           |          coalesce(c.cut_starts, []), p -> p <= i - 1 AND i - 1 <= p + 19)) = 0) AS kept
-           |      FROM d LEFT JOIN cuts c USING (doc_id))
-           |SELECT doc_id, CAST(len(ws) AS BIGINT) AS n_words,
-           |       CAST(len(ws) - len(kept) AS BIGINT) AS n_removed,
-           |       coalesce(array_to_string(kept, ' '), '') AS kept_text
-           |FROM k ORDER BY doc_id""".stripMargin),
-      doc = "Lee et al. exact-substring removal: first occurrence kept, spans cut, text rebuilt"),
-
-    // Semantic dedup (SemDeDup): candidate buckets are LEARNED k-means
-    // clusters (the IVF assignment) rather than random hyperplanes —
-    // paraphrase-level duplicates co-locate by meaning. Oracle recomputes
-    // the argmin assignment per corpus row (LATERAL) + within-cluster
-    // cosine; the spliced exact dups must all surface.
-    "dedup_semantic" -> Q(
-      fn = (s, dir) => {
-        val e = Tables.embeddings(s, dir)
-        val corpus = e.select(col("vec_id"), col("embedding"))
-          .unionByName(e.filter(col("vec_id") % 10 === 0)
-            .select((col("vec_id") + 100000).as("vec_id"), col("embedding")))
-        val centroids = e.filter(col("vec_id") % 97 === 3)
-          .orderBy(col("vec_id")).limit(16)
-          .select(col("vec_id"), col("embedding").cast("array<double>")).collect()
-          .map(r => (r.getLong(0), r.getSeq[Double](1).toSeq)).toSeq
-        Dedup.semanticNearDupPairs(corpus, "vec_id", "embedding", centroids, 0.9)
-          .orderBy(col("id_a"), col("id_b"))
-      },
-      oracle = Some(
-        """WITH corpus AS (
-          |  SELECT vec_id, embedding FROM embeddings
-          |  UNION ALL
-          |  SELECT vec_id + 100000 AS vec_id, embedding FROM embeddings WHERE vec_id % 10 = 0),
-          |cents AS (SELECT vec_id AS cid, CAST(embedding AS DOUBLE[]) AS cv
-          |  FROM embeddings WHERE vec_id % 97 = 3 ORDER BY vec_id LIMIT 16),
-          |v AS (SELECT c.vec_id AS id, CAST(c.embedding AS DOUBLE[]) AS emb,
-          |    (SELECT ct.cid FROM cents ct
-          |     ORDER BY list_sum(list_transform(list_zip(CAST(c.embedding AS DOUBLE[]), ct.cv),
-          |       z -> (z[1]-z[2])*(z[1]-z[2]))), ct.cid LIMIT 1) AS cid,
-          |    sqrt(list_sum(list_transform(CAST(c.embedding AS DOUBLE[]), x -> x*x))) AS nrm
-          |  FROM corpus c),
-          |f AS (SELECT * FROM v WHERE nrm > 0),
-          |p AS (SELECT a.id AS id_a, b.id AS id_b,
-          |  round(list_sum(list_transform(list_zip(a.emb, b.emb), z -> z[1]*z[2]))
-          |   / (a.nrm * b.nrm), 6) AS cos_sim
-          |  FROM f a JOIN f b ON a.cid = b.cid AND a.id < b.id)
-          |SELECT id_a, id_b, cos_sim FROM p WHERE cos_sim >= 0.9
-          |ORDER BY id_a, id_b""".stripMargin),
-      doc = "semantic dedup: k-means-clustered cosine pairs (SemDeDup shape)"),
-
     // Token counting (whitespace + subword-regex proxy).
     "text_token_counts" -> Q(
       fn = (s, dir) => Tables.documents(s, dir)
@@ -1164,20 +447,6 @@ GROUP BY e.id, e.split ORDER BY e.id""")),
            |  (CAST(sum(ns) AS BIGINT) * 1000000) // CAST(sum(nw) AS BIGINT) AS fertility_micro
            |FROM c GROUP BY 1 ORDER BY 1""".stripMargin),
       doc = "tokenizer fertility per language: subwords/word in exact micro-units"),
-
-    // LSH (bands x rows) S-curve sweep over ONE shared signature table:
-    // re-banding is a projection, so three operating points cost one
-    // signature pass. Candidate volume vs admitted-pair strictness is THE
-    // dedup tuning decision at 100 TB.
-    "dedup_minhash_param_sweep" -> Q(
-      fn = (s, dir) =>
-        Dedup.minhashParamSweep(Tables.documents(s, dir), "doc_id", "text",
-          Seq((8, 8), (16, 4), (32, 2)))
-          .orderBy(col("bands")),
-      oracle = Some(minhashSweepOracle(
-        "corpus AS (SELECT doc_id, text FROM documents)",
-        Seq((8, 8), (16, 4), (32, 2)))),
-      doc = "MinHash-LSH parameter sweep: per-(bands,rows) candidate/agreement/dup census off one signature table"),
 
     // Quality metrics.
     "text_quality" -> Q(
@@ -1344,121 +613,6 @@ GROUP BY e.id, e.split ORDER BY e.id""")),
            |SELECT id AS doc_id, round(CAST(s AS DOUBLE), 6) AS score
            |FROM scored ORDER BY score DESC, id LIMIT 20""".stripMargin),
       doc = "BM25 keyword scoring, top-k (Robertson-Spärck Jones)"),
-
-    // BM25 over a STORED inverted index — the text-search twin of the
-    // stored-IVF layout: postings written once under 64 term-hash partition
-    // directories (+ a one-row exact-integer stats table); the probe reads
-    // only the query terms' partitions, so cost tracks the terms' postings,
-    // never the corpus. Graded against the IDENTICAL oracle as text_bm25 —
-    // the hash match proves index path == scan path (the result-invariance
-    // pattern). InvertedIndexSpec asserts the pruned scan's partition count.
-    "text_bm25_indexed" -> Q(
-      fn = (s, dir) => {
-        import graft.operators.InvertedIndex
-        val path = Warehouse.dir + "/inverted_idx_" +
-          dir.replaceAll("[^A-Za-z0-9]", "_")
-        InvertedIndex.ensureInvertedIndex(
-          Tables.documents(s, dir), "doc_id", "text", path)
-        InvertedIndex.bm25Indexed(s, path, Seq("vector", "hash", "merge"), 20)
-          .withColumnRenamed("id", "doc_id")
-      },
-      oracle = Some(
-        s"""WITH docs AS (SELECT doc_id AS id, $wordsSql AS w FROM documents),
-           |d2 AS (SELECT id, w, len(w) AS dl FROM docs),
-           |stats AS (SELECT CAST(count(*) AS DOUBLE) AS n, avg(dl) AS avgdl FROM d2),
-           |tf AS (SELECT id, dl, t, len(list_filter(w, x -> x = t)) AS tf
-           |       FROM d2, (SELECT unnest(['vector', 'hash', 'merge']) AS t)
-           |       WHERE list_contains(w, t)),
-           |dft AS (SELECT t, count(*) AS df FROM tf GROUP BY t),
-           |idf AS (SELECT t, ln((n - df + 0.5) / (df + 0.5) + 1.0) AS idf FROM dft, stats),
-           |scored AS (SELECT id, sum(CAST(
-           |    idf * (tf * (1.2 + 1)) / (tf + 1.2 * (1 - 0.75 + 0.75 * dl / avgdl))
-           |    AS DECIMAL(28,10))) AS s
-           |  FROM tf JOIN idf USING (t), stats GROUP BY id)
-           |SELECT id AS doc_id, round(CAST(s AS DOUBLE), 6) AS score
-           |FROM scored ORDER BY score DESC, id LIMIT 20""".stripMargin),
-      doc = "BM25 over a stored term-hash-partitioned inverted index (probe == scan proof)"),
-
-    // Near-dup pairs → connected components → canonical keeper per cluster.
-    // Spark side: min-label propagation to fixpoint (Pregel shape); oracle:
-    // recursive-CTE reachability closure + min label — same fixpoint.
-    "dedup_resolve_clusters" -> Q(
-      fn = (s, dir) => {
-        val d = Tables.documents(s, dir)
-        val corpus = d.select(col("doc_id"), col("text"))
-          .unionByName(d.filter(col("doc_id") % 5 === 0)
-            .select((col("doc_id") + 1000000).as("doc_id"),
-              concat(col("text"), lit(" quality data pipeline tail marker")).as("text")))
-        val pairs = Dedup.jaccardPairs(corpus, "doc_id", "text", 3, 0.5, maxDf = 8)
-        Dedup.resolveClusters(pairs).orderBy(col("id"))
-      },
-      oracle = Some(
-        s"""WITH RECURSIVE $nearDupCte,
-           |$clusterCtes
-           |SELECT id, min(label) AS cluster FROM reach GROUP BY id
-           |ORDER BY id""".stripMargin),
-      doc = "near-dup cluster resolution: connected components, min-id canonical"),
-
-    // INCREMENTAL cluster maintenance: the same near-dup graph split into a
-    // base corpus (resolved once, as a store would hold it) and an arriving
-    // batch; the batch is folded in via contraction — CC runs only on the
-    // batch-sized contracted graph, historical pairs are never re-read.
-    // Graded against the IDENTICAL full-recompute oracle as
-    // dedup_resolve_clusters: the hash match IS the equivalence proof
-    // (same pattern as t_asof_join_native / text_perplexity_tiered).
-    "dedup_cc_incremental" -> Q(
-      fn = (s, dir) => {
-        val d = Tables.documents(s, dir)
-        val corpus = d.select(col("doc_id"), col("text"))
-          .unionByName(d.filter(col("doc_id") % 5 === 0)
-            .select((col("doc_id") + 1000000).as("doc_id"),
-              concat(col("text"), lit(" quality data pipeline tail marker")).as("text")))
-        val pairs = Dedup.jaccardPairs(corpus, "doc_id", "text", 3, 0.5, maxDf = 8)
-        graft.operators.CacheOnce.pin(pairs)
-        pairs.count() // pin: the pair kernel feeds both splits
-        // "arrival order": docs whose base id ≡ 3 (mod 7) land in the batch
-        // (variants travel with their source doc)
-        def inBatch(c: org.apache.spark.sql.Column) = (c % 1000000) % 7 === 3
-        val basePairs = pairs.filter(!inBatch(col("id_a")) && !inBatch(col("id_b")))
-        val batchPairs = pairs.filter(inBatch(col("id_a")) || inBatch(col("id_b")))
-        val prev = Dedup.resolveClusters(basePairs)
-        Dedup.resolveClustersIncremental(prev, batchPairs).orderBy(col("id"))
-      },
-      oracle = Some(
-        s"""WITH RECURSIVE $nearDupCte,
-           |$clusterCtes
-           |SELECT id, min(label) AS cluster FROM reach GROUP BY id
-           |ORDER BY id""".stripMargin),
-      doc = "incremental CC: batch-sized contracted graph, zero historical re-pairing"),
-
-    // End-to-end dedup: same pair generation + clustering, then the corpus
-    // with losers anti-joined away and per-keeper absorption counts — the
-    // call a pipeline user actually makes.
-    "dedup_survivors" -> Q(
-      fn = (s, dir) => {
-        val d = Tables.documents(s, dir)
-        val corpus = d.select(col("doc_id"), col("text"))
-          .unionByName(d.filter(col("doc_id") % 5 === 0)
-            .select((col("doc_id") + 1000000).as("doc_id"),
-              concat(col("text"), lit(" quality data pipeline tail marker")).as("text")))
-        val pairs = Dedup.jaccardPairs(corpus, "doc_id", "text", 3, 0.5, maxDf = 8)
-        Dedup.dedupCorpus(corpus, "doc_id", pairs)
-          .select(col("doc_id"), col("n_absorbed"))
-          .orderBy(col("doc_id"))
-      },
-      oracle = Some(
-        s"""WITH RECURSIVE $nearDupCte,
-           |$clusterCtes,
-           |clusters AS (SELECT id, min(label) AS cluster FROM reach GROUP BY id),
-           |absorbed AS (SELECT cluster, count(*) - 1 AS n_absorbed
-           |             FROM clusters GROUP BY cluster)
-           |SELECT c.doc_id, coalesce(a.n_absorbed, 0) AS n_absorbed
-           |FROM corpus c
-           |LEFT JOIN clusters l ON l.id = c.doc_id AND l.id != l.cluster
-           |LEFT JOIN absorbed a ON a.cluster = c.doc_id
-           |WHERE l.id IS NULL
-           |ORDER BY c.doc_id""".stripMargin),
-      doc = "end-to-end near-dup dedup: survivors + absorption counts"),
 
     // Deterministic stratified sampling — the training-mix step. Hash-based
     // (md5 bucket), so the kept set is identical in any engine/partitioning.
@@ -2184,84 +1338,6 @@ GROUP BY e.id, e.split ORDER BY e.id""")),
            |FROM ranked WHERE rn <= 3 ORDER BY doc_id, rank""".stripMargin),
       doc = "TF-IDF top-k keyword extraction (decimal-exact scores, bounded window)"),
 
-    // THE end-to-end corpus build: near-dup dedup (survivors + absorption)
-    // → C4/Gopher quality gate → stratified training-mix sampling →
-    // token-budget packing, one composed pipeline, hash-checked — every
-    // stage is a previously-proven oracle piece chained into one CTE tree.
-    "pipeline_corpus_build" -> Q(
-      fn = (s, dir) => {
-        import graft.operators.{Packing, Sampling}
-        val d = Tables.documents(s, dir)
-        val corpus = d.select(col("doc_id"), col("text"), col("lang"))
-          .unionByName(d.filter(col("doc_id") % 5 === 0)
-            .select((col("doc_id") + 1000000).as("doc_id"),
-              concat(col("text"), lit(" quality data pipeline tail marker")).as("text"),
-              col("lang")))
-        val pairs = Dedup.jaccardPairs(corpus, "doc_id", "text", 3, 0.5, maxDf = 8)
-        val survivors = Dedup.dedupCorpus(corpus, "doc_id", pairs)
-        val gated = survivors.filter(TextAnalysis.c4Keep(col("text")))
-        val sampled = Sampling.stratifiedHashSample(gated, "lang", "doc_id",
-          Map("en" -> 0.6, "de" -> 1.0, "fr" -> 1.0, "es" -> 1.0, "zh" -> 0.3),
-          defaultFraction = 0.0, salt = "mix2")
-        val toks = sampled.select(col("doc_id"), col("n_absorbed"),
-          TextAnalysis.tokenCount(col("text")).as("toks"))
-        Packing.assignBins(toks, "doc_id", "toks", budget = 256, shards = 4,
-            salt = "packE2E")
-          .groupBy(col("shard"), col("seq_id"))
-          .agg(count(lit(1)).as("n_docs"),
-            sum(col("toks")).cast("long").as("n_tokens"),
-            sum(col("n_absorbed")).as("absorbed_total"),
-            min(col("doc_id")).as("first_doc"))
-          .withColumn("fill_ratio", col("n_tokens").cast("double") / 256.0)
-          .orderBy(col("shard"), col("seq_id"))
-      },
-      oracle = Some(
-        s"""WITH RECURSIVE corpus AS (
-           |  SELECT doc_id, text, lang FROM documents
-           |  UNION ALL
-           |  SELECT doc_id + 1000000 AS doc_id,
-           |         concat(text, ' quality data pipeline tail marker') AS text, lang
-           |  FROM documents WHERE doc_id % 5 = 0),
-           |$clusterCtes,
-           |clusters AS (SELECT id, min(label) AS cluster FROM reach GROUP BY id),
-           |absorbed AS (SELECT cluster, count(*) - 1 AS n_absorbed
-           |             FROM clusters GROUP BY cluster),
-           |survivors AS (SELECT c.doc_id, c.text, c.lang,
-           |         coalesce(a.n_absorbed, 0) AS n_absorbed
-           |  FROM corpus c
-           |  LEFT JOIN clusters l ON l.id = c.doc_id AND l.id != l.cluster
-           |  LEFT JOIN absorbed a ON a.cluster = c.doc_id
-           |  WHERE l.id IS NULL),
-           |gated AS (SELECT * FROM survivors WHERE
-           |  len($wordsSql) BETWEEN 10 AND 100000
-           |  AND CAST(length(regexp_replace(text, '\\s', '', 'g')) AS DOUBLE)
-           |      / len($wordsSql) BETWEEN 3.0 AND 10.0
-           |  AND NOT contains(lower(text), 'lorem ipsum')
-           |  AND NOT contains(text, '{')
-           |  AND NOT list_contains($wordsSql, 'javascript')
-           |  AND (length(text) - length(replace(text, '#', ''))) * 20 <= len($wordsSql)
-           |  AND len(list_filter($wordsSql, x -> regexp_matches(x, '[a-z]'))) * 5
-           |      >= len($wordsSql) * 4
-           |  AND len(list_filter($wordsSql,
-           |      x -> x IN ('the','a','and','of','to','in','is','for','on','with'))) >= 2),
-           |sampled AS (SELECT * FROM gated WHERE
-           |  CAST('0x' || substr(md5(concat('mix2', CAST(doc_id AS VARCHAR))), 1, 15) AS BIGINT)
-           |    % 10000 < CASE lang WHEN 'en' THEN 6000 WHEN 'zh' THEN 3000 ELSE 10000 END),
-           |toks AS (SELECT doc_id, n_absorbed, CAST(len($wordsSql) AS INT) AS toks,
-           |  CAST('0x' || substr(md5(concat('packE2E', CAST(doc_id AS VARCHAR))), 1, 15) AS BIGINT)
-           |    % 4 AS shard FROM sampled),
-           |cum AS (SELECT doc_id, n_absorbed, toks, shard,
-           |  sum(toks) OVER (PARTITION BY shard ORDER BY doc_id) AS c FROM toks),
-           |bins AS (SELECT shard, CAST(floor((c - 1) / 256) AS BIGINT) AS seq_id,
-           |                doc_id, n_absorbed, toks FROM cum)
-           |SELECT shard, seq_id, count(*) AS n_docs,
-           |       CAST(sum(toks) AS BIGINT) AS n_tokens,
-           |       CAST(sum(n_absorbed) AS BIGINT) AS absorbed_total,
-           |       min(doc_id) AS first_doc,
-           |       CAST(sum(toks) AS DOUBLE) / 256 AS fill_ratio
-           |FROM bins GROUP BY 1, 2 ORDER BY shard, seq_id""".stripMargin),
-      doc = "end-to-end corpus build: dedup → quality gate → mix sample → packing"),
-
     // Document fingerprint (order-insensitive content hash).
     "text_fingerprint" -> Q(
       fn = (s, dir) => Tables.documents(s, dir)
@@ -2389,131 +1465,6 @@ GROUP BY e.id, e.split ORDER BY e.id""")),
            |FROM gb JOIN terms USING (b)
            |GROUP BY doc_id ORDER BY doc_id""".stripMargin),
       doc = "DSIR hashed-bigram importance weights: bucket-sized term table, scaled-integer tau, exact int doc sums"),
-
-    // Content-defined chunking dedup (the rsync/LBFS/backup-storage
-    // primitive): chunk boundaries fall where a local rolling feature
-    // (md5 of the adjacent word pair, mod 8 — expected chunk ≈ 8 words)
-    // hits zero, so an insertion early in a document only perturbs the
-    // chunk it lands in — unlike fixed-size blocks, every later chunk
-    // re-aligns and still dedups. Row-local kernel (no shuffle until the
-    // chunk census), one groupBy(chunk) with partial aggregation. The
-    // every-3rd-doc duplicated corpus makes the dedup ratio non-trivial;
-    // the ratio is one int/int division (IEEE-exact cross-engine).
-    "store_cdc_chunks" -> Q(
-      fn = (s, dir) => {
-        val d = Tables.documents(s, dir)
-        val corpus = d.select(col("doc_id"), col("text"))
-          .unionByName(d.filter(col("doc_id") % 3 === 0)
-            .select((col("doc_id") + 1000000).as("doc_id"), col("text")))
-        val chunks = Dedup.cdcChunks(corpus, "doc_id", "text", m = 8)
-        chunks.groupBy(col("chunk"))
-          .agg(count(lit(1)).as("cnt"))
-          .agg(sum(col("cnt")).as("n_chunks"),
-            count(lit(1)).as("n_unique"),
-            sum(col("cnt") * length(col("chunk"))).as("total_chars"),
-            sum(length(col("chunk"))).as("unique_chars"))
-          .select(col("n_chunks"), col("n_unique"), col("total_chars"),
-            col("unique_chars"),
-            (col("total_chars").cast("double") / col("unique_chars").cast("double"))
-              .as("dedup_ratio"))
-      },
-      oracle = Some(
-        s"""WITH $corpusCte,
-           |${cdcChunkCtes("", "corpus")},
-           |cc AS (SELECT chunk, count(*) AS cnt FROM ch GROUP BY chunk)
-           |SELECT CAST(sum(cnt) AS BIGINT) AS n_chunks, count(*) AS n_unique,
-           |  CAST(sum(cnt * len(chunk)) AS BIGINT) AS total_chars,
-           |  CAST(sum(len(chunk)) AS BIGINT) AS unique_chars,
-           |  CAST(sum(cnt * len(chunk)) AS DOUBLE) / CAST(sum(len(chunk)) AS DOUBLE) AS dedup_ratio
-           |FROM cc""".stripMargin),
-      doc = "content-defined chunking (LBFS/rsync shape): boundary-local kernel, chunk-level dedup census"),
-
-    // Asymmetric containment dedup: every 7th doc's FIRST HALF is spliced
-    // back as a new short doc — its shingles are a subset of the parent's,
-    // so Jaccard ≈ |small|/|big| ≈ 0.5 (below any near-dup threshold) but
-    // containment = 1.0. This is the dedup case symmetric scores
-    // structurally miss (quotes, excerpts, partial scrapes).
-    "dedup_containment" -> Q(
-      fn = (s, dir) => {
-        val d = Tables.documents(s, dir)
-        val w = TextAnalysis.words(col("text"))
-        val corpus = d.select(col("doc_id"), col("text"))
-          .unionByName(d.filter(col("doc_id") % 7 === 0)
-            .select((col("doc_id") + 2000000).as("doc_id"),
-              array_join(slice(w, lit(1), greatest((size(w) / 2).cast("int"), lit(4))),
-                " ").as("text")))
-        Dedup.containmentPairs(corpus, "doc_id", "text", 3, 0.9)
-          .orderBy(col("id_a"), col("id_b"))
-      },
-      oracle = Some(
-        s"""WITH corpus AS (
-           |  SELECT doc_id, text FROM documents
-           |  UNION ALL
-           |  SELECT doc_id + 2000000 AS doc_id,
-           |    array_to_string(($wordsSql)[1:greatest(CAST(len($wordsSql) AS INT) // 2, 4)],
-           |      ' ') AS text
-           |  FROM documents WHERE doc_id % 7 = 0),
-           |sh AS (SELECT doc_id AS id, list_distinct(list_transform(
-           |    generate_series(1, greatest(len($wordsSql) - 2, 1)),
-           |    i -> array_to_string(($wordsSql)[i:i+2], ' '))) AS shl FROM corpus),
-           |e0 AS (SELECT id, len(shl) AS n_sh, unnest(shl) AS s FROM sh),
-           |p AS (SELECT a.id AS id_a, b.id AS id_b, a.n_sh AS na, b.n_sh AS nb,
-           |             count(*) AS inter
-           |      FROM e0 a JOIN e0 b ON a.s = b.s AND a.id < b.id GROUP BY 1, 2, 3, 4),
-           |c AS (SELECT id_a, id_b, CAST(na AS BIGINT) AS na, CAST(nb AS BIGINT) AS nb,
-           |             round(CAST(inter AS DOUBLE) / least(na, nb), 6) AS containment
-           |      FROM p)
-           |SELECT id_a, id_b, na, nb, containment FROM c
-           |WHERE containment >= 0.9 ORDER BY id_a, id_b""".stripMargin),
-      doc = "containment (|A∩B|/min) near-dup pairs: catches embedded/excerpted docs Jaccard misses"),
-
-    // Incremental backup planning over the CDC chunk store: corpus v2 =
-    // every 10th doc edited at its HEAD (the worst case for fixed-size
-    // blocking, which would shift every later block). Content-defined
-    // boundaries re-align right after the edit, so only the edited-chunk
-    // bytes upload; the census is the incremental-backup cost estimate.
-    // One left join against the v1 chunk store (groupBy-deduped — at scale
-    // a bucketed stored table like the MinHash signature tables), flag
-    // sums CAST to BIGINT per the repo invariant.
-    "store_cdc_incremental" -> Q(
-      fn = (s, dir) => {
-        val d = Tables.documents(s, dir)
-        val v1 = Dedup.cdcChunks(d, "doc_id", "text", m = 8)
-          .select(col("chunk")).distinct().withColumn("known", lit(1))
-        val v2docs = d.select(col("doc_id"),
-          when(col("doc_id") % 10 === 0, concat(lit("edit marker "), col("text")))
-            .otherwise(col("text")).as("text"))
-        Dedup.cdcChunks(v2docs, "doc_id", "text", m = 8)
-          .join(v1, Seq("chunk"), "left")
-          .agg(count(lit(1)).as("n_chunks"),
-            sum(when(col("known").isNull, 1L).otherwise(0L)).as("n_new_chunks"),
-            sum(when(col("known").isNull, length(col("chunk"))).otherwise(0L))
-              .as("new_chars"),
-            sum(when(col("known").isNotNull, length(col("chunk"))).otherwise(0L))
-              .as("reused_chars"))
-          .select(col("n_chunks"), col("n_new_chunks"), col("new_chars"),
-            col("reused_chars"),
-            (col("reused_chars").cast("double")
-              / (col("new_chars") + col("reused_chars")).cast("double"))
-              .as("reuse_ratio"))
-      },
-      oracle = Some(
-        s"""WITH ${cdcChunkCtes("o_", "documents")},
-           |v2 AS (SELECT doc_id, CASE WHEN doc_id % 10 = 0
-           |    THEN 'edit marker ' || text ELSE text END AS text FROM documents),
-           |${cdcChunkCtes("n_", "v2")},
-           |store AS (SELECT DISTINCT chunk FROM o_ch),
-           |probe AS (SELECT n_ch.chunk,
-           |    CASE WHEN store.chunk IS NULL THEN 1 ELSE 0 END AS is_new
-           |  FROM n_ch LEFT JOIN store ON n_ch.chunk = store.chunk)
-           |SELECT count(*) AS n_chunks,
-           |  CAST(sum(is_new) AS BIGINT) AS n_new_chunks,
-           |  CAST(sum(CASE WHEN is_new = 1 THEN len(chunk) ELSE 0 END) AS BIGINT) AS new_chars,
-           |  CAST(sum(CASE WHEN is_new = 0 THEN len(chunk) ELSE 0 END) AS BIGINT) AS reused_chars,
-           |  CAST(sum(CASE WHEN is_new = 0 THEN len(chunk) ELSE 0 END) AS DOUBLE)
-           |    / CAST(sum(len(chunk)) AS DOUBLE) AS reuse_ratio
-           |FROM probe""".stripMargin),
-      doc = "CDC incremental backup plan: head-edited v2 vs v1 chunk store, re-aligned reuse census"),
 
     // Distributed classifier TRAINING: the model is an L×B-bounded relation
     // of integer sufficient statistics (token count + doc frequency per
@@ -2808,44 +1759,6 @@ GROUP BY e.id, e.split ORDER BY e.id""")),
           |LEFT JOIN ov ON ov.rid = r.doc_id ORDER BY doc_id""".stripMargin),
       doc = "ROUGE-2 set overlap eval: distinct bigrams, content-partitioned intersection join, exact counts, round-9 P/R/F1"),
 
-    // The SQL-client surface for the dedup family: MinHash-LSH near-dup
-    // detection as ONE pure spark.sql statement through the injected
-    // minhash_md5_sig kernel — proof that a SQL-only user of the engine
-    // can run the banded dedup path with no DataFrame code. Same banding
-    // algebra as Dedup.minhashLshPairs (16 bands × 4 rows, DISTINCT
-    // candidates, ≥32/64 agreement); the oracle is the SAME
-    // minhashOracle used by dedup_minhash_lsh, so the SQL surface is
-    // hash-certified against the kernel chain end-to-end.
-    "sql_surface_dedup" -> Q(
-      fn = (s, dir) => {
-        graft.functions.GraftFunctions.install(s)
-        Tables.documents(s, dir).createOrReplaceTempView("graft_documents")
-        s.sql(
-          """WITH corpus AS (
-            |  SELECT doc_id, text FROM graft_documents
-            |  UNION ALL
-            |  SELECT doc_id + 1000000 AS doc_id,
-            |         concat(text, ' quality data pipeline tail marker') AS text
-            |  FROM graft_documents WHERE doc_id % 5 = 0),
-            |sig AS (SELECT doc_id AS id,
-            |    minhash_md5_sig(split(lower(trim(text)), '\\s+'), 3, 64) AS sg
-            |  FROM corpus),
-            |bands AS (SELECT id, sg, b, slice(sg, b * 4 + 1, 4) AS bucket
-            |  FROM sig LATERAL VIEW explode(sequence(0, 15)) t AS b),
-            |cand AS (SELECT DISTINCT a.id AS id_a, b.id AS id_b
-            |  FROM bands a JOIN bands b
-            |  ON a.b = b.b AND a.bucket = b.bucket AND a.id < b.id),
-            |est AS (SELECT id_a, id_b,
-            |    round(CAST(size(filter(zip_with(sa.sg, sb.sg, (x, y) -> x = y),
-            |      v -> v)) AS DOUBLE) / CAST(64 AS DOUBLE), 6) AS est_jaccard
-            |  FROM cand JOIN sig sa ON cand.id_a = sa.id
-            |  JOIN sig sb ON cand.id_b = sb.id)
-            |SELECT id_a, id_b, est_jaccard FROM est WHERE est_jaccard >= 0.5
-            |ORDER BY id_a, id_b""".stripMargin)
-      },
-      oracle = Some(minhashOracle(nearDupCte)),
-      doc = "pure-SQL MinHash-LSH dedup through the injected minhash_md5_sig kernel (SQL client surface)"),
-
     // Lexical diversity census: type-token ratio and MATTR (moving-average
     // TTR, window 20) per language — the data-quality gate that catches
     // keyword-stuffed or template text that length/punct filters miss
@@ -2905,9 +1818,8 @@ GROUP BY e.id, e.split ORDER BY e.id""")),
 
     // Temperature-sweep mixing: the α ∈ {0.25, 0.5, 0.75} operating
     // points of the pretraining language-mix decision measured off ONE
-    // shared per-language aggregate (the dedup_minhash_param_sweep
-    // pattern — tune by re-weighting a tiny stats table, never by
-    // re-scanning the corpus). tokens^α is built from IEEE
+    // shared per-language aggregate (tune by re-weighting a tiny stats
+    // table, never by re-scanning the corpus). tokens^α is built from IEEE
     // correctly-rounded sqrt chains ONLY (α=0.25 → √√x, 0.5 → √x,
     // 0.75 → √x·√√x), so no libm pow() enters the graded chain; weights
     // follow the round-6-then-DECIMAL house discipline of mix_epoch_plan.

@@ -327,8 +327,8 @@ object QueriesVector {
       doc = "V3 kNN at int8 scalar-quantization (SQ8) storage precision: per-dim min/max codebook, distances on dequantized codes"),
 
     // Exact DBSCAN over embeddings ([[Vectors.dbscan]]): density clustering
-    // with the core/border/noise trichotomy — what the flat ε-graph CC
-    // (dedup_embedding_cosine) can't express. The fixture corpus is raw
+    // with the core/border/noise trichotomy — what a flat ε-graph
+    // connected-components pass can't express. The fixture corpus is raw
     // (normalized) embeddings, so near-dup structure is SPLICED in, house
     // style: perturbation chains v' = normalize(v + δ·reverse(v)) at
     // δ ∈ {.08, .16, .24, .40} on arithmetic id slices build per-seed chains
@@ -1370,8 +1370,7 @@ object QueriesVector {
           |FROM pq GROUP BY q_label ORDER BY label""".stripMargin),
       doc = "label-noise audit: 10-NN label agreement census, suspect flag at <=2/10"),
 
-    // Sign-LSH angle calibration — the hyperplane twin of
-    // dedup_minhash_calibration: for every (query, corpus) pair, census
+    // Sign-LSH angle calibration: for every (query, corpus) pair, census
     // sign-agreement level (0..4 planes) against EXACT cosine similarity.
     // Theory says collision fraction ≈ 1 − θ/π per plane, so mean cosine
     // must rise monotonically with agreement — a degenerate plane set (the
@@ -2027,7 +2026,7 @@ object QueriesVector {
     // ranking is one cid shuffle; output is d²-bounded per-cluster rows
     // whose keep-boundary distance certifies the whole within-cluster
     // order. Oracle replays the argmin + rank chain per row (LATERAL-free,
-    // the dedup_semantic correlated-subquery pattern).
+    // via a correlated subquery).
     // Maximal Marginal Relevance re-ranking (Carbonell & Goldstein 1998) —
     // the retrieval-side diversifier every RAG/dataset-curation stack runs
     // after kNN: greedily pick argmax λ·rel(d) − (1−λ)·max_{s∈S} sim(d,s),

@@ -2,8 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
-import org.apache.spark.sql.types.IntegerType
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 /** SQL-surface registration for the library's custom Catalyst expressions:
   * `spark.sql("SELECT vec_dot(a, b) ...")` works exactly like the Column
@@ -18,12 +17,6 @@ import org.apache.spark.sql.types.IntegerType
   */
 object GraftFunctions {
 
-  private def intLit(e: Expression, fn: String, name: String): Int = e match {
-    case Literal(v: Int, IntegerType) => v
-    case other => throw new IllegalArgumentException(
-      s"$fn: $name must be an INT literal, got $other")
-  }
-
   /** (name, usage, builder) for every SQL-exposed kernel. */
   private val fns: Seq[(String, String, Seq[Expression] => Expression)] = Seq(
     ("vec_dot",
@@ -34,14 +27,7 @@ object GraftFunctions {
       args => VecL2Sq(args(0), args(1))),
     ("sign_hamming",
       "sign_hamming(a, b) - Hamming distance between 1-bit sign sketches",
-      args => SignHamming(args(0), args(1))),
-    ("shingle_hashes",
-      "shingle_hashes(words, n) - distinct word-n-gram shingle hashes",
-      args => ShingleHashes(args(0), intLit(args(1), "shingle_hashes", "n"))),
-    ("minhash_md5_sig",
-      "minhash_md5_sig(words, n, k) - portable row-local MinHash signature",
-      args => MinHashMd5Sig(args(0), intLit(args(1), "minhash_md5_sig", "n"),
-        intLit(args(2), "minhash_md5_sig", "k"))))
+      args => SignHamming(args(0), args(1))))
 
   /** In-session registration (idempotent — re-registering replaces). */
   def install(spark: SparkSession): Unit = fns.foreach { case (name, usage, b) =>

@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.{Column, GraftSqlBridge}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression, XXH64}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
@@ -44,57 +44,6 @@ object VectorExprs {
   /** Σ (a(i)−b(i))² as double, sequential (L2 distance squared). */
   def l2Sq(a: Column, b: Column): Column = c(VecL2Sq(e(a), e(b)))
 
-  /** Distinct word-n-gram shingle hashes of an array<string> token list:
-    * each window of n word-hashes chain-combines via xxh64; result sorted
-    * distinct. Equality across documents matches string-shingle equality up
-    * to 2^-64-scale collisions. */
-  def shingleHashes(words: Column, n: Int): Column = c(ShingleHashes(e(words), n))
-
-  /** Per-position window hashes (element k = hash of words[k..k+n-1]);
-    * see [[ShingleHashes]] `positional`. */
-  def positionalShingleHashes(words: Column, n: Int): Column =
-    c(ShingleHashes(e(words), n, positional = true))
-
-  /** MinHash signature over an array<long> shingle-hash set: k hash functions
-    * h_i(s) = xxh64(s, i); one pass over the hashes. */
-  def minhashSig(shingleHashes: Column, k: Int): Column =
-    c(MinHashSig(e(shingleHashes), k))
-
-  /** 64-bit SimHash of an array<string> token list: bit j = sign of
-    * Σ_tokens (bit j of xxh64(token, 42) ? +1 : −1); one pass. */
-  def simhash64(words: Column): Column = c(SimHash64(e(words)))
-
-  /** Portable MinHash signature computed row-locally from word n-gram
-    * shingles: sig[i] = min over windows of (h1 + i·h2m) where h1/h2m are the
-    * two 60-bit halves of md5(shingle string) ([[Md5Hash]]). Bit-identical to
-    * the exploded groupBy-min formulation over `md5(s)` substrings — the
-    * DuckDB-oracle hash-check proves it — but with NO shuffle: signature
-    * derivation is a map-only projection. */
-  def minhashMd5Sig(words: Column, n: Int, k: Int): Column =
-    c(MinHashMd5Sig(e(words), n, k))
-
-  /** Portable 60-bit SimHash: bit j = sign of Σ_words (bit j of the md5-h1
-    * word hash ? +1 : −1); one row-local pass, no explode/aggregate. */
-  def simhashMd5(words: Column): Column = c(SimHashMd5(e(words)))
-
-  /** Number of positions where two equal-length long arrays agree — the
-    * MinHash signature-agreement estimator, replacing the interpreted
-    * `size(filter(zip_with(...)))` HOF stack on the candidate-pair hot path. */
-  def sigAgreement(a: Column, b: Column): Column = c(SigAgreement(e(a), e(b)))
-
-  /** One bucket id per LSH band: bucket[b] = xxh64 chain over
-    * sig[b·rows … b·rows+rows). Bucket equality ⇔ band-slice equality (up to
-    * 2^-64 collisions), which is all the band join consumes — the oracle
-    * joins on the slice values themselves. */
-  def lshBandBuckets(sig: Column, bands: Int, rows: Int): Column =
-    c(LshBandBuckets(e(sig), bands, rows))
-
-  /** 0-based index of the first position where two long arrays agree (−1 if
-    * none) — the "first matching band" dedup: a candidate pair is kept only
-    * where the joined band IS its first match, so each pair surfaces exactly
-    * once and no distinct-shuffle is needed. */
-  def firstEqIndex(a: Column, b: Column): Column = c(FirstEqIndex(e(a), e(b)))
-
   /** Per-set membership counts over a token array in ONE pass: counts[i] =
     * |{w ∈ words : w ∈ sets(i)}|. Replaces k interpreted
     * `size(filter(w, isin(...)))` HOF stacks (language-ID scoring, stopword
@@ -112,12 +61,12 @@ object VectorExprs {
       langs.map(_._2.toArray).toArray))
 }
 
-/** Portable md5-derived 60-bit hashes (static forwarders — callable from
-  * generated Java). `h1` = hex chars 1-15 of md5, `h2` = hex chars 17-31,
-  * each parsed base-16: exactly `CAST('0x'||substr(md5(s),1,15) AS BIGINT)`
-  * in DuckDB / `conv(substring(md5(s),1,15),16,10)` in Spark SQL, so every
-  * value is reproducible in any engine with md5. 60 bits keeps
-  * `h1 + i*h2m (i<64, h2m<1e9+7)` strictly inside non-negative signed-64. */
+/** Portable md5-derived 60-bit hash (static forwarder — callable from
+  * generated Java). `h1` = hex chars 1-15 of md5 parsed base-16: exactly
+  * `CAST('0x'||substr(md5(s),1,15) AS BIGINT)` in DuckDB /
+  * `conv(substring(md5(s),1,15),16,10)` in Spark SQL, so every value is
+  * reproducible in any engine with md5, and 60 bits keep it non-negative in
+  * a signed 64-bit long. */
 object Md5Hash {
   private val local = new ThreadLocal[java.security.MessageDigest] {
     override def initialValue(): java.security.MessageDigest =
@@ -131,281 +80,12 @@ object Md5Hash {
     v
   }
 
-  /** (h1, h2) of the md5 of words[from..to) joined by a single space —
-    * digested incrementally, so the joined shingle string never materializes. */
-  def window60(arr: ArrayData, from: Int, to: Int): Array[Long] = {
-    val md = local.get()
-    md.reset()
-    var i = from
-    while (i < to) {
-      if (i > from) md.update(' '.toByte)
-      md.update(arr.getUTF8String(i).getBytes)
-      i += 1
-    }
-    val d = md.digest()
-    Array(be(d, 0) >>> 4, be(d, 8) >>> 4)
-  }
-
   /** h1 of a single token. */
   def h160(s: org.apache.spark.unsafe.types.UTF8String): Long = {
     val md = local.get()
     md.reset()
     be(md.digest(s.getBytes), 0) >>> 4
   }
-}
-
-/** Row-local portable MinHash signature (see [[VectorExprs.minhashMd5Sig]]).
-  * Window semantics mirror [[graft.operators.Dedup.shingles]]: max(w−n+1, 1)
-  * windows, tail-truncated; duplicate windows are harmless under min(). */
-case class MinHashMd5Sig(child: Expression, n: Int, k: Int) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"need array<string>, got ${t.sql}")
-  }
-
-  // Kirsch-Mitzenmacher double hashing sig_j = (h1 + j·h2) mod 2^60 with h2
-  // spanning the FULL 60-bit space. An earlier revision used h2 mod 1e9+7,
-  // whose maximum stride 63·h2m ≈ 6e10 was 5 orders of magnitude below the
-  // typical per-doc min-h1 (~2e16): every slot's argmin collapsed to the
-  // argmin-h1 shingle, i.e. 64 copies of ONE permutation — est_jaccard was
-  // binary 0-or-64 and LSH "candidates" with true J≈0.07 scored as exact
-  // dups. Caught by the dedup_minhash_calibration ground-truth census.
-  // Java + wraps mod 2^64; 2^60 | 2^64, so wrap-then-mask IS mod 2^60 —
-  // the oracle replays it with an int64-safe lo/hi decomposition.
-  private val mask60 = (1L << 60) - 1
-
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
-    val w = arr.numElements()
-    val m = math.max(w - n + 1, 1)
-    val sig = Array.fill(k)(Long.MaxValue)
-    var i = 0
-    while (i < m) {
-      val p = Md5Hash.window60(arr, i, math.min(i + n, w))
-      var j = 0
-      while (j < k) {
-        val v = (p(0) + j.toLong * p(1)) & mask60
-        if (v < sig(j)) sig(j) = v
-        j += 1
-      }
-      i += 1
-    }
-    new GenericArrayData(sig)
-  }
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val i = ctx.freshName("i")
-      val j = ctx.freshName("j")
-      val w = ctx.freshName("w")
-      val m = ctx.freshName("m")
-      val p = ctx.freshName("p")
-      val v = ctx.freshName("v")
-      val sig = ctx.freshName("sig")
-      s"""
-         |int $w = $a.numElements();
-         |int $m = java.lang.Math.max($w - $n + 1, 1);
-         |long[] $sig = new long[$k];
-         |java.util.Arrays.fill($sig, Long.MAX_VALUE);
-         |for (int $i = 0; $i < $m; $i++) {
-         |  long[] $p = graft.functions.Md5Hash.window60($a, $i, java.lang.Math.min($i + $n, $w));
-         |  for (int $j = 0; $j < $k; $j++) {
-         |    long $v = ($p[0] + (long) $j * $p[1]) & ${mask60}L;
-         |    if ($v < $sig[$j]) $sig[$j] = $v;
-         |  }
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($sig);
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(c: Expression): MinHashMd5Sig = copy(child = c)
-}
-
-/** Row-local portable 60-bit SimHash (see [[VectorExprs.simhashMd5]]). */
-case class SimHashMd5(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"need array<string>, got ${t.sql}")
-  }
-
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
-    val n = arr.numElements()
-    val sums = new Array[Int](60)
-    var i = 0
-    while (i < n) {
-      val h = Md5Hash.h160(arr.getUTF8String(i))
-      var j = 0
-      while (j < 60) {
-        sums(j) += (if (((h >>> j) & 1L) == 1L) 1 else -1)
-        j += 1
-      }
-      i += 1
-    }
-    var out = 0L
-    var j = 0
-    while (j < 60) { if (sums(j) > 0) out |= (1L << j); j += 1 }
-    out
-  }
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val i = ctx.freshName("i")
-      val j = ctx.freshName("j")
-      val n = ctx.freshName("n")
-      val h = ctx.freshName("h")
-      val sums = ctx.freshName("sums")
-      val out = ctx.freshName("out")
-      s"""
-         |int $n = $a.numElements();
-         |int[] $sums = new int[60];
-         |for (int $i = 0; $i < $n; $i++) {
-         |  long $h = graft.functions.Md5Hash.h160($a.getUTF8String($i));
-         |  for (int $j = 0; $j < 60; $j++) {
-         |    $sums[$j] += ((($h >>> $j) & 1L) == 1L) ? 1 : -1;
-         |  }
-         |}
-         |long $out = 0L;
-         |for (int $j = 0; $j < 60; $j++) {
-         |  if ($sums[$j] > 0) $out |= (1L << $j);
-         |}
-         |${ev.value} = $out;
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(c: Expression): SimHashMd5 = copy(child = c)
-}
-
-/** Count of agreeing positions in two equal-length long arrays. */
-case class SigAgreement(left: Expression, right: Expression) extends BinaryExpression {
-  override def dataType: DataType = IntegerType
-  override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
-    case (ArrayType(LongType, _), ArrayType(LongType, _)) => TypeCheckResult.TypeCheckSuccess
-    case (l, r) => TypeCheckResult.TypeCheckFailure(
-      s"need (array<bigint>, array<bigint>), got (${l.sql}, ${r.sql})")
-  }
-
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
-    var s = 0
-    var i = 0
-    while (i < n) { if (x.getLong(i) == y.getLong(i)) s += 1; i += 1 }
-    s
-  }
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val s = ctx.freshName("s")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |int $s = 0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  if ($a.getLong($i) == $b.getLong($i)) $s++;
-         |}
-         |${ev.value} = $s;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): SigAgreement =
-    copy(left = l, right = r)
-}
-
-/** Per-band LSH bucket ids from a MinHash signature (see
-  * [[VectorExprs.lshBandBuckets]]): replaces an interpreted
-  * `transform(sequence, b -> xxhash64(array_join(slice(...))))` stack. */
-case class LshBandBuckets(child: Expression, bands: Int, rows: Int)
-    extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"need array<bigint>, got ${t.sql}")
-  }
-
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
-    val out = new Array[Long](bands)
-    var b = 0
-    while (b < bands) {
-      var h = 42L
-      var j = b * rows
-      val end = math.min(j + rows, arr.numElements())
-      while (j < end) { h = XXH64.hashLong(arr.getLong(j), h); j += 1 }
-      out(b) = h
-      b += 1
-    }
-    new GenericArrayData(out)
-  }
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val b = ctx.freshName("b")
-      val j = ctx.freshName("j")
-      val h = ctx.freshName("h")
-      val end = ctx.freshName("end")
-      val out = ctx.freshName("out")
-      val xxh = classOf[XXH64].getName
-      s"""
-         |long[] $out = new long[$bands];
-         |for (int $b = 0; $b < $bands; $b++) {
-         |  long $h = 42L;
-         |  int $end = java.lang.Math.min($b * $rows + $rows, $a.numElements());
-         |  for (int $j = $b * $rows; $j < $end; $j++) {
-         |    $h = $xxh.hashLong($a.getLong($j), $h);
-         |  }
-         |  $out[$b] = $h;
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(c: Expression): LshBandBuckets = copy(child = c)
-}
-
-/** First index where two long arrays agree, −1 if none (see
-  * [[VectorExprs.firstEqIndex]]). */
-case class FirstEqIndex(left: Expression, right: Expression) extends BinaryExpression {
-  override def dataType: DataType = IntegerType
-  override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
-    case (ArrayType(LongType, _), ArrayType(LongType, _)) => TypeCheckResult.TypeCheckSuccess
-    case (l, r) => TypeCheckResult.TypeCheckFailure(
-      s"need (array<bigint>, array<bigint>), got (${l.sql}, ${r.sql})")
-  }
-
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
-    var i = 0
-    while (i < n) {
-      if (x.getLong(i) == y.getLong(i)) return i
-      i += 1
-    }
-    -1
-  }
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val r = ctx.freshName("r")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |int $r = -1;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  if ($a.getLong($i) == $b.getLong($i)) { $r = $i; break; }
-         |}
-         |${ev.value} = $r;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): FirstEqIndex =
-    copy(left = l, right = r)
 }
 
 /** One-pass multi-set membership counts (see [[VectorExprs.stopwordCounts]]).
@@ -550,7 +230,6 @@ case class StopwordLangId(child: Expression, langs: Array[String],
 
   override protected def withNewChildInternal(c: Expression): StopwordLangId = copy(child = c)
 }
-
 private[graft] trait ArrayNumericCheck { self: Expression =>
   protected def checkNumericArray(e: Expression, side: String): TypeCheckResult =
     e.dataType match {
@@ -697,209 +376,6 @@ case class VecL2Sq(left: Expression, right: Expression)
 
   override protected def withNewChildrenInternal(l: Expression, r: Expression): VecL2Sq =
     copy(left = l, right = r)
-}
-
-/** Distinct shingle hashes from a token array: hash each word once, chain
-  * n-word windows with xxh64, sort + dedup. Replaces the interpreted
-  * slice/array_join/array_distinct string-shingle pipeline — no shingle
-  * strings are ever built. Window semantics mirror [[graft.operators.Dedup
-  * .shingles]]: max(|words|−n+1, 1) windows, the tail windows truncated.
-  *
-  * `positional = true` keeps every window hash AT ITS START POSITION
-  * (no sort, no dedup) — element k is the hash of words[k..k+n-1], the
-  * shape span-removal needs to map a duplicated gram back to the exact
-  * word range it covers. */
-case class ShingleHashes(child: Expression, n: Int,
-                         positional: Boolean = false) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"need array<string>, got ${t.sql}")
-  }
-
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
-    val w = arr.numElements()
-    val wh = new Array[Long](w)
-    var i = 0
-    while (i < w) { wh(i) = XXH64.hashUTF8String(arr.getUTF8String(i), 42L); i += 1 }
-    val m = math.max(w - n + 1, 1)
-    val out = new Array[Long](math.max(m, 0))
-    i = 0
-    while (i < m) {
-      var h = 42L
-      var j = i
-      val end = math.min(i + n, w)
-      while (j < end) { h = XXH64.hashLong(wh(j), h); j += 1 }
-      out(i) = h
-      i += 1
-    }
-    if (positional) new GenericArrayData(out)
-    else {
-      java.util.Arrays.sort(out)
-      var uniq = 0
-      i = 0
-      while (i < out.length) {
-        if (i == 0 || out(i) != out(i - 1)) { out(uniq) = out(i); uniq += 1 }
-        i += 1
-      }
-      new GenericArrayData(java.util.Arrays.copyOf(out, uniq))
-    }
-  }
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val i = ctx.freshName("i")
-      val j = ctx.freshName("j")
-      val w = ctx.freshName("w")
-      val m = ctx.freshName("m")
-      val h = ctx.freshName("h")
-      val end = ctx.freshName("end")
-      val wh = ctx.freshName("wh")
-      val out = ctx.freshName("out")
-      val uniq = ctx.freshName("uniq")
-      val xxh = classOf[XXH64].getName
-      s"""
-         |int $w = $a.numElements();
-         |long[] $wh = new long[$w];
-         |for (int $i = 0; $i < $w; $i++) {
-         |  $wh[$i] = $xxh.hashUTF8String($a.getUTF8String($i), 42L);
-         |}
-         |int $m = java.lang.Math.max($w - $n + 1, 1);
-         |long[] $out = new long[$m];
-         |for (int $i = 0; $i < $m; $i++) {
-         |  long $h = 42L;
-         |  int $end = java.lang.Math.min($i + $n, $w);
-         |  for (int $j = $i; $j < $end; $j++) {
-         |    $h = $xxh.hashLong($wh[$j], $h);
-         |  }
-         |  $out[$i] = $h;
-         |}
-         |${if (positional)
-             s"""${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);"""
-           else
-             s"""java.util.Arrays.sort($out);
-                |int $uniq = 0;
-                |for (int $i = 0; $i < $m; $i++) {
-                |  if ($i == 0 || $out[$i] != $out[$i - 1]) { $out[$uniq] = $out[$i]; $uniq++; }
-                |}
-                |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(
-                |  java.util.Arrays.copyOf($out, $uniq));""".stripMargin}
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(c: Expression): ShingleHashes = copy(child = c)
-}
-
-/** One-pass MinHash signature over pre-hashed shingles (SURVEY §2 north-star
-  * MinHash+LSH dedup): sig[i] = min over shingles of xxh64(shingleHash, i). */
-case class MinHashSig(child: Expression, k: Int) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"need array<bigint>, got ${t.sql}")
-  }
-
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
-    val n = arr.numElements()
-    val sig = Array.fill(k)(Long.MaxValue)
-    var i = 0
-    while (i < n) {
-      val h = arr.getLong(i)
-      var j = 0
-      while (j < k) {
-        val v = XXH64.hashLong(h, j.toLong)
-        if (v < sig(j)) sig(j) = v
-        j += 1
-      }
-      i += 1
-    }
-    new GenericArrayData(sig)
-  }
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val i = ctx.freshName("i")
-      val j = ctx.freshName("j")
-      val n = ctx.freshName("n")
-      val h = ctx.freshName("h")
-      val v = ctx.freshName("v")
-      val sig = ctx.freshName("sig")
-      val xxh = classOf[XXH64].getName
-      s"""
-         |int $n = $a.numElements();
-         |long[] $sig = new long[$k];
-         |java.util.Arrays.fill($sig, Long.MAX_VALUE);
-         |for (int $i = 0; $i < $n; $i++) {
-         |  long $h = $a.getLong($i);
-         |  for (int $j = 0; $j < $k; $j++) {
-         |    long $v = $xxh.hashLong($h, (long) $j);
-         |    if ($v < $sig[$j]) $sig[$j] = $v;
-         |  }
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($sig);
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(c: Expression): MinHashSig = copy(child = c)
-}
-
-/** One-pass 64-bit SimHash (replaces 64 interpreted `aggregate` passes). */
-case class SimHash64(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"need array<string>, got ${t.sql}")
-  }
-
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
-    val n = arr.numElements()
-    val sums = new Array[Int](64)
-    var i = 0
-    while (i < n) {
-      val h = XXH64.hashUTF8String(arr.getUTF8String(i), 42L)
-      var j = 0
-      while (j < 64) {
-        sums(j) += (if (((h >>> j) & 1L) == 1L) 1 else -1)
-        j += 1
-      }
-      i += 1
-    }
-    var out = 0L
-    var j = 0
-    while (j < 64) { if (sums(j) > 0) out |= (1L << j); j += 1 }
-    out
-  }
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val i = ctx.freshName("i")
-      val j = ctx.freshName("j")
-      val n = ctx.freshName("n")
-      val h = ctx.freshName("h")
-      val sums = ctx.freshName("sums")
-      val out = ctx.freshName("out")
-      val xxh = classOf[XXH64].getName
-      s"""
-         |int $n = $a.numElements();
-         |int[] $sums = new int[64];
-         |for (int $i = 0; $i < $n; $i++) {
-         |  long $h = $xxh.hashUTF8String($a.getUTF8String($i), 42L);
-         |  for (int $j = 0; $j < 64; $j++) {
-         |    $sums[$j] += ((($h >>> $j) & 1L) == 1L) ? 1 : -1;
-         |  }
-         |}
-         |long $out = 0L;
-         |for (int $j = 0; $j < 64; $j++) {
-         |  if ($sums[$j] > 0) $out |= (1L << $j);
-         |}
-         |${ev.value} = $out;
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(c: Expression): SimHash64 = copy(child = c)
 }
 
 /** Exact co-moment sums over quantized integer vectors in ONE aggregate pass

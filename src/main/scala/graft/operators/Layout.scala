@@ -125,7 +125,7 @@ object Layout {
   private val built = new java.util.concurrent.ConcurrentHashMap[String, ZBounds]()
 
   /** Build the layout once per process (bench/notebook loops must not pay
-    * the CTAS per query — same contract as [[Dedup.ensureSignatureTables]]).
+    * the CTAS per query — same contract as [[Vectors.ensureKnnGraph]]).
     * `df` is by-name: never computed on the skip path. */
   def ensureZordered(df: => DataFrame, xCol: Column, yCol: Column,
                      path: String): ZBounds =

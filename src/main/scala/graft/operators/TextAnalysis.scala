@@ -399,8 +399,8 @@ object TextAnalysis {
         i => array_join(slice(col("ws"), i * wordsPerLine + 1, lit(wordsPerLine)), " "))))
       .select(col("id"), col("host"), col("pos").cast("long").as("line_no"),
         col("col").as("line"), xxhash64(col("col")).as("lh"))
-      // corpus-sized-output exemption (the Dedup.scala header policy): the
-      // reconstructed kept_text is corpus-sized, so checkpoint-and-release
+      // corpus-sized-output exemption (the CacheHygieneSpec header policy):
+      // the reconstructed kept_text is corpus-sized, so checkpoint-and-release
       // would double-write it; the line cache stays pinned for the two
       // readers and is reclaimed by the caller's clearCache between runs.
       // (pin is re-execution-safe below — a second run of the same plan

@@ -918,8 +918,9 @@ object Vectors {
   }
 
   /** EXACT distributed DBSCAN over an embedding column — density clustering
-    * with core/border/noise semantics (the step past the plain ε-graph CC
-    * that [[graft.operators.Dedup]]'s embedding near-dup runs).
+    * with core/border/noise semantics (the step past a plain ε-graph
+    * connected-components pass, which links every ε-pair regardless of
+    * density).
     *
     * The ε-neighborhood join never goes all-pairs: every point gets a
     * 1-D annulus key ⌊d(x, pivot)/2ε⌋ PER PIVOT, and by the triangle
@@ -947,7 +948,7 @@ object Vectors {
     * hash is unchanged; the two conventions are exactly
     * `minPts_inclusive = minPts_exclusive + 1` (DbscanSpec pins the
     * parity). Clusters = connected components of the core-core ε-graph
-    * (labels = component-min id via [[Dedup.resolveClusters]]); border =
+    * (labels = component-min id via [[Graph.resolveClusters]]); border =
     * non-core within ε of ≥1 core, assigned the min cluster label among
     * its core neighbors (deterministic tiebreak); the rest is noise.
     * Returns (id, role, cluster) with cluster = -1 for noise. */
@@ -977,7 +978,7 @@ object Vectors {
       .join(core.withColumnRenamed("id", "id_a"), Seq("id_a"))
       .join(core.withColumnRenamed("id", "id_b"), Seq("id_b"))
       .select(col("id_a"), col("id_b"))
-    val clustered = Dedup.resolveClusters(ccPairs) // (id, cluster)
+    val clustered = Graph.resolveClusters(ccPairs) // (id, cluster)
     val coreAssign = core.join(clustered, Seq("id"), "left")
       .select(col("id"), coalesce(col("cluster"), col("id")).as("cluster"))
     val borderAssign = edges

@@ -176,8 +176,7 @@ object EventStream {
     * order, matching the batch operator's tie contract; ACROSS batches the
     * stream is monotone-forward — a state row arriving after a later query
     * was already emitted cannot retro-correct it (at-least-once streaming
-    * semantics; the batch as-of remains the ground-truth backfill, the same
-    * layering as [[CorpusIngest]]'s dedup). */
+    * semantics; the batch as-of remains the ground-truth backfill). */
   def streamingAsOf(events: Dataset[StateEvent]): Dataset[AsOfResult] = {
     import events.sparkSession.implicits._
     events.groupByKey(_.key)

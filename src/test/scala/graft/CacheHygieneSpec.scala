@@ -11,8 +11,7 @@ import org.apache.spark.sql.functions._
   * unpersist, so one missed release per operator accumulates across a
   * 341-query registry session (the r9 ADVICE leak class). RDD-level
   * localCheckpoint blocks are cleaner-managed and deliberately not counted.
-  * Corpus-sized-output operators (dedupCorpus, removeDuplicateSpans,
-  * boilerplateRemoval, resolveClustersIncremental) are documented
+  * Corpus-sized-output operators (boilerplateRemoval) are documented
   * exemptions and not asserted here. */
 class CacheHygieneSpec extends SparkTestBase {
   import spark.implicits._
@@ -56,22 +55,6 @@ class CacheHygieneSpec extends SparkTestBase {
     assertClean("assortativityMoments")(Graph.assortativityMoments(edges))
     assertClean("kcorePeel")(Graph.kcorePeel(edges, 2, 2))
     assertClean("hashWalks")(Graph.hashWalks(edges, seeds, 2, 2))
-  }
-
-  test("dedup kernels release their caches") {
-    spark.catalog.clearCache()
-    assertClean("jaccardPairs capped")(
-      Dedup.jaccardPairs(docs, "doc_id", "text", 3, 0.5, maxDf = 8))
-    assertClean("containmentPairs")(
-      Dedup.containmentPairs(docs, "doc_id", "text", 3, 0.5))
-    assertClean("minhashLshPairs")(Dedup.minhashLshPairs(docs, "doc_id", "text"))
-    assertClean("simhashPairs")(Dedup.simhashPairs(docs, "doc_id", "text"))
-    assertClean("duplicatedNgramSpans")(
-      Dedup.duplicatedNgramSpans(docs, "doc_id", "text", 3))
-    assertClean("minhashParamSweep")(
-      Dedup.minhashParamSweep(docs, "doc_id", "text", Seq((16, 4), (8, 8))))
-    assertClean("exactJaccardFor")(Dedup.exactJaccardFor(
-      Seq((1L, 2L)).toDF("id_a", "id_b"), docs, "doc_id", "text"))
   }
 
   test("sketch estimators release their caches") {

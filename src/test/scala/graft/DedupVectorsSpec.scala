@@ -1,105 +1,14 @@
 package graft
 
-import graft.operators.{Dedup, Vectors}
+import graft.operators.{Graph, Vectors}
 import org.apache.spark.sql.functions._
 
-/** Dedup + vector-search semantics: MinHash recall vs exact Jaccard, SimHash
-  * on identical text, ANN-vs-exact agreement, upsert determinism.
+/** Vector-search semantics (ANN-vs-exact agreement, upsert determinism),
+  * cluster resolution over near-dup pairs, and the text scoring/sampling
+  * kernels that ride along (BM25, repetition, PII, stratified sampling).
   */
 class DedupVectorsSpec extends SparkTestBase {
   import spark.implicits._
-
-  test("exact dedup groups identical content, keeps min id") {
-    val df = Seq((1L, "x y z"), (2L, "x y z"), (3L, "other text here"))
-      .toDF("doc_id", "text")
-    val got = Dedup.exactDedup(df, "doc_id", "text")
-      .orderBy("keep_id").collect().map(r => (r.getLong(1), r.getLong(2)))
-    assert(got.toSeq == Seq((1L, 2L), (3L, 1L)))
-  }
-
-  test("jaccard pairs: identical docs = 1.0, disjoint docs absent") {
-    val df = Seq(
-      (1L, "a b c d e f g h"), (2L, "a b c d e f g h"),
-      (3L, "q r s t u v w x")).toDF("doc_id", "text")
-    val got = Dedup.jaccardPairs(df, "doc_id", "text", 3, 0.5)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-    assert(got.toSeq == Seq((1L, 2L, 1.0)))
-  }
-
-  test("containment maxDf cap drops boilerplate-only evidence, default cap is inert") {
-    // docs 1/2: a genuine containment pair (2 embedded in 1). Docs 10-15: six
-    // docs sharing ONE boilerplate phrase ("cookie banner accept all") and
-    // nothing else pairwise-substantial.
-    val base = Seq(
-      (1L, "alpha beta gamma delta epsilon zeta eta theta iota kappa"),
-      (2L, "alpha beta gamma delta epsilon"))
-    val chrome = (10L to 15L).map(i =>
-      (i, s"cookie banner accept all unique$i filler$i words$i"))
-    val df = (base ++ chrome).toDF("doc_id", "text")
-    val uncapped = Dedup.containmentPairs(df, "doc_id", "text", 3, 0.2,
-        maxDf = Long.MaxValue)
-      .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    // default (high) cap binds nothing here: identical result
-    val dflt = Dedup.containmentPairs(df, "doc_id", "text", 3, 0.2, maxDf = 10000L)
-      .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(dflt == uncapped && uncapped.contains((1L, 2L)))
-    // cap below the boilerplate df (6 docs): chrome-only pairs vanish, the
-    // genuine containment pair survives (its shingles have df = 2)
-    val capped = Dedup.containmentPairs(df, "doc_id", "text", 3, 0.2, maxDf = 5L)
-      .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(capped.contains((1L, 2L)))
-    assert(!capped.exists { case (x, y) => x >= 10L && y >= 10L },
-      s"boilerplate-only pairs must be dropped by the cap, got $capped")
-  }
-
-  test("minhash-LSH finds the high-jaccard pairs that exact jaccard finds") {
-    val docs = Tables.documents(spark, sfDir).select($"doc_id", $"text")
-    val corpus = docs.unionByName(docs.filter($"doc_id" % 5 === 0)
-      .select(($"doc_id" + 1000000).as("doc_id"),
-        concat($"text", lit(" tail marker suffix words here")).as("text")))
-    val exact = Dedup.jaccardPairs(corpus, "doc_id", "text", 3, 0.7)
-      .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val approx = Dedup.minhashLshPairs(corpus, "doc_id", "text", 16, 4, 0.5)
-      .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val recall = if (exact.isEmpty) 1.0
-      else exact.intersect(approx).size.toDouble / exact.size
-    assert(exact.nonEmpty, "fixture should produce high-jaccard pairs")
-    assert(recall >= 0.9, s"minhash recall $recall too low (exact=${exact.size})")
-  }
-
-  test("simhash: identical text → hamming 0; simhashPairs finds it") {
-    val df = Seq((1L, "the quick brown fox jumps"), (2L, "the quick brown fox jumps"),
-      (3L, "completely different words entirely")).toDF("doc_id", "text")
-    val got = Dedup.simhashPairs(df, "doc_id", "text", 0)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
-    assert(got.toSeq == Seq((1L, 2L, 0)))
-  }
-
-  test("simhashPairsExhaustive equals brute-force all-pairs at the graded distance") {
-    val docs = Tables.documents(spark, sfDir).select($"doc_id", $"text")
-    val corpus = docs.unionByName(docs.filter($"doc_id" % 5 === 0)
-      .select(($"doc_id" + 1000000).as("doc_id"),
-        concat($"text", lit(" tail")).as("text")))
-    val maxDist = 5
-    // brute force: every pair, no candidate structure
-    val fp = corpus.select($"doc_id".as("id"),
-      graft.functions.VectorExprs.simhashMd5(Dedup.words($"text")).as("sim"))
-    val brute = fp.as("a").join(fp.as("b"), $"a.id" < $"b.id")
-      .withColumn("hamming", bit_count($"a.sim".bitwiseXOR($"b.sim")))
-      .filter($"hamming" <= maxDist)
-      .select($"a.id", $"b.id", $"hamming")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-    val blocked = Dedup.simhashPairsExhaustive(corpus, "doc_id", "text", maxDist)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-    assert(brute.nonEmpty, "fixture should contain close fingerprints")
-    assert(blocked == brute,
-      s"blocked candidates missed ${(brute -- blocked).size} / extra ${(blocked -- brute).size}")
-    // and the fixed 4-block scheme is also exhaustive at <= 3 (pigeonhole)
-    val brute3 = brute.filter(_._3 <= 3)
-    val four = Dedup.simhashPairs(corpus, "doc_id", "text", 3)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-    assert(four == brute3)
-  }
 
   test("covarianceMatrix one-pass aggregate: hand-recompute parity, ragged rows skipped") {
     val rows = Seq(Seq(0.1f, -0.2f, 0.3f), Seq(0.0f, 0.5f, -0.1f),
@@ -359,41 +268,18 @@ class DedupVectorsSpec extends SparkTestBase {
     assert(got.nonEmpty && got == brute)
   }
 
-  test("duplicatedNgramSpans: copies near 1.0, unique docs at 0.0") {
-    val df = Seq(
-      (1L, "w1 w2 w3 w4 w5 w6"),
-      (2L, "w1 w2 w3 w4 w5 w6"),          // exact copy of 1 → every 4-gram duplicated
-      (3L, "q1 q2 q3 q4 q5 q6 q7"))       // unique
-      .toDF("doc_id", "text")
-    val got = graft.operators.Dedup.duplicatedNgramSpans(df, "doc_id", "text", 4)
-      .orderBy(col("doc_id"))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSeq
-    assert(got == Seq((1L, 3L, 3L, 1.0), (2L, 3L, 3L, 1.0), (3L, 4L, 0L, 0.0)))
-  }
-
   test("resolveClusters: components labeled by min id, chains included") {
     val pairs = Seq((2L, 1L), (2L, 3L), (3L, 7L), (10L, 11L))
       .toDF("id_a", "id_b")
-    val got = Dedup.resolveClusters(pairs).orderBy("id")
+    val got = Graph.resolveClusters(pairs).orderBy("id")
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     // {1,2,3,7} is a chain (diameter 3) → all label 1; {10,11} → 10
     assert(got.toSeq == Seq((1L, 1L), (2L, 1L), (3L, 1L), (7L, 1L),
       (10L, 10L), (11L, 10L)))
     // distributed pointer-jump path (threshold 0 forces it) agrees exactly
-    val dist = Dedup.resolveClusters(pairs, localEdgeThreshold = 0L)
+    val dist = Graph.resolveClusters(pairs, localEdgeThreshold = 0L)
       .orderBy("id").collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(dist.toSeq == got.toSeq)
-  }
-
-  test("dedupCorpus drops losers, keeps min-id, counts absorption") {
-    val pairs = Seq((2L, 1L), (2L, 3L), (10L, 11L)).toDF("id_a", "id_b")
-    val corpus = Seq((1L, "a"), (2L, "b"), (3L, "c"), (10L, "d"), (11L, "e"),
-      (20L, "f")).toDF("doc_id", "text")
-    val got = Dedup.dedupCorpus(corpus, "doc_id", pairs).orderBy("doc_id")
-      .select("doc_id", "n_absorbed").collect()
-      .map(r => (r.getLong(0), r.getLong(1)))
-    // {1,2,3} → keeper 1 absorbs 2; {10,11} → keeper 10 absorbs 1; 20 alone
-    assert(got.toSeq == Seq((1L, 2L), (10L, 1L), (20L, 0L)))
   }
 
   test("bm25: higher tf ranks higher; absent terms score nothing") {
@@ -452,37 +338,6 @@ class DedupVectorsSpec extends SparkTestBase {
     val got = Vectors.upsert(batches, "key", "priority")
       .orderBy("key").collect().map(r => (r.getLong(0), r.getString(1)))
     assert(got.toSeq == Seq((1L, "v2"), (2L, "w1")))
-  }
-
-  test("embedding near-dup LSH-bucketed path: recall vs exact all-pairs") {
-    val e = Tables.embeddings(spark, sfDir)
-    val corpus = e.select($"vec_id", $"embedding")
-      .unionByName(e.filter($"vec_id" % 10 === 0)
-        .select(($"vec_id" + 100000).as("vec_id"), $"embedding"))
-    def pairs(planes: Int) =
-      Dedup.embeddingNearDupPairs(corpus, "vec_id", "embedding", 0.9, planes, 64)
-        .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val exact = pairs(0)
-    val bucketed = pairs(4)
-    assert(exact.nonEmpty)
-    // bucketed candidates are a subset of all pairs, scored identically
-    assert(bucketed.subsetOf(exact))
-    // exact duplicates project identically on every hyperplane → same bucket,
-    // so the spliced vec_id+100000 copies are always found
-    val spliced = exact.filter { case (a, b) => b == a + 100000 }
-    assert(spliced.subsetOf(bucketed))
-    val recall = bucketed.size.toDouble / exact.size
-    assert(recall >= 0.5, s"LSH recall $recall too low (exact=${exact.size})")
-  }
-
-  test("embedding near-dup: exact copy scores cos_sim 1.0") {
-    val e = Tables.embeddings(spark, sfDir).limit(50)
-    val corpus = e.select($"vec_id", $"embedding")
-      .unionByName(e.filter($"vec_id" === 5)
-        .select(($"vec_id" + 100000).as("vec_id"), $"embedding"))
-    val got = Dedup.embeddingNearDupPairs(corpus, "vec_id", "embedding", 0.99)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-    assert(got.toSeq == Seq((5L, 100005L, 1.0)))
   }
 
   test("prototype prune: keeps the hard 70% per cluster, boundary distance exact") {

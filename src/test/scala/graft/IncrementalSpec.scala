@@ -71,41 +71,4 @@ class IncrementalSpec extends SparkTestBase {
       .collect().map(r => (r.getAs[Long]("k"), r.getAs[String]("state"))).toSet
     assert(got == viaScd2)
   }
-
-  test("incremental CC equals full recompute, including cluster merges") {
-    import graft.operators.Dedup
-    // base: two chains {1,2,3} and {10,11}, plus {20,21}
-    val base = Seq((1L, 2L), (2L, 3L), (10L, 11L), (20L, 21L)).toDF("id_a", "id_b")
-    // batch: a new doc 30 joins {10,11}; edge 3-10 MERGES two old clusters;
-    // 40-41 is an all-new cluster; 5-20 extends {20,21}
-    val batch = Seq((30L, 10L), (3L, 10L), (40L, 41L), (5L, 20L))
-      .toDF("id_a", "id_b")
-    val prev = Dedup.resolveClusters(base)
-    val inc = Dedup.resolveClustersIncremental(prev, batch)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val full = Dedup.resolveClusters(base.unionByName(batch))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(inc == full)
-    // the 3-10 bridge must have merged {1,2,3} with {10,11,30} under min 1
-    assert(inc.contains((30L, 1L)) && inc.contains((11L, 1L)))
-  }
-
-  test("incremental CC: explicit newIds yields singletons for pair-less docs") {
-    import graft.operators.Dedup
-    val prev = Dedup.resolveClusters(Seq((1L, 2L)).toDF("id_a", "id_b"))
-    val batch = Seq((3L, 1L)).toDF("id_a", "id_b")
-    val ids = Seq(3L, 99L).toDF("id") // 99 has no pairs → singleton
-    val out = Dedup.resolveClustersIncremental(prev, batch, newIds = Some(ids))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(out == Set((1L, 1L), (2L, 1L), (3L, 1L), (99L, 99L)))
-  }
-
-  test("incremental CC with an empty contracted graph (batch inside old clusters)") {
-    import graft.operators.Dedup
-    val prev = Dedup.resolveClusters(Seq((1L, 2L), (2L, 3L)).toDF("id_a", "id_b"))
-    val batch = Seq((1L, 3L)).toDF("id_a", "id_b") // already same cluster
-    val out = Dedup.resolveClustersIncremental(prev, batch)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(out == Set((1L, 1L), (2L, 1L), (3L, 1L)))
-  }
 }

@@ -243,44 +243,6 @@ class PipelineOpsSpec extends SparkTestBase {
     assert(again == got)
   }
 
-  test("removeDuplicateSpans: first occurrence kept, spans cut and clipped, text rebuilt") {
-    import spark.implicits._
-    val df = Seq(
-      (1L, "a b c d e"),       // owns the first "a b c" (pos 0)
-      (2L, "x a b c y"),       // duplicated 3-gram at pos 1 → cuts words 1-3
-      (3L, "a b c"),           // len == n: one exact window, a later copy of doc 1's pos-0 gram
-      (4L, "p q r s")          // no duplicated span
-    ).toDF("doc_id", "text")
-    val got = graft.operators.Dedup.removeDuplicateSpans(df, "doc_id", "text", 3)
-      .orderBy(col("doc_id"))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3))).toSeq
-    // doc 1: pos-0 "a b c" is the corpus keeper (min key) → nothing removed.
-    // doc 2: its "a b c" at pos 1 loses to doc 1 → words 1..3 cut → "x y".
-    // doc 3: whole doc is a later copy of the same 3-gram → fully removed.
-    // doc 4: untouched.
-    assert(got == Seq(
-      (1L, 5L, 0L, "a b c d e"),
-      (2L, 5L, 3L, "x y"),
-      (3L, 3L, 3L, ""),
-      (4L, 4L, 0L, "p q r s")))
-  }
-
-  test("contamination flags exactly the docs sharing an n-gram with the benchmark") {
-    import spark.implicits._
-    val train = Seq(
-      (1L, "one two three four five six seven"),
-      (2L, "completely unrelated words in this document"),
-      (3L, "zzz one two three four five qqq")).toDF("doc_id", "text")
-    val bench = Seq((100L, "one two three four five")).toDF("bench_id", "text")
-    val got = graft.operators.Dedup.contamination(
-      train, "doc_id", "text", bench, "bench_id", "text", n = 5)
-      .orderBy(col("doc_id"))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-    // docs 1 and 3 contain the benchmark 5-gram as a contiguous window
-    // (doc 3 at positions 2-6); doc 2 shares no 5-gram
-    assert(got == Seq((1L, 1L, 1L), (3L, 1L, 1L)))
-  }
-
   test("bigramLm: pair counts, context totals, conditional probabilities") {
     import spark.implicits._
     val df = Seq("a b a b c", "a b").toDF("text")
@@ -356,27 +318,6 @@ class PipelineOpsSpec extends SparkTestBase {
       .orderBy(col("threshold_pct"))
       .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
     assert(got == Seq((50, 1L, 6L, 10L), (90, 2L, 9L, 10L), (99, 3L, 10L, 10L)))
-  }
-
-  test("semanticNearDupPairs finds spliced exact copies inside their cluster") {
-    val e = Tables.embeddings(spark, sfDir)
-    val corpus = e.select(col("vec_id"), col("embedding"))
-      .unionByName(e.filter(col("vec_id") % 10 === 0)
-        .select((col("vec_id") + 100000).as("vec_id"), col("embedding")))
-    val centroids = e.filter(col("vec_id") % 97 === 3)
-      .orderBy(col("vec_id")).limit(8)
-      .select(col("vec_id"), col("embedding").cast("array<double>")).collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1).toSeq)).toSeq
-    val pairs = graft.operators.Dedup.semanticNearDupPairs(
-      corpus, "vec_id", "embedding", centroids, 0.99)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-    // identical vectors always share a cluster (same argmin), so every
-    // spliced copy must surface at cos_sim 1.0
-    val expected = e.filter(col("vec_id") % 10 === 0)
-      .select(col("vec_id")).collect().map(_.getLong(0)).toSet
-    val found = pairs.filter(_._3 == 1.0)
-      .map { case (a, b, _) => (a, b - 100000) }.filter(p => p._1 == p._2).map(_._1).toSet
-    assert(expected.nonEmpty && expected.subsetOf(found))
   }
 
   test("packing: exhaustive assignment, bin bound, matches local recompute") {
@@ -461,42 +402,6 @@ class PipelineOpsSpec extends SparkTestBase {
     val covered = doc1.flatMap(c => c._3 until (c._3 + c._4)).toSet
     assert((1 to 100).forall(covered.contains))
     assert(rows.filter(_._1 == 2L).toSeq == Seq((2L, 0, 1, 3)))
-  }
-
-  test("incremental minhash == full pass restricted to pairs touching the batch") {
-    import graft.operators.Dedup
-    val d = Tables.documents(spark, sfDir).select(col("doc_id"), col("text"))
-    val newDocs = d.filter(col("doc_id") % 4 === 0)
-      .select((col("doc_id") + 500000).as("doc_id"),
-        concat(col("text"), lit(" tail words appended here")).as("text"))
-    val baseSigs = Dedup.minhashSignatures(d, "doc_id", "text")
-
-    val inc = Dedup.minhashLshIncremental(newDocs, "doc_id", "text", baseSigs)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-
-    val full = Dedup.minhashLshPairs(d.unionByName(newDocs), "doc_id", "text")
-      .filter(col("id_a") >= 500000 || col("id_b") >= 500000)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-
-    assert(inc == full, "incremental contract: same pairs, same estimates")
-    assert(inc.nonEmpty, "fixture must produce near-dup pairs")
-  }
-
-  test("minhash-LSH recall against exact Jaccard pairs on the near-dup fixture") {
-    import graft.operators.Dedup
-    val d = Tables.documents(spark, sfDir).select(col("doc_id"), col("text"))
-    val corpus = d.unionByName(d.filter(col("doc_id") % 4 === 0)
-      .select((col("doc_id") + 500000).as("doc_id"),
-        concat(col("text"), lit(" small tail appended")).as("text")))
-    val exact = Dedup.jaccardPairs(corpus, "doc_id", "text", 3, 0.5, maxDf = 8)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val approx = Dedup.minhashLshPairs(corpus, "doc_id", "text", 16, 4, 0.5)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(exact.nonEmpty, "fixture must contain exact near-dup pairs")
-    val recall = (approx & exact).size.toDouble / exact.size
-    // 16 bands × 4 rows puts the s-curve midpoint near 0.5; fixture pairs
-    // sit well above it, so banding should recover the large majority
-    assert(recall >= 0.7, f"LSH recall $recall%.2f below floor")
   }
 
   test("packStats: totals and fill ratios are consistent") {

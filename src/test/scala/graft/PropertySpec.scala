@@ -148,69 +148,7 @@ class PropertySpec extends SparkTestBase {
     assert(got == want)
   }
 
-  // ── ShingleHashes == distinct string shingles (collision-free at test scale) ──
-
-  test("shingleHashes cardinality equals distinct string-shingle count") {
-    val textGen = for {
-      n <- Gen.choose(1, 40)
-      ws <- Gen.listOfN(n, Gen.oneOf("alpha", "beta", "gamma", "delta", "eps"))
-    } yield ws.mkString(" ")
-    val texts = sample(textGen, 300)
-    def modelCount(t: String, n: Int): Int = {
-      val w = t.trim.toLowerCase.split("\\s+").toSeq
-      val m = math.max(w.length - n + 1, 1)
-      (0 until m).map(i => w.slice(i, math.min(i + n, w.length)).mkString(" ")).distinct.size
-    }
-    val got = texts.toDF("text")
-      .select(size(VectorExprs.shingleHashes(
-        split(lower(trim(col("text"))), "\\s+"), 3)).as("n"))
-      .collect().map(_.getInt(0)).toSeq
-    assert(got == texts.map(modelCount(_, 3)))
-  }
-
-  // ── df-cap preserves the above-threshold Jaccard pair set on the fixture ──
-
-  test("jaccard df-cap(8) leaves the >=0.5 pair set unchanged on the fixture") {
-    val d = Tables.documents(spark, sfDir)
-    val corpus = d.select(col("doc_id"), col("text"))
-      .unionByName(d.filter(col("doc_id") % 5 === 0)
-        .select((col("doc_id") + 1000000).as("doc_id"),
-          concat(col("text"), lit(" quality data pipeline tail marker")).as("text")))
-    def pairs(maxDf: Int) =
-      graft.operators.Dedup.jaccardPairs(corpus, "doc_id", "text", 3, 0.5, maxDf)
-        .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val uncapped = pairs(0)
-    val capped = pairs(8)
-    assert(uncapped.nonEmpty)
-    assert(capped == uncapped,
-      s"df-cap changed the pair set: lost=${uncapped -- capped} gained=${capped -- uncapped}")
-  }
-
   // ── portable row-local kernels == their SQL-expressible formulations ──
-
-  test("MinHashMd5Sig matches the md5-substring double-hash formulation") {
-    val texts = Seq("alpha beta gamma delta", "one two", "x",
-      "alpha beta gamma delta epsilon zeta").toDF("text")
-    val words = split(lower(trim(col("text"))), "\\s+")
-    val kernel = texts.select(VectorExprs.minhashMd5Sig(words, 3, 8).as("sig"))
-      .collect().map(_.getSeq[Long](0).toSeq)
-    // model: the md5-hex-substring double-hash formulation, recomputed locally
-    val local = Seq("alpha beta gamma delta", "one two", "x",
-      "alpha beta gamma delta epsilon zeta").map { t =>
-      val w = t.trim.toLowerCase.split("\\s+").toSeq
-      val m = math.max(w.length - 2, 1)
-      val shingles = (0 until m).map(i => w.slice(i, math.min(i + 3, w.length)).mkString(" "))
-      val md = java.security.MessageDigest.getInstance("MD5")
-      val hs = shingles.map { s =>
-        val d = md.digest(s.getBytes("UTF-8"))
-        def be(off: Int) = (0 until 8).foldLeft(0L)((v, i) => (v << 8) | (d(off + i) & 0xffL))
-        (be(0) >>> 4, be(8) >>> 4)
-      }
-      (0 until 8).map(i =>
-        hs.map { case (h1, h2) => (h1 + i * h2) & ((1L << 60) - 1) }.min)
-    }
-    assert(kernel.toSeq == local)
-  }
 
   test("mergePairGreedy equals the sequential greedy fold on random symbol runs") {
     import spark.implicits._

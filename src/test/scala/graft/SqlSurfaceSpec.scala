@@ -18,25 +18,14 @@ class SqlSurfaceSpec extends SparkTestBase {
       "SELECT vec_l2sq(array(0.0D, 3.0D), array(4.0D, 0.0D)) AS d")
       .head.getDouble(0)
     assert(l2 == 25.0)
-    // SQL minhash ≡ Column-API minhash on the same words
-    val df = Seq("alpha beta gamma delta epsilon").toDF("text")
+    // SQL vec_dot ≡ Column-API vecDot, bit for bit, on the same arrays
+    val df = Seq((Seq(0.1, 0.2, 0.3), Seq(0.4, 0.5, 0.6))).toDF("a", "b")
     df.createOrReplaceTempView("sql_surface_t")
-    val viaSql = spark.sql(
-      """SELECT minhash_md5_sig(split(lower(trim(text)), '\\s+'), 3, 8) AS sig
-        |FROM sql_surface_t""".stripMargin).head.getSeq[Long](0)
-    val viaApi = df.select(VectorExprs.minhashMd5Sig(
-      split(lower(trim(col("text"))), "\\s+"), 3, 8).as("sig"))
-      .head.getSeq[Long](0)
+    val viaSql = spark.sql("SELECT vec_dot(a, b) AS d FROM sql_surface_t")
+      .head.getDouble(0)
+    val viaApi = df.select(VectorExprs.vecDot(col("a"), col("b")).as("d"))
+      .head.getDouble(0)
     assert(viaSql == viaApi)
-  }
-
-  test("non-literal n/k arguments are rejected with a clear error") {
-    GraftFunctions.install(spark)
-    val err = intercept[Exception] {
-      spark.sql("SELECT minhash_md5_sig(array('a'), cast(rand()*3 as int), 8)")
-        .collect()
-    }
-    assert(err.getMessage.contains("minhash_md5_sig"), err.getMessage)
   }
 
   test("GraftExtensions wires functions + as-of strategy without error") {

@@ -1,6 +1,6 @@
 package graft
 
-import graft.streaming.{CorpusIngest, EventStream}
+import graft.streaming.EventStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -425,30 +425,6 @@ class StreamingSpec extends SparkTestBase {
     assert(got == want, s"stream got $got, batch wants $want")
   }
 
-  test("corpus ingest: quality gate + watermarked exact dedup on a doc stream") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val clean =
-      "the cat and the dog sat down on a mat with some other good words here"
-    val input = MemoryStream[(Long, java.sql.Timestamp, String)]
-    val t0 = java.sql.Timestamp.valueOf("2024-01-01 10:00:00")
-    input.addData(
-      (1L, t0, clean),                                   // kept
-      (2L, t0, clean),                                   // exact dup → dropped
-      (3L, t0, clean + " lorem ipsum dolor"),            // gate-fail → dropped
-      (4L, t0, clean + " plus distinct tail content"))   // kept
-    val out = CorpusIngest.ingest(
-      input.toDF.toDF("doc_id", "event_time", "text"))
-    val q = out.writeStream.format("memory").queryName("ingest_out")
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination(60000)
-    val kept = spark.table("ingest_out").select("doc_id")
-      .collect().map(_.getLong(0)).toSet
-    assert(kept == Set(1L, 4L),
-      "one survivor per content hash, gate-failing docs never enter state")
-  }
-
   test("streaming as-of enrichment matches the batch asOfJoin contract") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._
@@ -476,46 +452,6 @@ class StreamingSpec extends SparkTestBase {
     val got = spark.table("asof_out").collect()
       .map(r => (r.getLong(1), Option(r.getString(2)))).toMap
     assert(got == Map(10L -> Some("s3"), 12L -> None, 11L -> Some("s3")))
-  }
-
-  test("gated corpus ingest: classifier + decontamination gates before dedup state") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val clean =
-      "the cat and the dog sat down on a mat with some other good words here"
-    val leaked =
-      "the cat and the dog sat down on a mat with some secret benchmark words"
-    val input = MemoryStream[(Long, java.sql.Timestamp, String)]
-    val t0 = java.sql.Timestamp.valueOf("2024-01-01 10:00:00")
-    input.addData(
-      (1L, t0, clean),                                 // kept
-      (2L, t0, leaked),                                // shares a 13-gram with the benchmark → dropped
-      (3L, t0, clean),                                 // exact dup → dropped
-      (4L, t0, clean + " plus distinct tail content")) // kept
-    // benchmark = the leaked doc's own grams (hashes from the same kernel)
-    val bench = Seq(leaked).toDF("text")
-      .select(explode(graft.functions.VectorExprs.shingleHashes(
-        graft.operators.Dedup.words(col("text")), 13)).as("s"))
-    val out = CorpusIngest.ingestGated(
-      input.toDF.toDF("doc_id", "event_time", "text"),
-      bench, weights = Seq.fill(64)(0.5), bias = 0.0)
-    val q = out.writeStream.format("memory").queryName("ingest_gated_out")
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination(60000)
-    val kept = spark.table("ingest_gated_out").select("doc_id")
-      .collect().map(_.getLong(0)).toSet
-    assert(kept == Set(1L, 4L))
-    // a hostile classifier (all-negative weights) drops everything
-    val input2 = MemoryStream[(Long, java.sql.Timestamp, String)]
-    input2.addData((1L, t0, clean))
-    val out2 = CorpusIngest.ingestGated(
-      input2.toDF.toDF("doc_id", "event_time", "text"),
-      bench.limit(0), weights = Seq.fill(64)(-1.0), bias = 0.0)
-    val q2 = out2.writeStream.format("memory").queryName("ingest_gated_none")
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q2.awaitTermination(60000)
-    assert(spark.table("ingest_gated_none").isEmpty)
   }
 
   test("streaming funnel matches the batch census; state advances across batches") {

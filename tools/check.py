@@ -12,6 +12,10 @@ outDir/oracle_sql.json, runs each oracle SQL in DuckDB against views over
 sfDir/*.parquet, and compares: schema (column names), row count, and values
 (rows sorted, columns sorted by name). Reports exact mismatches plus float
 drift so ulp-level risk is visible before the real driver runs.
+
+Grades the union of oracle keys and result directories: an oracle with no
+result directory is FAIL MISSING, a result directory with no oracle is
+FAIL STALE.
 """
 import sys, os, json, math, threading
 import duckdb
@@ -93,17 +97,24 @@ def main():
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
     oracle = json.load(open(f"{out}/oracle_sql.json"))
     results = {}
-    result_dirs = [d for d in os.listdir(out)
-                   if os.path.isdir(os.path.join(out, d))]
-    for name in sorted(result_dirs):
+    result_dirs = {d for d in os.listdir(out)
+                   if os.path.isdir(os.path.join(out, d))}
+    # Grade every oracle key AND every result directory: a query whose
+    # result is absent (Verify failed it and removed its directory) or a
+    # directory with no oracle (left over from an earlier run in the same
+    # outDir, or a query without oracle SQL) is a failure, never a pass.
+    for name in sorted(result_dirs | set(oracle)):
+        if name not in result_dirs:
+            results[name] = "MISSING: no result directory for this oracle"
+            continue
+        if name not in oracle:
+            results[name] = "STALE: result directory with no oracle"
+            continue
         try:
             got = con.execute(
                 f"SELECT * FROM read_parquet('{out}/{name}/*.parquet')").fetchdf()
         except Exception as e:
             results[name] = f"READ-FAIL: {e}"
-            continue
-        if name not in oracle:
-            results[name] = f"rows-only: {len(got)} rows (no oracle)"
             continue
         try:
             exp = run_oracle(con, oracle[name], timeout)
@@ -195,7 +206,7 @@ def main():
     fails = 0
     skips = 0
     for k, v in sorted(results.items()):
-        flag = "PASS" if v.startswith(("OK", "rows-only")) else (
+        flag = "PASS" if v.startswith("OK") else (
             "SKIP" if v.startswith("ORACLE-TIMEOUT") else "FAIL")
         if flag == "FAIL":
             fails += 1

@@ -27,6 +27,9 @@ grep -E "Tests:|All tests passed|TESTS FAILED" /tmp/gate_sbt_test.log | tail -3 
 if [ $RC -ne 0 ]; then echo "GATE RED: sbt test rc=$RC" | tee -a "$LOG"; exit 1; fi
 
 echo "--- Verify (full registry, sf0.01) ---" >> "$LOG"
+# Start from an empty outDir: the 2-arg Verify never clears it, and a
+# result left by an earlier run would be graded against the new oracle set.
+rm -rf "$OUT"
 sbt -batch "runMain graft.Verify /root/testdata/sf0.01 $OUT" > /tmp/gate_verify.log 2>&1
 RC=$?
 tail -1 /tmp/gate_verify.log >> "$LOG"
