@@ -1,7 +1,6 @@
 package graft
 
 import graft.operators.Listing
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 

@@ -1447,7 +1447,7 @@ object QueriesExtra {
     // (Iceberg/Delta OPTIMIZE, object-store compactors): pack sub-threshold
     // files into target-sized, name-CONTIGUOUS batches via an exclusive
     // prefix sum windowed by (bucket, folder) — the compactor's bounded
-    // unit (a global window here would be the vocabCoverage mistake). The
+    // unit (a global window here would sort every file in one task). The
     // bin id is floor(prefix-sum / target): next-fit packing, one pass, no
     // driver loop. Oracle replays the window; CAST keeps the running sum
     // BIGINT (DuckDB windows int sums as HUGEINT).

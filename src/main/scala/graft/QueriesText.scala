@@ -1,56 +1,14 @@
 package graft
 
-import graft.operators.{Sampling, TextAnalysis}
-import org.apache.spark.sql.Column
+import graft.operators.TextAnalysis
 import org.apache.spark.sql.functions._
 
-/** Text-pipeline queries over `documents`: text analysis (tokens, quality,
-  * lang-id, fingerprint, language models, tokenizers), sampling, packing and
-  * line/URL/boilerplate cleanup.
+/** Text-pipeline queries over `documents`: text analysis (quality, lang-id,
+  * fingerprint, language models) and line/URL/boilerplate cleanup.
   */
 object QueriesText {
 
   private val wordsSql = "string_split_regex(lower(trim(text)), '\\s+')"
-
-  /** DuckDB twin of TextAnalysis.subwordVocab (topK=64, piece len 1..4,
-    * word cap 16): capped distinct-word histogram `wf(w, wc)` + subword
-    * vocabulary `vocab(piece, c, l)`. Shared by the WordPiece and Viterbi
-    * segmentation oracles. */
-  private val subwordVocabCtes =
-    s"""wf AS (SELECT w, count(*) AS wc
-       |  FROM (SELECT unnest($wordsSql) AS w FROM documents)
-       |  WHERE len(w) BETWEEN 1 AND 16 GROUP BY w),
-       |p1 AS (SELECT piece, CAST(sum(wc) AS BIGINT) AS c, 1 AS l FROM (
-       |    SELECT wc, unnest(list_transform(generate_series(1, len(w)),
-       |      i -> substr(w, i, 1))) AS piece FROM wf)
-       |  GROUP BY piece),
-       |pk AS (SELECT piece, c, l FROM (
-       |    SELECT piece, CAST(sum(wc) AS BIGINT) AS c, ll AS l FROM (
-       |      SELECT wc, ll, unnest(list_transform(
-       |          generate_series(1, len(w) - (ll - 1)),
-       |          i -> substr(w, i, ll))) AS piece
-       |      FROM wf CROSS JOIN (SELECT unnest([2, 3, 4]) AS ll) lens
-       |      WHERE len(w) >= ll)
-       |    GROUP BY piece, ll)
-       |  ORDER BY c DESC, piece LIMIT 64),
-       |vocab AS (SELECT * FROM p1 UNION ALL SELECT * FROM pk)""".stripMargin
-
-  /** Deterministic train/val/test assignment, 8/1/1 by portable hash shard
-    * — a narrow per-row expression (no shuffle, no RNG state), so split
-    * membership survives reruns, repartitioning, and engine changes. */
-  private def splitOf(id: Column): Column = {
-    val b = Sampling.hashShard(id, 10, "split1")
-    when(b < 8, lit("train")).when(b === 8, lit("val")).otherwise(lit("test"))
-  }
-
-  /** Train/val/test assignment over a `corpus` CTE — DuckDB twin of
-    * `Sampling.hashShard(doc_id, 10, "split1")` bucketed 8/1/1. */
-  private val splitCte =
-    """sp AS (SELECT doc_id AS id,
-      |  CASE WHEN b < 8 THEN 'train' WHEN b = 8 THEN 'val' ELSE 'test' END AS split
-      |  FROM (SELECT doc_id, CAST('0x' || substr(md5(concat('split1',
-      |          CAST(doc_id AS VARCHAR))), 1, 15) AS BIGINT) % 10 AS b
-      |        FROM corpus))""".stripMargin
 
   /** Shared by `text_perplexity` (single LM join) and
     * `text_perplexity_tiered` (head-broadcast + tail join) — one oracle,
@@ -65,65 +23,6 @@ object QueriesText {
        |SELECT id AS doc_id, n_tokens,
        |       round(CAST(ssum AS DOUBLE) / n_tokens, 6) AS mean_surprisal
        |FROM d ORDER BY doc_id""".stripMargin
-
-  /** Generated CTE chain replaying [[TextAnalysis.bpeTrain]]'s loop: per
-    * iteration k, pair counts over w{k-1}, argmax t{k} (count desc, pair
-    * tiebreak), and the GREEDY left-to-right pairwise merge producing
-    * w{k} — the same positional formulation as
-    * [[TextAnalysis.mergePairGreedy]] (a match merges iff its offset in
-    * its run of consecutive matches is even, derived from the last
-    * non-match position below it). The chain carries (w, syms, wc) so
-    * [[bpeTokenizeOracle]] can join the final segmenter back to the
-    * corpus. */
-  private def bpeChainCtes(nMerges: Int): String = {
-    // positional-merge SQL over a symbol LIST column named `syms`, with
-    // p1/p2/m in scope from the joined argmax row
-    def matchAt(k: String) =
-      s"($k >= 1 AND $k <= len(syms) - 1 AND syms[$k] = p1 AND syms[$k + 1] = p2)"
-    def mergeAt(k: String) =
-      s"""(${matchAt(k)} AND ($k - list_max(list_filter(generate_series(0, greatest($k, 0)),
-         |      j -> j <= $k - 1 AND NOT ${matchAt("j")}))) % 2 = 1)""".stripMargin
-    val mergeExpr =
-      s"""CASE WHEN len(syms) < 2 THEN syms ELSE
-         |  flatten(list_transform(generate_series(1, len(syms)), i ->
-         |    CASE WHEN ${mergeAt("i")} THEN [m]
-         |         WHEN ${mergeAt("(i - 1)")} THEN []
-         |         ELSE [syms[i]] END))
-         |END""".stripMargin
-    val init =
-      s"""tok AS (SELECT unnest($wordsSql) AS w FROM documents),
-         |w0 AS (SELECT w, string_split_regex(w, '') AS syms,
-         |       count(*) AS wc FROM tok GROUP BY w)""".stripMargin
-    val iters = (1 to nMerges).map { k =>
-      s"""p$k AS (SELECT pair, CAST(sum(wc) AS BIGINT) AS n FROM (
-         |  SELECT wc, unnest(list_transform(generate_series(1, len(syms) - 1),
-         |    i -> syms[i] || ' ' || syms[i+1])) AS pair
-         |  FROM w${k - 1} WHERE len(syms) >= 2) GROUP BY pair),
-         |t$k AS (SELECT pair, n, string_split(pair, ' ')[1] AS p1,
-         |        string_split(pair, ' ')[2] AS p2, replace(pair, ' ', '') AS m
-         |        FROM p$k ORDER BY n DESC, pair LIMIT 1),
-         |w$k AS (SELECT w, $mergeExpr AS syms, wc FROM w${k - 1}, t$k)""".stripMargin
-    }.mkString(",\n")
-    s"$init,\n$iters"
-  }
-
-  private def bpeTrainOracle(nMerges: Int): String = {
-    val out = (1 to nMerges).map(k =>
-      s"SELECT $k AS iter, pair, replace(pair, ' ', '') AS merged, n FROM t$k")
-      .mkString("\nUNION ALL\n")
-    s"WITH ${bpeChainCtes(nMerges)}\n$out\nORDER BY iter"
-  }
-
-  /** Per-doc token counts after applying the trained merges: the final
-    * histogram is the segmenter, joined back to the corpus by word. */
-  private def bpeTokenizeOracle(nMerges: Int): String =
-    s"""WITH ${bpeChainCtes(nMerges)},
-       |seg AS (SELECT w, len(syms) AS nt FROM w$nMerges),
-       |td AS (SELECT doc_id AS id, unnest($wordsSql) AS w FROM documents)
-       |SELECT id AS doc_id, count(*) AS n_words,
-       |       CAST(sum(nt) AS BIGINT) AS n_bpe_tokens
-       |FROM td JOIN seg USING (w)
-       |GROUP BY id ORDER BY doc_id""".stripMargin
 
   def queries: Map[String, Q] = Map(
 
@@ -407,47 +306,6 @@ object QueriesText {
            |FROM m GROUP BY doc_id ORDER BY doc_id""".stripMargin),
       doc = "within-host boilerplate removal (chrome lines on >= minDocs docs of a host)"),
 
-    // Token counting (whitespace + subword-regex proxy).
-    "text_token_counts" -> Q(
-      fn = (s, dir) => Tables.documents(s, dir)
-        .select(col("doc_id"),
-          TextAnalysis.tokenCount(col("text")).as("n_tokens"),
-          TextAnalysis.subwordCount(col("text")).as("n_subwords"))
-        .orderBy(col("doc_id")),
-      oracle = Some(
-        s"""SELECT doc_id,
-           |  CAST(len($wordsSql) AS INT) AS n_tokens,
-           |  CAST(len(list_filter(string_split_regex(text, '[^A-Za-z0-9]+'), w -> len(w) > 0))
-           |    + length(text) - length(regexp_replace(text, '[.,;:!?]', '', 'g')) AS INT) AS n_subwords
-           |FROM documents ORDER BY doc_id""".stripMargin),
-      doc = "token counting (whitespace + BPE-ish regex)"),
-
-    // Tokenizer fertility by language (subwords per word, micro-units) —
-    // the multilingual tokenizer-eval metric: high fertility = the
-    // tokenizer fragments that language, inflating its effective cost.
-    "text_tokenizer_fertility" -> Q(
-      fn = (s, dir) => Tables.documents(s, dir)
-        .select(col("lang"),
-          TextAnalysis.tokenCount(col("text")).cast("long").as("nw"),
-          TextAnalysis.subwordCount(col("text")).cast("long").as("ns"))
-        .groupBy(col("lang"))
-        .agg(count(lit(1)).as("n_docs"), sum(col("nw")).as("n_words"),
-          sum(col("ns")).as("n_subwords"))
-        .withColumn("fertility_micro",
-          expr("(n_subwords * 1000000) div n_words"))
-        .orderBy(col("lang")),
-      oracle = Some(
-        s"""WITH c AS (SELECT lang,
-           |    CAST(len($wordsSql) AS BIGINT) AS nw,
-           |    CAST(len(list_filter(string_split_regex(text, '[^A-Za-z0-9]+'), w -> len(w) > 0))
-           |      + length(text) - length(regexp_replace(text, '[.,;:!?]', '', 'g')) AS BIGINT) AS ns
-           |  FROM documents)
-           |SELECT lang, count(*) AS n_docs, CAST(sum(nw) AS BIGINT) AS n_words,
-           |  CAST(sum(ns) AS BIGINT) AS n_subwords,
-           |  (CAST(sum(ns) AS BIGINT) * 1000000) // CAST(sum(nw) AS BIGINT) AS fertility_micro
-           |FROM c GROUP BY 1 ORDER BY 1""".stripMargin),
-      doc = "tokenizer fertility per language: subwords/word in exact micro-units"),
-
     // Quality metrics.
     "text_quality" -> Q(
       fn = (s, dir) =>
@@ -658,169 +516,6 @@ object QueriesText {
           |GROUP BY cc.g, p.pct ORDER BY lang, pct""".stripMargin),
       doc = "per-group exact percentiles: keyed histogram window, bounded frames"),
 
-    // Fixed-budget per-stratum sample (eval sets, human-review batches):
-    // exactly k rows per language, selected by smallest (md5-bucket, id) —
-    // rerun-stable where rate sampling drifts in size. Skew-proof two-phase
-    // top-k (bounded partials per row-salt); the oracle is the global
-    // window formulation — the hash-match proves the hierarchy exact.
-    "sample_fixed_k" -> Q(
-      fn = (s, dir) =>
-        graft.operators.Sampling.fixedKPerStratum(
-          Tables.documents(s, dir), "lang", "doc_id", 20, salt = "evalset")
-          .orderBy(col("lang"), col("doc_id")),
-      oracle = Some(
-        """WITH b AS (SELECT lang, doc_id,
-          |    CAST('0x' || substr(md5(concat('evalset', CAST(doc_id AS VARCHAR))), 1, 15) AS BIGINT)
-          |      % 10000 AS bkt
-          |  FROM documents),
-          |r AS (SELECT lang, doc_id,
-          |        row_number() OVER (PARTITION BY lang ORDER BY bkt, doc_id) AS rn
-          |      FROM b)
-          |SELECT lang, doc_id FROM r WHERE rn <= 20
-          |ORDER BY lang, doc_id""".stripMargin),
-      doc = "fixed-k deterministic sample per stratum (reservoir replacement, exact budget)"),
-
-    "sample_stratified" -> Q(
-      fn = (s, dir) => {
-        val d = Tables.documents(s, dir).withColumn("stratum",
-          when(col("doc_id") % 3 === 0, "web")
-            .when(col("doc_id") % 3 === 1, "code").otherwise("reference"))
-        graft.operators.Sampling.stratifiedHashSample(d, "stratum", "doc_id",
-          Map("web" -> 0.1, "code" -> 0.8), defaultFraction = 0.0, salt = "mix1")
-          .groupBy(col("stratum"))
-          .agg(count(lit(1)).as("n"), sum(col("doc_id")).as("id_sum"))
-          .orderBy(col("stratum"))
-      },
-      oracle = Some(
-        """WITH d AS (SELECT doc_id,
-          |  CASE WHEN doc_id % 3 = 0 THEN 'web'
-          |       WHEN doc_id % 3 = 1 THEN 'code' ELSE 'reference' END AS stratum
-          |  FROM documents),
-          |kept AS (SELECT * FROM d WHERE
-          |  CAST('0x' || substr(md5(concat('mix1', CAST(doc_id AS VARCHAR))), 1, 15) AS BIGINT)
-          |    % 10000 <
-          |  CASE stratum WHEN 'web' THEN 1000 WHEN 'code' THEN 8000 ELSE 0 END)
-          |SELECT stratum, count(*) AS n, CAST(sum(doc_id) AS BIGINT) AS id_sum
-          |FROM kept GROUP BY stratum ORDER BY stratum""".stripMargin),
-      doc = "deterministic stratified hash sampling (training-mix weights)"),
-
-    // Poisson(1) bootstrap (Chamandy et al. 2012 — the MapReduce-native
-    // bootstrap: resampling-with-replacement is impossible in one pass,
-    // but per-(row, rep) independent Poisson(1) weights reproduce the
-    // multinomial in expectation). The draw is DETERMINISTIC: u =
-    // md5₆₀(rep:doc)/2⁶⁰ (exact power-of-two scaling — both engines round
-    // h→double identically, the division is exact), inverted through the
-    // λ=1 CDF as SHARED literal thresholds. Per rep: docs hit, Σw, the
-    // weighted n_chars total and the bootstrap mean — the 10-rep spread IS
-    // the uncertainty estimate a 100 TB single-pass pipeline ships.
-    "sample_poisson_bootstrap" -> Q(
-      fn = (s, dir) => {
-        val reps = (0 until 10).map(lit(_))
-        val u = expr("cast(conv(substring(md5(concat(cast(rep as string), " +
-          "':', cast(doc_id as string))), 1, 15), 16, 10) as bigint)")
-          .cast("double") / lit(1.152921504606846976e18)
-        val w = when(col("u") < 0.36787944117144233, 0L)
-          .when(col("u") < 0.7357588823428847, 1L)
-          .when(col("u") < 0.9196986029286058, 2L)
-          .when(col("u") < 0.9810118431238462, 3L)
-          .when(col("u") < 0.9963401531726563, 4L)
-          .when(col("u") < 0.9994058151824183, 5L).otherwise(6L)
-        Tables.documents(s, dir).select(col("doc_id"), col("n_chars"))
-          .select(col("doc_id"), col("n_chars"),
-            explode(array(reps: _*)).as("rep"))
-          .withColumn("u", u).withColumn("w", w)
-          .groupBy(col("rep"))
-          .agg(sum(when(col("w") > 0, 1L).otherwise(0L)).as("n_docs_hit"),
-            sum(col("w")).as("sum_w"),
-            sum(col("w") * col("n_chars")).as("sum_w_chars"))
-          .withColumn("boot_mean_chars",
-            round(col("sum_w_chars").cast("double") / col("sum_w").cast("double"), 9) + 0.0)
-          .orderBy(col("rep"))
-      },
-      oracle = Some(
-        """WITH x AS (SELECT d.doc_id, d.n_chars, r.rep,
-          |    CAST(CAST('0x' || substr(md5(CAST(r.rep AS VARCHAR) || ':'
-          |      || CAST(d.doc_id AS VARCHAR)), 1, 15) AS BIGINT) AS DOUBLE)
-          |      / 1152921504606846976.0 AS u
-          |  FROM documents d CROSS JOIN (
-          |    SELECT unnest(generate_series(0, 9)) AS rep) r),
-          |wt AS (SELECT rep, n_chars,
-          |    CASE WHEN u < 0.36787944117144233 THEN 0
-          |         WHEN u < 0.7357588823428847 THEN 1
-          |         WHEN u < 0.9196986029286058 THEN 2
-          |         WHEN u < 0.9810118431238462 THEN 3
-          |         WHEN u < 0.9963401531726563 THEN 4
-          |         WHEN u < 0.9994058151824183 THEN 5 ELSE 6 END AS w
-          |  FROM x)
-          |SELECT rep,
-          |  CAST(sum(CASE WHEN w > 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_docs_hit,
-          |  CAST(sum(w) AS BIGINT) AS sum_w,
-          |  CAST(sum(w * n_chars) AS BIGINT) AS sum_w_chars,
-          |  round(CAST(sum(w * n_chars) AS DOUBLE) / CAST(sum(w) AS DOUBLE), 9)
-          |    + 0.0 AS boot_mean_chars
-          |FROM wt GROUP BY rep ORDER BY rep""".stripMargin),
-      doc = "deterministic Poisson(1) bootstrap: 10 single-pass replicas via hash-inverted CDF, per-rep weighted census"),
-
-    // Leakage-safe GROUP k-fold: folds are a FUNCTION of the group key
-    // (fold = md5₆₀(source) mod 5), so no source ever spans folds — the
-    // property that matters when near-duplicates cluster within a source
-    // and a random row-level split would leak train into eval. Census per
-    // fold: distinct sources, docs, chars; PipelineOpsSpec asserts the
-    // no-spanning invariant (Σ per-fold distinct sources = global
-    // distinct). One scan + one groupBy; the fold column is a pure
-    // projection, so at 100 TB the split is free at write time.
-    "sample_group_kfold" -> Q(
-      fn = (s, dir) =>
-        Tables.documents(s, dir).select(col("doc_id"), col("source"), col("n_chars"))
-          .withColumn("fold",
-            expr("cast(conv(substring(md5(source), 1, 15), 16, 10) as bigint) % 5"))
-          .groupBy(col("fold"))
-          .agg(countDistinct(col("source")).as("n_sources"),
-            count(lit(1)).as("n_docs"),
-            sum(col("n_chars")).as("sum_chars"))
-          .orderBy(col("fold")),
-      oracle = Some(
-        """WITH f AS (SELECT doc_id, source, n_chars,
-          |    CAST('0x' || substr(md5(source), 1, 15) AS BIGINT) % 5 AS fold
-          |  FROM documents)
-          |SELECT fold, CAST(count(DISTINCT source) AS BIGINT) AS n_sources,
-          |  count(*) AS n_docs, CAST(sum(n_chars) AS BIGINT) AS sum_chars
-          |FROM f GROUP BY fold ORDER BY fold""".stripMargin),
-      doc = "leakage-safe group k-fold: fold is a function of the source key, per-fold census"),
-
-    // Data-constrained epoch planning: split a 3×-the-corpus token budget
-    // across languages with temperature-α=0.5 weights (√tokens — the
-    // standard head-domain down-weighting), then the implied per-domain
-    // repeat factors, capped. One map-side token-count pass; the plan math
-    // is domain-sized. Numerics per house invariants: √ is IEEE-exact in
-    // both engines, round+DECIMAL makes the weight sum associative, the
-    // share/alloc chain is a fixed IEEE sequence over identical operands.
-    "mix_epoch_plan" -> Q(
-      fn = (s, dir) =>
-        graft.operators.Sampling.epochMixPlan(Tables.documents(s, dir),
-          "lang", "text", budgetMultiplier = 3, maxRepeat = 4)
-          .withColumnRenamed("domain", "lang"),
-      oracle = Some(
-        s"""WITH d AS (SELECT lang, CAST(len($wordsSql) AS BIGINT) AS t
-           |  FROM documents WHERE lang IS NOT NULL),
-           |g AS (SELECT lang, count(*) AS n_docs,
-           |    CAST(sum(t) AS BIGINT) AS n_tokens FROM d GROUP BY 1),
-           |w AS (SELECT *, round(sqrt(CAST(n_tokens AS DOUBLE)), 6) AS weight
-           |  FROM g),
-           |tot AS (SELECT sum(CAST(weight AS DECIMAL(28,6))) AS sum_w,
-           |    CAST(sum(n_tokens) AS BIGINT) AS tot_tokens FROM w),
-           |plan AS (SELECT lang, n_docs, n_tokens, weight,
-           |    weight / CAST(sum_w AS DOUBLE) AS share,
-           |    CAST(floor(CAST(tot_tokens * 3 AS DOUBLE) * weight
-           |      / CAST(sum_w AS DOUBLE)) AS BIGINT) AS alloc_tokens
-           |  FROM w, tot)
-           |SELECT lang, n_docs, n_tokens, weight, share, alloc_tokens,
-           |  CAST(alloc_tokens AS DOUBLE) / CAST(n_tokens AS DOUBLE) AS epochs,
-           |  least(CAST(ceil(CAST(alloc_tokens AS DOUBLE)
-           |    / CAST(n_tokens AS DOUBLE)) AS BIGINT), 4) AS n_repeats
-           |FROM plan ORDER BY lang""".stripMargin),
-      doc = "data-constrained epoch plan: α=0.5 domain weights, budget shares, capped repeats"),
-
     // C4/Gopher heuristic filter battery. The synthetic corpus is clean
     // (no punctuation/braces/placeholders), so deterministic contamination
     // is spliced in — the PII query's construction: first-matching CASE
@@ -964,23 +659,6 @@ object QueriesText {
            |ORDER BY lift DESC, w1, w2 LIMIT 50""".stripMargin),
       doc = "PMI-lift collocations: count-pruned bigrams vs unigram margins"),
 
-    // BPE training step: adjacent symbol-pair counts over the word
-    // histogram — the top pair is the next merge. Word-frequency reduction
-    // first, so per-character work happens on a vocabulary-sized relation.
-    "text_bpe_step" -> Q(
-      fn = (s, dir) =>
-        TextAnalysis.bpePairCounts(Tables.documents(s, dir), "text")
-          .orderBy(col("n").desc, col("pair")).limit(20),
-      oracle = Some(
-        s"""WITH tok AS (SELECT unnest($wordsSql) AS w FROM documents),
-           |wf AS (SELECT w, count(*) AS wc FROM tok GROUP BY w),
-           |p AS (SELECT wc, unnest(list_transform(generate_series(1, len(w) - 1),
-           |        i -> substr(w, i, 2))) AS pair
-           |      FROM wf WHERE len(w) >= 2)
-           |SELECT pair, CAST(sum(wc) AS BIGINT) AS n
-           |FROM p GROUP BY pair ORDER BY n DESC, pair LIMIT 20""".stripMargin),
-      doc = "BPE merge-candidate statistics (one training iteration over the word histogram)"),
-
     // Model-based quality filter: linear bag-of-hashed-words classifier
     // inference (the fasttext stage). Seeded weights as literals on both
     // sides; portable md5-60-bit feature hash; per-word 6 dp rounding
@@ -1011,185 +689,6 @@ object QueriesText {
            |FROM d ORDER BY doc_id""".stripMargin
       },
       doc = "fasttext-style quality classifier inference (hashed linear model, exact decimal gate)"),
-
-    // Full BPE training, 3 merges: the oracle REPLAYS the whole loop as a
-    // generated CTE chain (pair counts → argmax → replace, per iteration),
-    // so the hash-match certifies the merge SEQUENCE — argmax ties, replace
-    // scan order and all — not just one iteration's counts.
-    "text_bpe_train" -> Q(
-      fn = (s, dir) =>
-        TextAnalysis.bpeTrain(Tables.documents(s, dir), "text", 3)
-          .orderBy(col("iter")),
-      oracle = Some(bpeTrainOracle(3)),
-      doc = "BPE training loop (3 merges), oracle replays the full merge sequence"),
-
-    // BPE applied: per-doc token counts under the 3 trained merges — the
-    // train→tokenize round trip. Segmenter = the merged word histogram,
-    // joined back to the corpus by word (broadcast-sized vocabulary).
-    "text_bpe_tokenize" -> Q(
-      fn = (s, dir) =>
-        TextAnalysis.bpeTokenCounts(Tables.documents(s, dir), "doc_id", "text", 3)
-          .withColumnRenamed("id", "doc_id")
-          .orderBy(col("doc_id")),
-      oracle = Some(bpeTokenizeOracle(3)),
-      doc = "BPE tokenization: per-doc token counts under the trained merges"),
-
-    // Vocabulary coverage cutoffs: smallest head-vocab reaching 50/90/99%
-    // cumulative token share — the tokenizer/vocab sizing query. The window
-    // runs over the corpus-reduced LM relation, not the corpus.
-    "text_vocab_coverage" -> Q(
-      fn = (s, dir) =>
-        TextAnalysis.vocabCoverage(Tables.documents(s, dir), "text", Seq(50, 90, 99))
-          .orderBy(col("threshold_pct")),
-      oracle = Some(
-        s"""WITH tok AS (SELECT unnest($wordsSql) AS w FROM documents),
-           |lm AS (SELECT w, count(*) AS c FROM tok GROUP BY w),
-           |n AS (SELECT CAST(sum(c) AS BIGINT) AS n FROM lm),
-           |r AS (SELECT w, c, row_number() OVER (ORDER BY c DESC, w) AS rnk,
-           |        CAST(sum(c) OVER (ORDER BY c DESC, w ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum
-           |      FROM lm)
-           |SELECT t.threshold_pct,
-           |       CAST(min(r.rnk) AS BIGINT) AS vocab_size,
-           |       CAST(min_by(r.cum, r.rnk) AS BIGINT) AS covered_tokens,
-           |       min(n.n) AS total_tokens
-           |FROM r CROSS JOIN (VALUES (50), (90), (99)) t(threshold_pct) CROSS JOIN n
-           |WHERE r.cum * 100 >= n.n * t.threshold_pct
-           |GROUP BY t.threshold_pct ORDER BY t.threshold_pct""".stripMargin),
-      doc = "vocab coverage cutoffs (head-vocabulary sizing for tokenizers/tiered LM)"),
-
-    // Importance-weighted deterministic sampling: keep probability scales
-    // with doc length (min(1, n_chars/500)) — the per-row generalization of
-    // the stratified mix. Integer-derived weights never land on .5 bp.
-    "sample_importance" -> Q(
-      fn = (s, dir) => {
-        val d = Tables.documents(s, dir)
-        graft.operators.Sampling.weightedHashSample(d, "doc_id",
-          least(lit(1.0), col("n_chars").cast("double") / 500.0), salt = "imp1")
-          .groupBy(col("lang"))
-          .agg(count(lit(1)).as("n"), sum(col("doc_id")).as("id_sum"),
-            sum(col("n_chars")).as("chars_sum"))
-          .orderBy(col("lang"))
-      },
-      oracle = Some(
-        """WITH kept AS (SELECT * FROM documents WHERE
-          |  CAST('0x' || substr(md5(concat('imp1', CAST(doc_id AS VARCHAR))), 1, 15) AS BIGINT)
-          |    % 10000 < round(least(1.0, CAST(n_chars AS DOUBLE) / 500.0) * 10000))
-          |SELECT lang, count(*) AS n, CAST(sum(doc_id) AS BIGINT) AS id_sum,
-          |       CAST(sum(n_chars) AS BIGINT) AS chars_sum
-          |FROM kept GROUP BY lang ORDER BY lang""".stripMargin),
-      doc = "importance-weighted deterministic sampling (length-prior keep prob)"),
-
-    // Quality-weighted sampling: keep probability from a TEXT-derived
-    // signal (4× the stopword ratio, clamped) — the quality-curation
-    // composition of text_quality + weightedHashSample. Weight arithmetic
-    // is identical double math on both engines (single divisions + rounds).
-    "sample_quality_weighted" -> Q(
-      fn = (s, dir) => {
-        val d = Tables.documents(s, dir)
-        val w = TextAnalysis.words(col("text"))
-        val stopFrac = round(
-          graft.functions.VectorExprs.stopwordCounts(w,
-            Seq(Seq("the", "a", "and", "of", "to", "in", "is", "for", "on", "with")))
-            .getItem(0).cast("double") / size(w), 6)
-        graft.operators.Sampling.weightedHashSample(d, "doc_id",
-          least(lit(1.0), stopFrac * 4), salt = "qw1")
-          .groupBy(col("lang"))
-          .agg(count(lit(1)).as("n"), sum(col("doc_id")).as("id_sum"))
-          .orderBy(col("lang"))
-      },
-      oracle = Some(
-        s"""WITH scored AS (SELECT doc_id, lang,
-           |  round(CAST(len(list_filter($wordsSql,
-           |    x -> x IN ('the','a','and','of','to','in','is','for','on','with'))) AS DOUBLE)
-           |    / len($wordsSql), 6) AS stop_frac FROM documents),
-           |kept AS (SELECT * FROM scored WHERE
-           |  CAST('0x' || substr(md5(concat('qw1', CAST(doc_id AS VARCHAR))), 1, 15) AS BIGINT)
-           |    % 10000 < round(least(1.0, stop_frac * 4) * 10000))
-           |SELECT lang, count(*) AS n, CAST(sum(doc_id) AS BIGINT) AS id_sum
-           |FROM kept GROUP BY lang ORDER BY lang""".stripMargin),
-      doc = "quality-weighted sampling (stopword-signal keep probability)"),
-
-    // Token-budget sequence packing: shard by portable id-hash, fill
-    // 512-token bins per shard in id order. All integer arithmetic (the one
-    // division is exact); the window parallelizes across shards — no global
-    // sort at any scale.
-    "pack_sequences" -> Q(
-      fn = (s, dir) => {
-        val d = Tables.documents(s, dir).select(col("doc_id"),
-          TextAnalysis.tokenCount(col("text")).as("toks"))
-        val assigned = graft.operators.Packing.assignBins(
-          d, "doc_id", "toks", budget = 512, shards = 8, salt = "pack1")
-        graft.operators.Packing.packStats(assigned, "doc_id", "toks", 512)
-          .orderBy(col("shard"), col("seq_id"))
-      },
-      oracle = Some(
-        s"""WITH d AS (SELECT doc_id, CAST(len($wordsSql) AS INT) AS toks,
-           |  CAST('0x' || substr(md5(concat('pack1', CAST(doc_id AS VARCHAR))), 1, 15) AS BIGINT)
-           |    % 8 AS shard FROM documents),
-           |c AS (SELECT doc_id, shard, toks,
-           |  sum(toks) OVER (PARTITION BY shard ORDER BY doc_id) AS cum FROM d),
-           |b AS (SELECT shard, CAST(floor((cum - 1) / 512) AS BIGINT) AS seq_id,
-           |             doc_id, toks FROM c)
-           |SELECT shard, seq_id, count(*) AS n_docs,
-           |       CAST(sum(toks) AS BIGINT) AS n_tokens,
-           |       min(doc_id) AS first_doc, max(doc_id) AS last_doc,
-           |       CAST(sum(toks) AS DOUBLE) / 512 AS fill_ratio
-           |FROM b GROUP BY 1, 2 ORDER BY shard, seq_id""".stripMargin),
-      doc = "token-budget sequence packing (sharded cumulative-fill bins)"),
-
-    // Padding-waste census: WHY length-sorted batching matters, quantified.
-    // Fixed-size inference batches pad every sequence to the batch max;
-    // naive (ingest-order) batches mix lengths and waste is large,
-    // length-sorted batches are near-homogeneous and waste collapses. Both
-    // global orderings rank via the distributed two-pass prefix-sum
-    // (Prefix.withRankAndCumSum) — no empty-partition window at any scale —
-    // and every graded number is an exact integer until the final ratio of
-    // two exact longs.
-    "pack_padding_waste" -> Q(
-      fn = (s, dir) => {
-        // both packing arms consume the same (doc_id, toks) relation and
-        // differ only in sort order — localCheckpoint it once so the
-        // corpus scan + token count runs once, not per arm (r14)
-        val d = Tables.documents(s, dir).select(col("doc_id"),
-          TextAnalysis.tokenCount(col("text")).cast("long").as("toks"))
-          .localCheckpoint()
-        def arm(sortCols: Seq[org.apache.spark.sql.Column], strategy: String) =
-          graft.operators.Prefix.withRankAndCumSum(d, sortCols, col("toks"), 8)
-            .withColumn("batch", expr("(rnk - 1) div 32"))
-            .groupBy(col("batch"))
-            .agg(count(lit(1)).as("n_docs"), max(col("toks")).as("mx"),
-              sum(col("toks")).as("tok"))
-            .agg(count(lit(1)).as("n_batches"),
-              sum(col("tok")).as("total_tokens"),
-              sum(col("mx") * col("n_docs")).as("total_padded"))
-            .select(lit(strategy).as("strategy"), col("n_batches"),
-              col("total_tokens"), col("total_padded"),
-              ((col("total_padded") - col("total_tokens")).cast("double") /
-                col("total_padded").cast("double")).as("waste_pct"))
-        arm(Seq(col("doc_id")), "naive")
-          .unionByName(arm(Seq(col("toks"), col("doc_id")), "length_sorted"))
-          .orderBy(col("strategy"))
-      },
-      oracle = Some(
-        s"""WITH d AS (SELECT doc_id, CAST(len($wordsSql) AS BIGINT) AS toks FROM documents),
-           |rn AS (SELECT toks, row_number() OVER (ORDER BY doc_id) AS rnk FROM d),
-           |rs AS (SELECT toks, row_number() OVER (ORDER BY toks, doc_id) AS rnk FROM d),
-           |bn AS (SELECT (rnk - 1) // 32 AS batch, count(*) AS n_docs,
-           |    max(toks) AS mx, CAST(sum(toks) AS BIGINT) AS tok FROM rn GROUP BY 1),
-           |bs AS (SELECT (rnk - 1) // 32 AS batch, count(*) AS n_docs,
-           |    max(toks) AS mx, CAST(sum(toks) AS BIGINT) AS tok FROM rs GROUP BY 1),
-           |an AS (SELECT 'naive' AS strategy, count(*) AS n_batches,
-           |    CAST(sum(tok) AS BIGINT) AS total_tokens,
-           |    CAST(sum(mx * n_docs) AS BIGINT) AS total_padded FROM bn),
-           |asrt AS (SELECT 'length_sorted' AS strategy, count(*) AS n_batches,
-           |    CAST(sum(tok) AS BIGINT) AS total_tokens,
-           |    CAST(sum(mx * n_docs) AS BIGINT) AS total_padded FROM bs)
-           |SELECT strategy, n_batches, total_tokens, total_padded,
-           |  CAST(total_padded - total_tokens AS DOUBLE)
-           |    / CAST(total_padded AS DOUBLE) AS waste_pct
-           |FROM (SELECT * FROM an UNION ALL SELECT * FROM asrt)
-           |ORDER BY strategy""".stripMargin),
-      doc = "padding-waste census: naive vs length-sorted batching, exact-integer waste accounting"),
 
     // Robust per-group outlier census: MAD-based flagging (50% breakdown —
     // the cutoff survives the tail it hunts, unlike mean/stddev). Both
@@ -1266,37 +765,9 @@ object QueriesText {
           |FROM h JOIN b USING (digit) CROSS JOIN t ORDER BY h.digit""".stripMargin)),
       doc = "Benford leading-digit forensics census: scaled-integer shares vs log10(1+1/d)"),
 
-    // Epoch-shuffle shard manifest: a fresh deterministic permutation per
-    // epoch (md5 keyed by epoch‖id), sharded; Σ rank·id per (epoch, shard)
-    // pins the ENTIRE read order in one exact integer — the oracle match
-    // certifies the permutation itself, not just shard membership.
-    "pack_epoch_shuffle" -> Q(
-      fn = (s, dir) => {
-        val d = Tables.documents(s, dir).select(col("doc_id"),
-          TextAnalysis.tokenCount(col("text")).as("toks"))
-        graft.operators.Packing.epochShuffleManifest(
-          d, "doc_id", "toks", epochs = 3, shards = 8, salt = "ep1")
-      },
-      oracle = Some(
-        s"""WITH d AS (SELECT doc_id, CAST(len($wordsSql) AS INT) AS toks
-           |  FROM documents),
-           |e AS (SELECT doc_id, toks, unnest(range(3)) AS epoch FROM d),
-           |hx AS (SELECT doc_id, toks, epoch,
-           |    CAST('0x' || substr(md5(concat('ep1', CAST(epoch AS VARCHAR),
-           |      '|', CAST(doc_id AS VARCHAR))), 1, 15) AS BIGINT) AS h FROM e),
-           |r AS (SELECT doc_id, toks, epoch, h, h % 8 AS shard,
-           |    row_number() OVER (PARTITION BY epoch, h % 8
-           |      ORDER BY h, doc_id) AS rank FROM hx)
-           |SELECT epoch, shard, count(*) AS n_docs,
-           |  CAST(sum(toks) AS BIGINT) AS n_tokens,
-           |  min_by(doc_id, rank) AS first_doc,
-           |  CAST(sum(rank * doc_id) AS BIGINT) AS order_checksum
-           |FROM r GROUP BY 1, 2 ORDER BY epoch, shard""".stripMargin),
-      doc = "epoch-shuffle manifest: per-epoch deterministic permutation, order-checksummed"),
-
     // Document chunking: 64-token sliding windows, 16-token overlap
     // (stride 48) — the context-window preprocessing step upstream of
-    // pack_sequences. Chunk text compares by md5 so the output stays narrow.
+    // sequence packing. Chunk text compares by md5 so the output stays narrow.
     "text_chunking" -> Q(
       fn = (s, dir) =>
         TextAnalysis.chunkDocuments(Tables.documents(s, dir), "doc_id", "text",
@@ -1582,64 +1053,6 @@ object QueriesText {
            |SELECT lang, tier, count(*) AS n_docs, CAST(sum(n_tokens) AS BIGINT) AS n_tokens
            |FROM tier GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
       doc = "CCNet pipeline capstone: line dedup -> lang ID -> LM surprisal -> per-lang perplexity terciles"),
-    // The pretraining-corpus capstone: quality gates -> exact dedup ->
-    // lang ID -> alpha=0.5 temperature mix -> shard packing, one plan.
-    // Weight quantization (floor(sqrt*1e9)) and the DECIMAL/HUGEINT budget
-    // division keep every graded value an exact integer.
-    "pipeline_pretrain_mix" -> Q(
-      fn = (s, dir) =>
-        TextAnalysis.pretrainCorpusPlan(Tables.documents(s, dir),
-          "doc_id", "text", budgetTokens = 100000L, shardTokens = 4096)
-          .orderBy(col("lang")),
-      oracle = Some(
-        s"""WITH w0 AS (SELECT doc_id, $wordsSql AS w FROM documents),
-           |m AS (SELECT doc_id, len(w) AS n_words,
-           |    list_sum(list_transform(w, x -> len(x))) AS sum_chars,
-           |    len(list_filter(w, x -> contains(x, '#') OR contains(x, '...'))) AS n_sym,
-           |    len(list_filter(w, x -> regexp_matches(x, '[a-z]'))) AS n_alpha,
-           |    md5(array_to_string(list_sort(list_distinct(w)), ' ')) AS fp
-           |  FROM w0),
-           |ls AS (SELECT doc_id AS id,
-           |  len(list_filter($wordsSql, w -> w IN ('the','a','and','of','to','in','is'))) AS s_en,
-           |  len(list_filter($wordsSql, w -> w IN ('el','la','de','que','y','en','los'))) AS s_es,
-           |  len(list_filter($wordsSql, w -> w IN ('der','die','und','das','von','ist','ein'))) AS s_de,
-           |  len(list_filter($wordsSql, w -> w IN ('le','la','et','les','des','est','une'))) AS s_fr
-           |  FROM documents),
-           |lng AS (SELECT id, CASE
-           |  WHEN s_fr > greatest(s_de, s_es, s_en, 0) THEN 'fr'
-           |  WHEN s_de > greatest(s_es, s_en, 0) THEN 'de'
-           |  WHEN s_es > greatest(s_en, 0) THEN 'es'
-           |  WHEN s_en > 0 THEN 'en'
-           |  ELSE 'und' END AS lang FROM ls),
-           |base AS (SELECT m.doc_id AS id, lng.lang,
-           |    CAST(m.n_words AS BIGINT) AS n_words, m.fp,
-           |    NOT (m.n_words < 20 OR m.n_words > 100000
-           |      OR m.sum_chars < m.n_words * 3 OR m.sum_chars > m.n_words * 10
-           |      OR m.n_sym * 10 > m.n_words OR m.n_alpha * 5 < m.n_words * 4) AS keep
-           |  FROM m JOIN lng ON lng.id = m.doc_id),
-           |q AS (SELECT * FROM base WHERE keep),
-           |win AS (SELECT fp, min(id) AS keep_id FROM q GROUP BY fp),
-           |surv AS (SELECT q.* FROM q JOIN win ON q.fp = win.fp AND q.id = win.keep_id),
-           |pl AS (SELECT lang, count(*) AS docs_in,
-           |    CAST(sum(CASE WHEN keep THEN 1 ELSE 0 END) AS BIGINT) AS docs_quality
-           |  FROM base GROUP BY 1),
-           |sl AS (SELECT lang, count(*) AS docs_final,
-           |    CAST(sum(n_words) AS BIGINT) AS tokens FROM surv GROUP BY 1),
-           |j AS (SELECT pl.lang, pl.docs_in, pl.docs_quality,
-           |    coalesce(sl.docs_final, 0) AS docs_final,
-           |    coalesce(sl.tokens, 0) AS tokens
-           |  FROM pl LEFT JOIN sl ON pl.lang = sl.lang),
-           |j2 AS (SELECT *, CAST(floor(sqrt(CAST(tokens AS DOUBLE)) * 1000000000.0)
-           |    AS BIGINT) AS wq FROM j),
-           |t AS (SELECT CAST(sum(wq) AS BIGINT) AS wq_total FROM j2),
-           |a AS (SELECT j2.*, CASE WHEN t.wq_total = 0 THEN 0
-           |    ELSE CAST((CAST(100000 AS HUGEINT) * j2.wq) // t.wq_total AS BIGINT)
-           |    END AS alloc_tokens FROM j2 CROSS JOIN t)
-           |SELECT lang, docs_in, docs_quality, docs_final, tokens, wq,
-           |  alloc_tokens, (alloc_tokens + 4095) // 4096 AS n_shards
-           |FROM a ORDER BY lang""".stripMargin),
-      doc = "pretraining-corpus capstone: quality gates -> dedup -> lang ID -> temperature mix -> shards"),
-
     // N-gram novelty curve — the "value of the next batch of data"
     // measurement (diminishing-returns census): per arrival batch, the
     // share of its word 3-grams never seen in ANY earlier document.
@@ -1816,68 +1229,6 @@ object QueriesText {
           |FROM t GROUP BY lang ORDER BY lang""".stripMargin),
       doc = "lexical diversity: TTR + windowed MATTR(20), row-local HOF windows, exact BIGINT num/den, round-9 ratios"),
 
-    // Temperature-sweep mixing: the α ∈ {0.25, 0.5, 0.75} operating
-    // points of the pretraining language-mix decision measured off ONE
-    // shared per-language aggregate (tune by re-weighting a tiny stats
-    // table, never by re-scanning the corpus). tokens^α is built from IEEE
-    // correctly-rounded sqrt chains ONLY (α=0.25 → √√x, 0.5 → √x,
-    // 0.75 → √x·√√x), so no libm pow() enters the graded chain; weights
-    // follow the round-6-then-DECIMAL house discipline of mix_epoch_plan.
-    "mix_alpha_sweep" -> Q(
-      fn = (s, dir) => {
-        import org.apache.spark.sql.types.DecimalType
-        val g = Tables.documents(s, dir).filter(col("lang").isNotNull)
-          .select(col("lang"),
-            size(TextAnalysis.words(col("text"))).cast("long").as("t"))
-          .groupBy(col("lang"))
-          .agg(count(lit(1)).as("n_docs"), sum(col("t")).as("n_tokens"))
-        graft.operators.CacheOnce.pin(g); g.count() // feeds the sweep AND the budget total
-        val tok = col("n_tokens").cast("double")
-        val w = g.select(col("lang"), col("n_docs"), col("n_tokens"),
-          explode(array(
-            struct(lit("a25").as("alpha"),
-              round(sqrt(sqrt(tok)), 6).as("weight")),
-            struct(lit("a50").as("alpha"),
-              round(sqrt(tok), 6).as("weight")),
-            struct(lit("a75").as("alpha"),
-              round(sqrt(tok) * sqrt(sqrt(tok)), 6).as("weight"))))
-            .as("aw"))
-          .select(col("lang"), col("n_docs"), col("n_tokens"),
-            col("aw.alpha").as("alpha"), col("aw.weight").as("weight"))
-        val tot = w.groupBy(col("alpha"))
-          .agg(sum(col("weight").cast(DecimalType(28, 6))).as("sum_w"))
-        val tt = g.agg(sum(col("n_tokens")).as("tot_tokens"))
-        w.join(tot, "alpha").crossJoin(tt)
-          .select(col("alpha"), col("lang"), col("n_docs"), col("n_tokens"),
-            col("weight"),
-            round(col("weight") / col("sum_w").cast("double"), 9).as("share"),
-            floor((col("tot_tokens") * 3).cast("double") * col("weight") /
-              col("sum_w").cast("double")).cast("long").as("alloc_tokens"))
-          .orderBy(col("alpha"), col("lang"))
-      },
-      oracle = Some(
-        s"""WITH d AS (SELECT lang, CAST(len($wordsSql) AS BIGINT) AS t
-           |  FROM documents WHERE lang IS NOT NULL),
-           |g AS (SELECT lang, count(*) AS n_docs,
-           |    CAST(sum(t) AS BIGINT) AS n_tokens FROM d GROUP BY 1),
-           |w AS (SELECT lang, n_docs, n_tokens, alpha,
-           |    CASE alpha
-           |      WHEN 'a25' THEN round(sqrt(sqrt(CAST(n_tokens AS DOUBLE))), 6)
-           |      WHEN 'a50' THEN round(sqrt(CAST(n_tokens AS DOUBLE)), 6)
-           |      ELSE round(sqrt(CAST(n_tokens AS DOUBLE))
-           |        * sqrt(sqrt(CAST(n_tokens AS DOUBLE))), 6) END AS weight
-           |  FROM g CROSS JOIN (SELECT unnest(['a25', 'a50', 'a75']) AS alpha) a),
-           |tot AS (SELECT alpha, sum(CAST(weight AS DECIMAL(28,6))) AS sum_w
-           |  FROM w GROUP BY 1),
-           |tt AS (SELECT CAST(sum(n_tokens) AS BIGINT) AS tot_tokens FROM g)
-           |SELECT w.alpha, lang, n_docs, n_tokens, weight,
-           |  round(weight / CAST(sum_w AS DOUBLE), 9) AS share,
-           |  CAST(floor(CAST(tot_tokens * 3 AS DOUBLE) * weight
-           |    / CAST(sum_w AS DOUBLE)) AS BIGINT) AS alloc_tokens
-           |FROM w JOIN tot USING (alpha) CROSS JOIN tt
-           |ORDER BY alpha, lang""".stripMargin),
-      doc = "temperature sweep: three alpha operating points off one language-stats table, sqrt-chain weights (no libm pow)"),
-
     // TextRank corpus keywords (Mihalcea & Tarau, EMNLP'04): PageRank over
     // the word co-occurrence graph. Candidates are alphabetic words of
     // length >= 4 (the POS-filter proxy both engines replay with the same
@@ -1933,68 +1284,6 @@ object QueriesText {
            |ORDER BY rank DESC, word LIMIT 20""".stripMargin
       },
       doc = "TextRank corpus keywords: integer-grid PageRank over the symmetrized word co-occurrence graph"),
-
-    // WordPiece greedy longest-match-first segmentation (Wu et al. 2016 —
-    // the BERT tokenizer's inference rule), with a DATA-DERIVED vocabulary
-    // both engines replay: every observed length-1 substring (coverage —
-    // greedy always advances) + the top-64 substrings of length 2..4 by
-    // Σ word-count (ties by piece). The whole surface is integers: piece
-    // counts, piece-per-word counts, frequency scores — nothing float.
-    // Spark folds each DISTINCT word (the BPE word-histogram reduction)
-    // through 16 broadcast-hash-join rounds (explode ≤4 candidate
-    // substrings, equi-join the broadcast vocab, longest wins via a
-    // partial-aggregable max(struct)); the oracle replays the same greedy
-    // walk as a recursive CTE with a NOT EXISTS longest-match guard.
-    "text_wordpiece_tokenize" -> Q(
-      fn = (s, dir) =>
-        TextAnalysis.wordpieceSegment(Tables.documents(s, dir), "text")
-          .orderBy(col("wc").desc, col("word")).limit(30),
-      oracle = Some(
-        s"""WITH RECURSIVE $subwordVocabCtes,
-           |rec(w, wc, pos, np, sc) AS (
-           |  SELECT w, wc, 1, CAST(0 AS BIGINT), CAST(0 AS BIGINT) FROM wf
-           |  UNION ALL
-           |  SELECT r.w, r.wc, r.pos + v.l, r.np + 1, r.sc + v.c
-           |  FROM rec r JOIN vocab v ON v.piece = substr(r.w, r.pos, v.l)
-           |  WHERE r.pos <= len(r.w)
-           |    AND NOT EXISTS (SELECT 1 FROM vocab v2
-           |      WHERE v2.l > v.l AND v2.piece = substr(r.w, r.pos, v2.l)))
-           |SELECT w AS word, wc, np AS n_pieces, sc AS score_sum
-           |FROM rec WHERE pos > len(w)
-           |ORDER BY wc DESC, word LIMIT 30""".stripMargin),
-      doc = "WordPiece greedy longest-match segmentation with in-query data-derived vocabulary (integer-only surface)"),
-
-    // OPTIMAL segmentation under the same vocabulary — the DP objective
-    // (max total piece frequency, ties to fewest pieces) that WordPiece's
-    // greedy rule only approximates; SentencePiece's Viterbi decode shape
-    // (Kudo 2018). Spark runs a layered frontier DP (one best (score, −np)
-    // state per (word, endpos) — lexicographic order survives extension,
-    // so per-endpos max IS the DP), 16 broadcast-join rounds. The oracle
-    // can't fold a DP, so it ENUMERATES every segmentation of the 30
-    // graded words via a recursive CTE (path count per word ≤
-    // tetranacci(16) ≈ 2·10⁴ — bounded because only the graded top-30
-    // recurse; the vocab still derives from the full corpus) and takes the
-    // argmax. By construction viterbi best_score ≥ the greedy score —
-    // VocabCoverageSpec asserts dominance row-by-row.
-    "text_unigram_viterbi" -> Q(
-      fn = (s, dir) =>
-        TextAnalysis.viterbiSegment(Tables.documents(s, dir), "text")
-          .orderBy(col("wc").desc, col("word")).limit(30),
-      oracle = Some(
-        s"""WITH RECURSIVE $subwordVocabCtes,
-           |top30 AS (SELECT w, wc FROM wf ORDER BY wc DESC, w LIMIT 30),
-           |rec(w, wc, pos, np, sc) AS (
-           |  SELECT w, wc, 1, CAST(0 AS BIGINT), CAST(0 AS BIGINT) FROM top30
-           |  UNION ALL
-           |  SELECT r.w, r.wc, r.pos + v.l, r.np + 1, r.sc + v.c
-           |  FROM rec r JOIN vocab v ON v.piece = substr(r.w, r.pos, v.l)
-           |  WHERE r.pos <= len(r.w))
-           |SELECT word, wc, best_score, n_pieces_opt FROM (
-           |  SELECT w AS word, wc, sc AS best_score, np AS n_pieces_opt,
-           |    row_number() OVER (PARTITION BY w ORDER BY sc DESC, np) AS rk
-           |  FROM rec WHERE pos > len(w)) t
-           |WHERE rk = 1 ORDER BY wc DESC, word""".stripMargin),
-      doc = "optimal (Viterbi) subword segmentation: layered frontier DP vs the oracle's exhaustive path enumeration"),
 
     // Distinctive terms per source — the corpus-exploration readout BERTopic
     // calls class-TF-IDF, restated without logs so the ranking is exact:
@@ -2222,68 +1511,5 @@ object QueriesText {
            |    / CAST(CAST(n_tokens AS HUGEINT) * (n_tokens - 1) AS DOUBLE),
            |    9) + 0.0 AS simpson_diversity
            |FROM a WHERE n_tokens >= 2 ORDER BY source""".stripMargin),
-      doc = "Gini-Simpson vocabulary concentration per source: exact rational repeat-rate, digit-string num/den, one IEEE division"),
-
-    // Split balance audit: Cramér's V between the deterministic 8/1/1 hash
-    // split and the source axis — the check that a hash split did NOT skew
-    // any source into one fold (V ≈ 0 ⇔ split ⊥ source; compare
-    // sample_group_kfold, where fold = f(source) makes V = 1 BY DESIGN and
-    // this audit is the wrong tool). Same 10¹² integer-grid χ² as
-    // profile_cramers_v — exact cell divisions, no cross-cell float sum —
-    // plus the per-(split, source) cell census for the top deviations.
-    "split_balance_cramers" -> Q(
-      fn = (s, dir) => {
-        val dec = org.apache.spark.sql.types.DecimalType(38, 0)
-        val d = Tables.documents(s, dir)
-          .select(splitOf(col("doc_id")).as("split"), col("source"))
-        val cells = d.groupBy(col("split"), col("source"))
-          .agg(count(lit(1)).as("nij"))
-        val rm = cells.groupBy(col("split")).agg(sum(col("nij")).as("rm"))
-        val cm = cells.groupBy(col("source")).agg(sum(col("nij")).as("cm"))
-        val terms = cells.join(broadcast(rm), "split")
-          .join(broadcast(cm), "source")
-          .withColumn("term", expr("(CAST(nij AS DECIMAL(38,0)) * nij" +
-            " * 1000000000000) div (CAST(rm AS DECIMAL(38,0)) * cm)"))
-        val agg = terms.agg(sum(col("nij")).as("n"),
-          sum(col("term").cast(dec)).as("sfp"),
-          countDistinct(col("split")).as("nr"),
-          countDistinct(col("source")).as("nc"))
-        agg.withColumn("chi2_fp", greatest(
-            (col("n").cast(dec) * col("sfp")
-              - col("n").cast(dec) * lit(1000000000000L)).cast(dec),
-            lit(0).cast(dec)))
-          .select(col("n").as("n_docs"), col("nr").as("n_splits"),
-            col("nc").as("n_sources"),
-            col("chi2_fp").cast("string").as("chi2_fp"),
-            (round(sqrt(col("chi2_fp").cast("double")
-              / (col("n").cast("double")
-                * (least(col("nr"), col("nc")) - 1L).cast("double")
-                * lit(1.0e12))), 9) + 0.0).as("cramers_v"))
-      },
-      oracle = Some(
-        s"""WITH corpus AS (SELECT doc_id, source FROM documents),
-           |$splitCte,
-           |cells AS (SELECT sp.split, c.source, count(*) AS nij
-           |  FROM corpus c JOIN sp ON c.doc_id = sp.id GROUP BY 1, 2),
-           |r AS (SELECT split, sum(nij) AS rm FROM cells GROUP BY 1),
-           |cc AS (SELECT source, sum(nij) AS cm FROM cells GROUP BY 1),
-           |terms AS (SELECT cells.nij,
-           |    (CAST(cells.nij AS HUGEINT) * cells.nij * 1000000000000)
-           |      // (CAST(r.rm AS HUGEINT) * cc.cm) AS term
-           |  FROM cells JOIN r USING (split) JOIN cc USING (source)),
-           |a AS (SELECT sum(nij) AS n, sum(term) AS sfp,
-           |    (SELECT count(*) FROM r) AS nr,
-           |    (SELECT count(*) FROM cc) AS nc FROM terms),
-           |z AS (SELECT n, nr, nc,
-           |    greatest(CAST(n AS HUGEINT) * sfp
-           |      - CAST(n AS HUGEINT) * 1000000000000, 0) AS chi2
-           |  FROM a)
-           |SELECT CAST(n AS BIGINT) AS n_docs, CAST(nr AS BIGINT) AS n_splits,
-           |  CAST(nc AS BIGINT) AS n_sources,
-           |  CAST(chi2 AS VARCHAR) AS chi2_fp,
-           |  round(sqrt(CAST(chi2 AS DOUBLE)
-           |    / (CAST(n AS DOUBLE) * CAST(least(nr, nc) - 1 AS DOUBLE)
-           |      * CAST(1000000000000.0 AS DOUBLE))), 9) + 0.0 AS cramers_v
-           |FROM z""".stripMargin),
-      doc = "hash-split balance audit: split×source Cramér's V on the 10¹² integer grid — near-0 certifies the 8/1/1 split skews no source"))
+      doc = "Gini-Simpson vocabulary concentration per source: exact rational repeat-rate, digit-string num/den, one IEEE division"))
 }

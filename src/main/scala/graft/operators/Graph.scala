@@ -400,16 +400,17 @@ object Graph {
     * overhead (measured: ~0.2 s vs ~4 s at sf0.1). Above the threshold the
     * distributed pointer-jump loop takes over unchanged.
     *
-    * Returns (id, cluster) — cluster is the component's min id. */
-  def resolveClusters(pairs: DataFrame, idA: String = "id_a", idB: String = "id_b",
-                      maxIter: Int = 20,
+    * `pairs` holds the edges as (id_a, id_b); the distributed loop stops
+    * after 20 rounds. Returns (id, cluster) — cluster is the component's
+    * min id. */
+  def resolveClusters(pairs: DataFrame,
                       localEdgeThreshold: Long = 4L << 20): DataFrame = {
     // Eager localCheckpoint severs the pair-generation lineage: without it,
     // EVERY round's plan re-embeds (and Catalyst re-optimizes) the whole
     // upstream pair-generating pipeline — the classic iterative-DataFrame
     // trap (a near-dup resolution over this kernel went 152 s → ~5 s at
     // sf0.1 from this change).
-    val p = pairs.select(col(idA).as("src"), col(idB).as("dst")).localCheckpoint()
+    val p = pairs.select(col("id_a").as("src"), col("id_b").as("dst")).localCheckpoint()
     val integral = p.schema.fields.forall(f => f.dataType match {
       case org.apache.spark.sql.types.LongType | org.apache.spark.sql.types.IntegerType => true
       case _ => false
@@ -427,7 +428,7 @@ object Graph {
       .localCheckpoint()
     var iter = 0
     var changed = 1L
-    while (changed > 0 && iter < maxIter) {
+    while (changed > 0 && iter < 20) {
       // step 1: adopt the min label in the neighborhood
       val nbrMin = edges
         .join(labels.withColumnRenamed("id", "dst"), Seq("dst"))

@@ -144,7 +144,7 @@ object Layout {
     * folder), the compactor's natural unit — partitions are folder-sized,
     * never corpus-sized, so the sort inside each window stays bounded at
     * 100 TB (the same argument as the keyed quantile windows; a global
-    * unpartitioned window here would be the vocabCoverage mistake).
+    * unpartitioned window here would sort every file in one task).
     *
     * Returns one row per planned output batch:
     * (bucket_id, folder, bin, n_files, total_bytes, first_name, last_name). */

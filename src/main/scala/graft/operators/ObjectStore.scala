@@ -129,8 +129,8 @@ object ObjectStore {
     * order — the reference pages the same way), so buckets batch in
     * parallel; within one bucket the numbering is a single sorted task,
     * matching the reference's own serial paging. A corpus-wide admin sweep
-    * over ONE giant bucket would pre-shard by name range first (the
-    * [[Packing]] construction). */
+    * over ONE giant bucket would pre-shard by name range first, so each
+    * shard numbers its batches in its own task. */
   def adminDeleteBatches(objects: DataFrame, bucket: String, before: Column,
                          batchSize: Int = 500): DataFrame = {
     val doomed = objects

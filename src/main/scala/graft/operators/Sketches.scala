@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
   *
   * Portability contract (the reason this is hash-checkable cross-engine):
   *  - the hash is the repo's portable md5-60-bit kernel (same as
-  *    [[TextAnalysis]] winnowing / [[Sampling]]): top p=12 bits select the
+  *    [[TextAnalysis]] winnowing): top p=12 bits select the
   *    register, low 48 bits feed the rank (leading-zeros) count, so rank ∈
   *    [1, 49] and the scaled harmonic term 2^(49-rank) is an exact BIGINT.
   *  - the harmonic mean is summed as exact integers (sum ≤ m·2^49 = 2^61,

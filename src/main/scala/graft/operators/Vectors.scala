@@ -612,7 +612,7 @@ object Vectors {
     * Scale shape: NO global cumulative window. The corpus is range-
     * partitioned by key once; each round is (a) one partition-census
     * aggregate (P rows to the driver — the prefix-offset pattern shared
-    * with `TextAnalysis.vocabCoverage`), (b) ONE range shard scanned with a
+    * with [[Prefix.withRankAndCumSum]]), (b) ONE range shard scanned with a
     * partition-local running sum to find the crossing row. D² values round
     * to 6 dp and accumulate as DECIMAL(38,6), so partition-wise association
     * equals any sequential scan bit-for-bit — the cross-engine (and

@@ -77,15 +77,12 @@ class CacheHygieneSpec extends SparkTestBase {
     assertClean("unigramSurprisalTiered")(
       TextAnalysis.unigramSurprisalTiered(docs, "doc_id", "text", 3))
     assertClean("kneserNeyBigram")(TextAnalysis.kneserNeyBigram(docs, "text"))
-    assertClean("vocabCoverage")(TextAnalysis.vocabCoverage(docs, "text"))
     assertClean("exactQuantiles")(TextAnalysis.exactQuantiles(
       (1 to 100).map(_.toLong).toDF("v"), "v"))
     assertClean("groupedQuantiles")(TextAnalysis.groupedQuantiles(
       (1 to 100).map(i => (s"g${i % 3}", i.toLong)).toDF("g", "v"), "g", "v"))
     assertClean("tfidfTopTerms")(TextAnalysis.tfidfTopTerms(docs, "doc_id", "text"))
     assertClean("bm25")(TextAnalysis.bm25(docs, "doc_id", "text", Seq("alpha")))
-    assertClean("wordpieceSegment")(TextAnalysis.wordpieceSegment(docs, "text"))
-    assertClean("viterbiSegment")(TextAnalysis.viterbiSegment(docs, "text"))
     assertClean("madOutliers")(Profile.madOutliers(
       (1 to 100).map(i => (s"g${i % 2}", (i % 17).toLong)).toDF("g", "v"), "g", "v"))
     assertClean("gapFillHourly")(Temporal.gapFillHourly(

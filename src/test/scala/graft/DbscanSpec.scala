@@ -1,7 +1,6 @@
 package graft
 
 import graft.operators.Vectors
-import org.apache.spark.sql.functions._
 
 /** [[Vectors.dbscan]] semantics: the core/border/noise trichotomy on a
   * hand-built geometry, and exactness of the annulus-pruned ε-join against a

@@ -315,23 +315,6 @@ class DedupVectorsSpec extends SparkTestBase {
     assert(got(1).toSeq == Seq(2L, 0, 0, 0, "clean text"))
   }
 
-  test("stratified hash sampling is deterministic and respects rates") {
-    val d = Tables.documents(spark, sfDir)
-      .withColumn("stratum", when($"doc_id" % 2 === 0, "a").otherwise("b"))
-    def keptIds(parts: Int) = graft.operators.Sampling.stratifiedHashSample(
-      d.repartition(parts), "stratum", "doc_id",
-      Map("a" -> 0.5), defaultFraction = 0.1)
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    val k4 = keptIds(4)
-    assert(k4 == keptIds(13), "sample must not depend on partitioning")
-    val nA = d.filter($"stratum" === "a").count()
-    val keptA = k4.count(_ % 2 == 0)
-    assert(math.abs(keptA.toDouble / nA - 0.5) < 0.15, s"a-rate off: $keptA/$nA")
-    // default fraction applies to strata absent from the map
-    val keptB = k4.count(_ % 2 == 1)
-    assert(keptB > 0 && keptB < nA * 0.3)
-  }
-
   test("upsert is last-wins by priority and deterministic") {
     val batches = Seq((1L, "v1", 1), (1L, "v2", 2), (2L, "w1", 1))
       .toDF("key", "value", "priority")

@@ -2,7 +2,6 @@ package graft
 
 import graft.functions.TokenCodec
 import graft.operators.Listing
-import org.apache.spark.sql.functions._
 
 /** Listing semantics against a reference-shaped fixture: delimiter collapse,
   * folder-row NULL shape, cursors, caps — mirrors the behaviors inventoried

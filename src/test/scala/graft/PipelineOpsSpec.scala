@@ -1,11 +1,10 @@
 package graft
 
-import graft.operators.{Linkage, Packing, Profile, Sampling, TextAnalysis}
-import org.apache.spark.sql.Row
+import graft.operators.{Linkage, Profile, TextAnalysis}
 import org.apache.spark.sql.functions._
 
-/** Round-3 pipeline additions: C4/Gopher filter battery, importance-weighted
-  * sampling, unigram-LM surprisal, token-budget sequence packing. */
+/** Round-3 pipeline additions: C4/Gopher filter battery, unigram-LM
+  * surprisal, language-model and profiling kernels. */
 class PipelineOpsSpec extends SparkTestBase {
   import spark.implicits._
 
@@ -36,25 +35,6 @@ class PipelineOpsSpec extends SparkTestBase {
       assert(!rows(id).getAs[Boolean](failFlag), s"doc $id should fail $failFlag")
       assert(!rows(id).getAs[Boolean]("keep"), s"doc $id should not be kept")
     }
-  }
-
-  test("weightedHashSample: clamped extremes, monotone in weight, partition-stable") {
-    val df = Tables.documents(spark, sfDir).select(col("doc_id"))
-    val n = df.count()
-    assert(Sampling.weightedHashSample(df, "doc_id", lit(1.0), "s").count() == n)
-    assert(Sampling.weightedHashSample(df, "doc_id", lit(2.5), "s").count() == n)
-    assert(Sampling.weightedHashSample(df, "doc_id", lit(0.0), "s").count() == 0)
-    assert(Sampling.weightedHashSample(df, "doc_id", lit(-1.0), "s").count() == 0)
-    // same salt ⇒ the kept set is monotone in the weight (same bucket per row)
-    val lo = Sampling.weightedHashSample(df, "doc_id", lit(0.3), "s")
-      .collect().map(_.getLong(0)).toSet
-    val hi = Sampling.weightedHashSample(df, "doc_id", lit(0.7), "s")
-      .collect().map(_.getLong(0)).toSet
-    assert(lo.subsetOf(hi))
-    // physical layout never changes the kept set
-    val re = Sampling.weightedHashSample(df.repartition(7), "doc_id", lit(0.3), "s")
-      .collect().map(_.getLong(0)).toSet
-    assert(re == lo)
   }
 
   test("unigramSurprisal: rare-word docs score above boilerplate docs") {
@@ -103,7 +83,6 @@ class PipelineOpsSpec extends SparkTestBase {
   }
 
   test("heavyHitters: exact result, partitioning-independent, superset proof exercised") {
-    import spark.implicits._
     val tok = Tables.documents(spark, sfDir)
       .select(explode(TextAnalysis.words(col("text"))).as("item"))
     def run(df: org.apache.spark.sql.DataFrame) =
@@ -219,30 +198,6 @@ class PipelineOpsSpec extends SparkTestBase {
     assert(bare.isEmpty)
   }
 
-  test("fixedKPerStratum: exact budget, matches the window formulation, rerun-stable") {
-    val docs = Tables.documents(spark, sfDir)
-    val got = graft.operators.Sampling.fixedKPerStratum(docs, "lang", "doc_id", 7, "s1")
-      .orderBy(col("lang"), col("doc_id")).collect()
-      .map(r => (r.getString(0), r.getLong(1))).toSeq
-    // window/row_number reference (fine at test scale)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("lang"))
-      .orderBy(graft.operators.Sampling.sampleBucket(col("doc_id"), "s1"), col("doc_id"))
-    val want = docs.withColumn("rn", row_number().over(w)).filter(col("rn") <= 7)
-      .select(col("lang"), col("doc_id"))
-      .orderBy(col("lang"), col("doc_id")).collect()
-      .map(r => (r.getString(0), r.getLong(1))).toSeq
-    assert(got.nonEmpty && got == want)
-    // exact budget per stratum (every fixture lang has >= 7 docs)
-    assert(got.groupBy(_._1).values.forall(_.size == 7))
-    // deterministic across reruns (placement-insensitive partials)
-    val again = graft.operators.Sampling.fixedKPerStratum(
-      docs.repartition(7), "lang", "doc_id", 7, "s1")
-      .orderBy(col("lang"), col("doc_id")).collect()
-      .map(r => (r.getString(0), r.getLong(1))).toSeq
-    assert(again == got)
-  }
-
   test("bigramLm: pair counts, context totals, conditional probabilities") {
     import spark.implicits._
     val df = Seq("a b a b c", "a b").toDF("text")
@@ -253,16 +208,6 @@ class PipelineOpsSpec extends SparkTestBase {
     // bigrams: (a,b)x3, (b,a)x1, (b,c)x1 → p(b|a)=1.0, p(a|b)=0.5, p(c|b)=0.5
     assert(got == Seq(("a", "b", 3L, 3L, 1.0),
       ("b", "a", 1L, 2L, 0.5), ("b", "c", 1L, 2L, 0.5)))
-  }
-
-  test("bpePairCounts: histogram-weighted adjacent pairs; 1-char words excluded") {
-    import spark.implicits._
-    val df = Seq("ab ab cd a", "ab x").toDF("text")
-    val got = TextAnalysis.bpePairCounts(df, "text")
-      .orderBy(col("n").desc, col("pair"))
-      .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-    // word histogram: ab=3, cd=1, a=1, x=1 → pairs: "ab"x3, "cd"x1
-    assert(got == Seq(("ab", 3L), ("cd", 1L)))
   }
 
   test("qualityClassifierScore: exact weight sums, bias shifts the keep gate") {
@@ -276,75 +221,6 @@ class PipelineOpsSpec extends SparkTestBase {
     val lo = TextAnalysis.qualityClassifierScore(df, "doc_id", "text", weights, -0.6)
       .collect().map(r => r.getLong(0) -> (r.getDouble(2), r.getBoolean(3))).toMap
     assert(lo == Map(1L -> (1.0, false), 2L -> (1.5, false)))
-  }
-
-  test("bpeTrain: merge sequence with run overlap and count ties") {
-    import spark.implicits._
-    // histogram: aaab x2, ab x1. aaab = (a,a),(a,a),(a,b) weighted 2 →
-    // iter1: "a a"=4 beats "a b"=3; greedy left-to-right merge turns
-    // "a a a b" into "aa a b" (third a survives — the run-overlap case).
-    // iter2: ("aa","a")=2 < ("a","b")=3 → merge "a b".
-    // iter3: only pair left is ("aa","ab")=2 ("ab" is word 2 entire).
-    val df = Seq("aaab aaab ab").toDF("text")
-    val got = TextAnalysis.bpeTrain(df, "text", 3)
-      .orderBy(col("iter"))
-      .collect().map(r => (r.getInt(0), r.getString(1), r.getString(2), r.getLong(3))).toSeq
-    assert(got == Seq((1, "a a", "aa", 4L), (2, "a b", "ab", 3L),
-      (3, "aa ab", "aaab", 2L)))
-  }
-
-  test("mergePairGreedy: Sennrich semantics on homogeneous runs (pairs 1-2, 3-4, ...)") {
-    import spark.implicits._
-    val cases = Seq(
-      ("a a",       Seq("aa")),
-      ("a a a",     Seq("aa", "a")),
-      ("a a a a",   Seq("aa", "aa")),        // the separator-consuming replace got this wrong
-      ("a a a a a", Seq("aa", "aa", "a")),
-      ("b a a b",   Seq("b", "aa", "b")),
-      ("b",         Seq("b")))
-    for ((in, want) <- cases) {
-      val got = Seq(in).toDF("s")
-        .select(TextAnalysis.mergePairGreedy(split(col("s"), " "), "a", "a").as("m"))
-        .head.getSeq[String](0).toSeq
-      assert(got == want, s"input '$in'")
-    }
-  }
-
-  test("vocabCoverage: smallest head reaching each cumulative share") {
-    import spark.implicits._
-    // counts: x=6, y=3, z=1 → total 10; cum: 6 (60%), 9 (90%), 10 (100%)
-    val df = Seq("x x x x x x y y y z").toDF("text")
-    val got = TextAnalysis.vocabCoverage(df, "text", Seq(50, 90, 99))
-      .orderBy(col("threshold_pct"))
-      .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
-    assert(got == Seq((50, 1L, 6L, 10L), (90, 2L, 9L, 10L), (99, 3L, 10L, 10L)))
-  }
-
-  test("packing: exhaustive assignment, bin bound, matches local recompute") {
-    val budget = 128
-    val d = Tables.documents(spark, sfDir).select(col("doc_id"),
-      TextAnalysis.tokenCount(col("text")).as("toks"))
-    val assigned = Packing.assignBins(d, "doc_id", "toks", budget, 4, "t")
-      .select("doc_id", "toks", "shard", "seq_id")
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(3)))
-    // every doc assigned exactly once
-    assert(assigned.map(_._1).distinct.length == d.count())
-    // local reference: same shard hash, cumulative fill per shard in id order
-    val maxDoc = assigned.map(_._2).max
-    assigned.groupBy(_._3).foreach { case (_, rows) =>
-      var cum = 0L
-      rows.sortBy(_._1).foreach { case (_, toks, _, seq) =>
-        cum += toks
-        assert(seq == (cum - 1) / budget, "bin must be the cumulative-end bin")
-      }
-    }
-    // with all docs under budget, a bin never exceeds budget + maxDoc − 1
-    val binTotals = assigned.groupBy(r => (r._3, r._4)).map(_._2.map(_._2.toLong).sum)
-    assert(binTotals.forall(_ <= budget + maxDoc - 1))
-    // layout-independent: repartition changes nothing
-    val re = Packing.assignBins(d.repartition(5), "doc_id", "toks", budget, 4, "t")
-      .select("doc_id", "seq_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(re == assigned.map(r => (r._1, r._4)).toSet)
   }
 
   test("kmeansRefine: matches local Lloyd reference and lowers distortion") {
@@ -404,20 +280,6 @@ class PipelineOpsSpec extends SparkTestBase {
     assert(rows.filter(_._1 == 2L).toSeq == Seq((2L, 0, 1, 3)))
   }
 
-  test("packStats: totals and fill ratios are consistent") {
-    val d = Seq((1L, 100), (2L, 100), (3L, 100), (4L, 100), (5L, 100))
-      .toDF("doc_id", "toks")
-    // single shard makes the packing sequential: 512-budget fits docs 1-5
-    // at cum 100..500 into seq 0
-    val stats = Packing.packStats(
-      Packing.assignBins(d, "doc_id", "toks", 512, 1, "z"), "doc_id", "toks", 512)
-      .collect()
-    assert(stats.length == 1)
-    val r = stats.head
-    assert(r.getAs[Long]("n_docs") == 5 && r.getAs[Long]("n_tokens") == 500)
-    assert(r.getAs[Double]("fill_ratio") == 500.0 / 512)
-  }
-
   test("linearTrend recovers an exact fit; degenerate x gives NULL slope") {
     import graft.operators.Profile
     // g1: perfect line y = 3x + 7; g2: all points share one x
@@ -456,37 +318,6 @@ class PipelineOpsSpec extends SparkTestBase {
       r.forall { case (k2, v) => v.toSeq == r2(k2).toSeq })
   }
 
-  test("epochShuffleManifest: rerun-stable, epoch-distinct, complete") {
-    val d = (1 to 300).map(i => (i.toLong, 10)).toDF("doc_id", "toks")
-    val a = Packing.epochShuffleManifest(d, "doc_id", "toks", 3, 4, "s1")
-      .collect()
-    val b = Packing.epochShuffleManifest(d.repartition(7), "doc_id", "toks",
-      3, 4, "s1").collect()
-    assert(a.toSeq == b.toSeq, "manifest must be partitioning/rerun stable")
-    // every epoch covers all docs
-    val perEpoch = a.groupBy(_.getAs[Int]("epoch"))
-      .map { case (e, rs) => e -> rs.map(_.getAs[Long]("n_docs")).sum }
-    assert(perEpoch.values.forall(_ == 300L))
-    // different epochs deal different orders: the checksum multiset differs
-    val sums = a.groupBy(_.getAs[Int]("epoch"))
-      .map { case (e, rs) => e -> rs.map(r => (r.getAs[Long]("shard"),
-        r.getAs[Long]("order_checksum"))).toSet }
-    assert(sums(0) != sums(1) && sums(1) != sums(2))
-  }
-
-  test("epochShuffleManifest: quote-bearing salt is literal data, not SQL text") {
-    val d = (1 to 50).map(i => (i.toLong, 10)).toDF("doc_id", "toks")
-    // a salt containing quotes/escapes would splice into the hash SQL if it
-    // were string-interpolated; as a Column literal it just changes the deal
-    val a = Packing.epochShuffleManifest(d, "doc_id", "toks", 1, 2, "o'br\\ien")
-      .collect()
-    val b = Packing.epochShuffleManifest(d, "doc_id", "toks", 1, 2, "").collect()
-    assert(a.map(_.getAs[Long]("n_docs")).sum == 50L)
-    val ck = (rs: Array[org.apache.spark.sql.Row]) =>
-      rs.map(r => (r.getAs[Long]("shard"), r.getAs[Long]("order_checksum"))).toSet
-    assert(ck(a) != ck(b), "different salts must deal different permutations")
-  }
-
   test("kneserNeyBigram matches the hand-computed smoothing on a tiny corpus") {
     val docs = Seq("a b", "c b", "a d").toDF("text")
     val r = TextAnalysis.kneserNeyBigram(docs, "text").collect()
@@ -513,82 +344,6 @@ class PipelineOpsSpec extends SparkTestBase {
     val b = TextAnalysis.kneserNeyBigram(docs.repartition(13), "text")
       .orderBy(col("w1"), col("w2")).collect()
     assert(a.toSeq == b.toSeq)
-  }
-
-  test("epochMixPlan: shares sum to ~1, α=0.5 compresses skew, cap binds") {
-    // three domains with 100:25:4 token skew (ten-word docs)
-    val docs = ((1 to 100).map(i => ("web", s"w$i a b c d e f g h i")) ++
-      (1 to 25).map(i => ("code", s"c$i a b c d e f g h i")) ++
-      (1 to 4).map(i => ("ref", s"r$i a b c d e f g h i")))
-      .toDF("domain", "text")
-    val plan = Sampling.epochMixPlan(docs, "domain", "text",
-      budgetMultiplier = 3, maxRepeat = 4).collect()
-    assert(plan.map(_.getAs[String]("domain")).toSeq ==
-      Seq("code", "ref", "web"))
-    val shares = plan.map(_.getAs[Double]("share"))
-    assert(math.abs(shares.sum - 1.0) < 1e-9)
-    // α=0.5: token share of web is 100/129 ≈ .78, weight share √100/Σ√ ≈ .59
-    val web = plan.find(_.getString(0) == "web").get
-    assert(web.getAs[Double]("share") < 0.65)
-    // the small domain's implied epochs exceed the cap → n_repeats == cap
-    val ref = plan.find(_.getString(0) == "ref").get
-    assert(ref.getAs[Double]("epochs") > 4.0)
-    assert(ref.getAs[Long]("n_repeats") == 4L)
-    // budget conservation: allocations sum to ≤ budget, within one floor
-    // per domain of it
-    val tot = plan.map(_.getAs[Long]("n_tokens")).sum
-    val alloc = plan.map(_.getAs[Long]("alloc_tokens")).sum
-    assert(alloc <= 3L * tot && alloc > 3L * tot - plan.length)
-  }
-  test("pretrainCorpusPlan: funnel monotone, duplicates drop, budget conserved") {
-    // 6 docs >= 20 words; docs 5 and 6 are exact word-set duplicates of 4
-    val mk = (i: Int) => ("alpha beta gamma delta epsilon zeta eta theta " +
-      s"iota kappa lambda mu nu xi omicron pi rho sigma tau upsilon word$i x$i")
-    val docs = (Seq((1L, mk(1)), (2L, mk(2)), (3L, mk(3)), (4L, mk(4)),
-      (5L, mk(4)), (6L, mk(4))) :+ ((7L, "short doc")))
-      .toDF("doc_id", "text")
-    val out = TextAnalysis.pretrainCorpusPlan(docs, "doc_id", "text",
-      budgetTokens = 1000L, shardTokens = 16).collect()
-    val docsIn = out.map(_.getAs[Long]("docs_in")).sum
-    val docsQ = out.map(_.getAs[Long]("docs_quality")).sum
-    val docsF = out.map(_.getAs[Long]("docs_final")).sum
-    assert(docsIn == 7L)
-    assert(docsQ == 6L, "the 2-word doc fails the word floor")
-    assert(docsF == 4L, "docs 5/6 dedup onto doc 4's fingerprint")
-    assert(docsF <= docsQ && docsQ <= docsIn)
-    // floor allocation never exceeds the budget; shards cover the alloc
-    val alloc = out.map(_.getAs[Long]("alloc_tokens"))
-    assert(alloc.sum <= 1000L)
-    out.foreach { r =>
-      assert(r.getAs[Long]("n_shards") * 16L >= r.getAs[Long]("alloc_tokens"))
-    }
-  }
-
-  test("group k-fold: no source spans folds; censuses partition the corpus") {
-    val docs = Tables.documents(spark, sfDir)
-    val folds = Registry.all("sample_group_kfold").fn(spark, sfDir).collect()
-    val totalSources = docs.select(countDistinct(col("source"))).head().getLong(0)
-    val totalDocs = docs.count()
-    assert(folds.map(_.getLong(1)).sum == totalSources,
-      "per-fold distinct sources must sum to the global distinct count " +
-        "(a source spanning folds would double-count)")
-    assert(folds.map(_.getLong(2)).sum == totalDocs)
-  }
-
-  test("Poisson bootstrap: per-rep mass concentrates around the corpus size") {
-    val docs = Tables.documents(spark, sfDir).count()
-    val reps = Registry.all("sample_poisson_bootstrap").fn(spark, sfDir).collect()
-    assert(reps.length == 10)
-    reps.foreach { r =>
-      val (hit, sumW) = (r.getLong(1), r.getLong(2))
-      // E[sum_w] = n, sd = sqrt(n); 10 sd is astronomically safe and still
-      // catches a broken CDF inversion (all-0 or all-6 weights)
-      assert(math.abs(sumW - docs) <= 10 * math.sqrt(docs.toDouble) + 10,
-        s"rep ${r.get(0)}: sum_w $sumW vs n $docs")
-      // P(w>0) = 1 - 1/e ~ 0.632
-      assert(hit > docs / 2 && hit < (docs * 3) / 4,
-        s"rep ${r.get(0)}: hit $hit of $docs")
-    }
   }
 
 }

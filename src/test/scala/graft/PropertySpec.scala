@@ -148,40 +148,6 @@ class PropertySpec extends SparkTestBase {
     assert(got == want)
   }
 
-  // ── portable row-local kernels == their SQL-expressible formulations ──
-
-  test("mergePairGreedy equals the sequential greedy fold on random symbol runs") {
-    import spark.implicits._
-    // local reference: Sennrich's greedy left-to-right non-overlapping merge
-    def localMerge(syms: Vector[String], p1: String, p2: String): Vector[String] = {
-      val out = Vector.newBuilder[String]
-      var i = 0
-      while (i < syms.length) {
-        if (i + 1 < syms.length && syms(i) == p1 && syms(i + 1) == p2) {
-          out += (p1 + p2); i += 2
-        } else { out += syms(i); i += 1 }
-      }
-      out.result()
-    }
-    val rnd = new scala.util.Random(42L)
-    val alphabet = Vector("a", "b", "ab")
-    val pairs = Seq(("a", "a"), ("a", "b"), ("b", "a"), ("ab", "b"))
-    for ((p1, p2) <- pairs) {
-      // 60 random symbol sequences per pair, run-heavy by construction —
-      // one Spark job per pair (cases ride as rows, not separate queries)
-      val cases = (0 until 60).map { i =>
-        val n = rnd.nextInt(13)
-        (i.toLong, Vector.fill(n)(alphabet(rnd.nextInt(3))))
-      }
-      val got = cases.toDF("id", "syms")
-        .select(col("id"), graft.operators.TextAnalysis
-          .mergePairGreedy(col("syms"), p1, p2).as("m"))
-        .orderBy(col("id")).collect()
-        .map(r => r.getSeq[String](1).toVector)
-      val want = cases.map { case (_, syms) => localMerge(syms, p1, p2) }
-      assert(got.toSeq == want, s"pair ($p1, $p2)")
-    }
-  }
   // ── codegen hash kernels vs independent models ──
 
   test("Djb2Uint32 matches the JS int32-wrap model on random keys (incl. non-ASCII)") {

@@ -2,7 +2,6 @@ package graft
 
 import graft.operators.Scanner
 import graft.sources.FileListing
-import org.apache.spark.sql.functions._
 
 import java.nio.file.{Files, Paths}
 

@@ -111,7 +111,6 @@ class StatsSpec extends SparkTestBase {
   }
 
   test("profile_gini: closed forms — uniform is 0, one-hot approaches (n-1)/n") {
-    import spark.implicits._
     // Re-express the query's arithmetic on crafted counts via the same
     // sorted-rank identity, pinned to the analytic values.
     def gini(counts: Seq[Long]): Double = {
@@ -630,33 +629,6 @@ class StatsSpec extends SparkTestBase {
       assert(alarms == alarmsF, s"$et integer vs float gate diverge")
       assert(wh == worst._2 && wd == worst._1.toString, s"$et worst hour mismatch")
     }
-  }
-
-  test("split_balance_cramers: chi2 matches a BigInt replay; hash split is balanced") {
-    val row = Registry.all("split_balance_cramers").fn(spark, sfDir).collect()(0)
-    val cells = Tables.documents(spark, sfDir)
-      .select(col("doc_id"), col("source")).collect()
-      .map { r =>
-        val id = r.getLong(0)
-        val hex = java.security.MessageDigest.getInstance("MD5")
-          .digest(s"split1$id".getBytes("UTF-8")).map("%02x".format(_)).mkString
-        val b = java.lang.Long.parseLong(hex.substring(0, 15), 16) % 10
-        val split = if (b < 8) "train" else if (b == 8) "val" else "test"
-        ((split, r.getString(1)), 1L)
-      }.groupBy(_._1).map { case (k, g) => (k, g.map(_._2).sum) }
-    val rm = cells.groupBy(_._1._1).map { case (k, g) => k -> g.values.sum }
-    val cm = cells.groupBy(_._1._2).map { case (k, g) => k -> g.values.sum }
-    val n = BigInt(cells.values.sum)
-    val grid = BigInt(1000000000000L)
-    val sfp = cells.map { case ((sp, so), nij) =>
-      BigInt(nij) * nij * grid / (BigInt(rm(sp)) * cm(so))
-    }.sum
-    val chi2 = (n * sfp - n * grid).max(BigInt(0))
-    assert(row.getAs[String]("chi2_fp") == chi2.toString, "chi2 mismatch")
-    assert(row.getAs[Long]("n_splits") == 3L)
-    // a healthy hash split shows near-zero association with source
-    val v = row.getAs[Double]("cramers_v")
-    assert(v >= 0.0 && v < 0.25, s"hash split skewed by source: V=$v")
   }
 
   test("text_simpson_diversity: num/den match a replay; bounds hold") {

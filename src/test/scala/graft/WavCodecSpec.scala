@@ -1,7 +1,6 @@
 package graft
 
 import graft.operators.{Multimodal, WavCodec}
-import org.apache.spark.sql.functions._
 
 /** The real pure-JVM WAV codec (r12 verdict item 3 — the arm that retires
   * the audio decode stub): encoder byte layout, chunk-walking parser,
