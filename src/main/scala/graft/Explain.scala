@@ -37,7 +37,7 @@ object Explain {
     spark.sparkContext.setLogLevel("ERROR")
     // In exec mode, ALSO print every INTERNAL execution (the localCheckpoint
     // / pin-count jobs operators run inside fn()) — queries whose top-level
-    // plan ends at a checkpoint leaf (pipeline_ccnet, i6_snapshot_expiry,
+    // plan ends at a checkpoint leaf (i6_snapshot_expiry,
     // the iterative graph family) are otherwise invisible to plan review
     // (the r13 Louvain loop plan gap, generalized).
     if (exec) spark.listenerManager.register(

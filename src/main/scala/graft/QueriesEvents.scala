@@ -906,7 +906,7 @@ object QueriesEvents {
     // merge-scan SparkPlan holding ONE candidate row per key, key filters
     // pushed through the node by a custom optimizer rule. Graded against
     // the IDENTICAL oracle as t_asof_join — result-invariance between the
-    // composed and native formulations, the text_perplexity_tiered pattern.
+    // composed and native formulations.
     "t_asof_join_native" -> Q(
       fn = (s, dir) => {
         val ev = Tables.events(s, dir)
@@ -1981,7 +1981,6 @@ object QueriesEvents {
           (col("n") * col("sii") - col("si") * col("si"))
         val a = (col("sy").cast("double") - b * col("si").cast("double")) /
           col("n").cast("double")
-        val iF = col("st").getField("i")
         val sesF = col("st").getField("ses")
         sums.join(arr, Seq("event_type"))
           .withColumn("ys", transform(col("iys"), x => x.getField("y").cast("double")))
@@ -2115,9 +2114,9 @@ object QueriesEvents {
     // Medians of integers are half-integers, so EVERYTHING is exact in
     // doubled units: med2 = 2·median(x) (exact percentile, not approx),
     // dev2 = |2x − med2|, mad4 = 2·median(dev2). The Hampel gate
-    // |x − med| > 3·MAD becomes 2·dev2 > 3·mad4 — pure int64. Unlike the
-    // mean/stddev census (profile_outliers), one wild hour cannot drag
-    // the threshold: the breakdown point is 50%.
+    // |x − med| > 3·MAD becomes 2·dev2 > 3·mad4 — pure int64. Unlike a
+    // mean/stddev census, one wild hour cannot drag the threshold: the
+    // breakdown point is 50%.
     "events_anomaly_mad" -> Q(
       fn = (s, dir) => {
         val h = Tables.events(s, dir)
@@ -2640,7 +2639,7 @@ object QueriesEvents {
     // event-type distribution, top-20 most-diverse users — the feature
     // behind "explorer vs single-purpose" segmentation and the bot gate's
     // natural complement (scripted accounts have near-zero entropy).
-    // Float discipline follows text_perplexity: ln() is the one libm op
+    // Float discipline: ln() is the one libm op
     // (engines may differ in the last ulp), so each term is rounded to 9
     // BEFORE the DECIMAL(18,9) sum — the sum is then exact and
     // order-free — and only the final display cast rounds again. Counts

@@ -2452,12 +2452,12 @@ object QueriesExtra {
       doc = "functional-dependency audit: per-candidate two-level agg, the key/schema-discovery probe"),
 
     // k-anonymity census over quasi-identifiers — the re-identification
-    // audit a PII-bearing corpus needs before release (complements
-    // text_pii_redaction's content scrubbing with a STRUCTURAL risk
-    // measure). Equivalence classes on (lang, source, size-bin); the
-    // class-size histogram shows how many rows sit in classes below the
-    // k=5 threshold. Two combinable aggregations — the first shuffles one
-    // row per class, the second one row per class SIZE.
+    // audit a PII-bearing corpus needs before release (a STRUCTURAL risk
+    // measure, complementing content scrubbing). Equivalence classes on
+    // (lang, source, size-bin); the class-size histogram shows how many
+    // rows sit in classes below the k=5 threshold. Two combinable
+    // aggregations — the first shuffles one row per class, the second one
+    // row per class SIZE.
     "profile_k_anonymity" -> Q(
       fn = (s, dir) => Tables.documents(s, dir)
         .select(col("lang"), col("source"),

@@ -17,6 +17,6 @@ object Registry {
   /** All declared queries, keyed by the SURVEY §2 operator they cover. */
   def all: Map[String, Q] =
     QueriesCore.queries ++ QueriesRel.queries ++ QueriesVector.queries ++
-      QueriesText.queries ++ QueriesEvents.queries ++ QueriesDml.queries ++
-      QueriesExtra.queries ++ QueriesJoins.queries ++ QueriesSig.queries
+      QueriesEvents.queries ++ QueriesDml.queries ++ QueriesExtra.queries ++
+      QueriesJoins.queries ++ QueriesSig.queries
 }

@@ -111,30 +111,4 @@ object PathFns {
     val dt = truncMs(ts)
     (dt < before) || (dt === before && name < token)
   }
-
-  /** URL canonicalization — the identity key for URL-level dedup (the first
-    * dedup of every web-crawl pipeline: C4 dedups by URL before any content
-    * pass). Steps, in order: drop the fragment; lowercase scheme+authority;
-    * strip a leading `www.`; strip default ports (`:80`/`:443`); strip
-    * trailing path slashes (root stays bare); drop tracking params
-    * (`utm_*`, `fbclid`, `gclid`); SORT the remaining query params (order
-    * never changes the resource). http vs https stay distinct — different
-    * resources. Pure regex/array column expressions, engine-portable (the
-    * DuckDB twin uses the same patterns with `\1`-style replacements). */
-  def canonicalizeUrl(url: Column): Column = {
-    val noFrag = regexp_replace(url, "#.*$", "")
-    val base = regexp_extract(noFrag, "^([^?]*)", 1)
-    val q = regexp_extract(noFrag, "\\?(.*)$", 1)
-    val loweredAuth = concat(
-      lower(regexp_extract(base, "^([A-Za-z][A-Za-z0-9+.-]*://[^/]*)", 1)),
-      regexp_extract(base, "^[A-Za-z][A-Za-z0-9+.-]*://[^/]*(.*)$", 1))
-    val noWww = regexp_replace(loweredAuth, "^(https?://)www\\.", "$1")
-    val noPort = regexp_replace(noWww, ":(80|443)(/|$)", "$2")
-    val noSlash = when(noPort.rlike("^https?://[^/]*$"), noPort)
-      .otherwise(regexp_replace(noPort, "/+$", ""))
-    val params = filter(split(q, "&"),
-      p => !p.rlike("^(utm_[^=]*|fbclid|gclid)=") && p =!= "")
-    val qc = array_join(array_sort(params), "&")
-    when(qc === "", noSlash).otherwise(concat(noSlash, lit("?"), qc))
-  }
 }

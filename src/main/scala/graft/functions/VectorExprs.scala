@@ -43,22 +43,6 @@ object VectorExprs {
 
   /** Σ (a(i)−b(i))² as double, sequential (L2 distance squared). */
   def l2Sq(a: Column, b: Column): Column = c(VecL2Sq(e(a), e(b)))
-
-  /** Per-set membership counts over a token array in ONE pass: counts[i] =
-    * |{w ∈ words : w ∈ sets(i)}|. Replaces k interpreted
-    * `size(filter(w, isin(...)))` HOF stacks (language-ID scoring, stopword
-    * ratios) with a single codegen'd loop. */
-  def stopwordCounts(words: Column, sets: Seq[Seq[String]]): Column =
-    c(StopwordCounts(e(words), sets.map(_.toArray).toArray))
-
-  /** One-pass language-ID: count stopword hits per language and argmax in
-    * the SAME kernel (labels in order, strictly-greater wins, zero hits →
-    * "und"). Folding the argmax into the expression keeps the generated code
-    * a single small loop — an 8-way `when`-chain over [[stopwordCounts]]
-    * duplicated the kernel tree and tripled Janino compile time. */
-  def stopwordLangId(words: Column, langs: Seq[(String, Seq[String])]): Column =
-    c(StopwordLangId(e(words), langs.map(_._1).toArray,
-      langs.map(_._2.toArray).toArray))
 }
 
 /** Portable md5-derived 60-bit hash (static forwarder — callable from
@@ -88,148 +72,6 @@ object Md5Hash {
   }
 }
 
-/** One-pass multi-set membership counts (see [[VectorExprs.stopwordCounts]]).
-  * The word sets ride into generated code as a referenced object — small
-  * (stopword lists), hashed membership per (word, set). */
-case class StopwordCounts(child: Expression, sets: Array[Array[String]])
-    extends UnaryExpression {
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"need array<string>, got ${t.sql}")
-  }
-
-  @transient private lazy val utf8Sets: Array[java.util.HashSet[org.apache.spark.unsafe.types.UTF8String]] =
-    sets.map { s =>
-      val hs = new java.util.HashSet[org.apache.spark.unsafe.types.UTF8String]()
-      s.foreach(w => hs.add(org.apache.spark.unsafe.types.UTF8String.fromString(w)))
-      hs
-    }
-
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
-    val n = arr.numElements()
-    val counts = new Array[Int](sets.length)
-    var i = 0
-    while (i < n) {
-      val w = arr.getUTF8String(i)
-      var j = 0
-      while (j < utf8Sets.length) {
-        if (utf8Sets(j).contains(w)) counts(j) += 1
-        j += 1
-      }
-      i += 1
-    }
-    new GenericArrayData(counts)
-  }
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val setsRef = ctx.addReferenceObj("stopwordSets", utf8Sets,
-      "java.util.HashSet[]")
-    nullSafeCodeGen(ctx, ev, a => {
-      val i = ctx.freshName("i")
-      val j = ctx.freshName("j")
-      val n = ctx.freshName("n")
-      val w = ctx.freshName("w")
-      val counts = ctx.freshName("counts")
-      s"""
-         |int $n = $a.numElements();
-         |int[] $counts = new int[${sets.length}];
-         |for (int $i = 0; $i < $n; $i++) {
-         |  org.apache.spark.unsafe.types.UTF8String $w = $a.getUTF8String($i);
-         |  for (int $j = 0; $j < ${sets.length}; $j++) {
-         |    if ($setsRef[$j].contains($w)) $counts[$j]++;
-         |  }
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($counts);
-       """.stripMargin
-    })
-  }
-
-  override protected def withNewChildInternal(c: Expression): StopwordCounts = copy(child = c)
-}
-
-/** One-pass stopword-count + argmax language ID (see
-  * [[VectorExprs.stopwordLangId]]). */
-case class StopwordLangId(child: Expression, langs: Array[String],
-                          sets: Array[Array[String]]) extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"need array<string>, got ${t.sql}")
-  }
-
-  @transient private lazy val utf8Sets: Array[java.util.HashSet[org.apache.spark.unsafe.types.UTF8String]] =
-    sets.map { s =>
-      val hs = new java.util.HashSet[org.apache.spark.unsafe.types.UTF8String]()
-      s.foreach(w => hs.add(org.apache.spark.unsafe.types.UTF8String.fromString(w)))
-      hs
-    }
-
-  @transient private lazy val utf8Langs: Array[org.apache.spark.unsafe.types.UTF8String] =
-    langs.map(org.apache.spark.unsafe.types.UTF8String.fromString)
-
-  private val und = org.apache.spark.unsafe.types.UTF8String.fromString("und")
-
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
-    val n = arr.numElements()
-    val counts = new Array[Int](sets.length)
-    var i = 0
-    while (i < n) {
-      val w = arr.getUTF8String(i)
-      var j = 0
-      while (j < utf8Sets.length) {
-        if (utf8Sets(j).contains(w)) counts(j) += 1
-        j += 1
-      }
-      i += 1
-    }
-    var best = und
-    var bestScore = 0
-    var j = 0
-    while (j < counts.length) {
-      if (counts(j) > bestScore) { best = utf8Langs(j); bestScore = counts(j) }
-      j += 1
-    }
-    best
-  }
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val setsRef = ctx.addReferenceObj("langSets", utf8Sets, "java.util.HashSet[]")
-    val langsRef = ctx.addReferenceObj("langLabels", utf8Langs,
-      "org.apache.spark.unsafe.types.UTF8String[]")
-    val undRef = ctx.addReferenceObj("undLabel", und,
-      "org.apache.spark.unsafe.types.UTF8String")
-    nullSafeCodeGen(ctx, ev, a => {
-      val i = ctx.freshName("i")
-      val j = ctx.freshName("j")
-      val n = ctx.freshName("n")
-      val w = ctx.freshName("w")
-      val counts = ctx.freshName("counts")
-      val best = ctx.freshName("best")
-      val bestScore = ctx.freshName("bestScore")
-      s"""
-         |int $n = $a.numElements();
-         |int[] $counts = new int[${sets.length}];
-         |for (int $i = 0; $i < $n; $i++) {
-         |  org.apache.spark.unsafe.types.UTF8String $w = $a.getUTF8String($i);
-         |  for (int $j = 0; $j < ${sets.length}; $j++) {
-         |    if ($setsRef[$j].contains($w)) $counts[$j]++;
-         |  }
-         |}
-         |org.apache.spark.unsafe.types.UTF8String $best = $undRef;
-         |int $bestScore = 0;
-         |for (int $j = 0; $j < ${sets.length}; $j++) {
-         |  if ($counts[$j] > $bestScore) { $best = $langsRef[$j]; $bestScore = $counts[$j]; }
-         |}
-         |${ev.value} = $best;
-       """.stripMargin
-    })
-  }
-
-  override protected def withNewChildInternal(c: Expression): StopwordLangId = copy(child = c)
-}
 private[graft] trait ArrayNumericCheck { self: Expression =>
   protected def checkNumericArray(e: Expression, side: String): TypeCheckResult =
     e.dataType match {

@@ -339,7 +339,7 @@ object Graph {
     val maxDeg = Option(deg.agg(max(col("k"))).head.get(0))
       .map(_.asInstanceOf[Long]).getOrElse(0L)
     var c = deg.select(col("v"), col("v").as("c"))
-    for (round <- 1 to rounds) {
+    for (_ <- 1 to rounds) {
       // localCheckpoint is for STATS, not just lineage: tot is a lazy
       // join+agg whose size ESTIMATE is join-product-sized, so the
       // planner sort-merge-joined it against the candidate relation —

@@ -102,46 +102,4 @@ object Profile {
             col("n").cast("double")))
       .drop("den")
   }
-
-  /** Robust per-group outlier census via MAD (median absolute deviation) —
-    * the data-quality gate that survives the outliers it hunts (mean/stddev
-    * get dragged by the very tail they're meant to flag; median/MAD have
-    * 50% breakdown). A row is an outlier when |v − median| > k·MAD.
-    *
-    * ENTIRELY exact integer arithmetic: both medians come from
-    * [[TextAnalysis.groupedQuantiles]]' order-statistics-over-histogram
-    * (⌈n/2⌉ rank, keyed windows over per-group value histograms — bounded
-    * frames, no global sort), and the k·MAD comparison is int64. Nothing
-    * here can drift across engines, partitionings, or reruns — the
-    * property a quality GATE needs (approx_percentile-based cutoffs move
-    * between runs and silently reclassify rows).
-    *
-    * Returns (group, n_rows, median, mad, n_outliers) per group. */
-  def madOutliers(df: DataFrame, groupCol: String, valueCol: String,
-                  k: Int = 3): DataFrame = {
-    require(k >= 1, s"k must be >= 1, got $k")
-    val base = df.select(col(groupCol).as("g"), col(valueCol).cast("long").as("v"))
-      .filter(col("g").isNotNull && col("v").isNotNull)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    base.count() // pin: feeds both quantile passes and the census
-    val med = TextAnalysis.groupedQuantiles(base, "g", "v", Seq(50))
-      .select(col("g"), col("value").as("med"))
-    val dev = base.join(med, Seq("g"))
-      .select(col("g"), abs(col("v") - col("med")).as("d"))
-    val mad = TextAnalysis.groupedQuantiles(dev, "g", "d", Seq(50))
-      .select(col("g"), col("value").as("mad"))
-    val out = base.join(med, Seq("g")).join(mad, Seq("g"))
-      .groupBy(col("g"))
-      .agg(count(lit(1)).as("n_rows"), min(col("med")).as("median"),
-        min(col("mad")).as("mad"),
-        sum(when(abs(col("v") - col("med")) > lit(k.toLong) * col("mad"), 1L)
-          .otherwise(0L)).as("n_outliers"))
-      .select(col("g").as(groupCol), col("n_rows"), col("median"), col("mad"),
-        col("n_outliers"))
-      .orderBy(col(groupCol))
-      // per-group census — eager cut, release the pin (r9 ADVICE)
-      .localCheckpoint()
-    base.unpersist()
-    out
-  }
 }

@@ -14,8 +14,8 @@ import org.apache.spark.sql.functions._
   * inspectable as a relation.
   *
   * Portability contract (the reason this is hash-checkable cross-engine):
-  *  - the hash is the repo's portable md5-60-bit kernel (same as
-  *    [[TextAnalysis]] winnowing): top p=12 bits select the
+  *  - the hash is the repo's portable md5-60-bit kernel (hex chars 1-15
+  *    of md5, as in [[graft.functions.Md5Hash]]): top p=12 bits select the
   *    register, low 48 bits feed the rank (leading-zeros) count, so rank ∈
   *    [1, 49] and the scaled harmonic term 2^(49-rank) is an exact BIGINT.
   *  - the harmonic mean is summed as exact integers (sum ≤ m·2^49 = 2^61,
@@ -331,9 +331,8 @@ object Sketches {
     // histogram (r13; one job saved, value provably identical)
     val n = vals.count()
     // All bucket bounds in ONE aggregation over the prefix-summed histogram
-    // (an exploded percentile list, the groupedQuantiles trick) — the
-    // per-percentile job launches of exactQuantiles cost ~4 s at sf0.1
-    // for a 10-point histogram; this is ~6 jobs total.
+    // (an exploded percentile list) — one job launch per percentile cost
+    // ~4 s at sf0.1 for a 10-point histogram; this is ~6 jobs total.
     val hist = vals.groupBy(col("v")).agg(count(lit(1)).as("c"))
     // single consumer (the exploded-percentile readout) — no pin needed;
     // withRankAndCumSum already localCheckpoints its range-partitioned core

@@ -59,17 +59,20 @@ object Vectors {
     * distributed top-k heap, no global sort materializes). `distance` is
     * rounded to 9 dp: engines re-associate float summation differently, and a
     * deterministic output needs a stable (distance, key) order.
-    * topK ≤ 100 (reference vector/limits.ts:5). */
+    * `metric` is `cosine` or `euclidean` (SURVEY V1); topK ≤ 100 (reference
+    * vector/limits.ts:5). */
   def knn(vectors: DataFrame, keyCol: String, embCol: String,
           query: Seq[Double], metric: String = "cosine", topK: Int = 10): DataFrame = {
+    require(metric == "cosine" || metric == "euclidean",
+      s"metric must be cosine or euclidean, got '$metric'")
+    require(topK >= 1 && topK <= graft.functions.Validators.MaxQueryTopK,
+      s"topK must be between 1 and ${graft.functions.Validators.MaxQueryTopK}")
     val q = typedLit(query)
     val emb = col(embCol)
     val dist = metric match {
       case "euclidean" => l2Distance(emb, q)
       case _ => cosineDistance(emb, q)
     }
-    require(topK >= 1 && topK <= graft.functions.Validators.MaxQueryTopK,
-      s"topK must be between 1 and ${graft.functions.Validators.MaxQueryTopK}")
     vectors
       .withColumn("distance", round(dist, 9))
       .orderBy(col("distance"), col(keyCol))

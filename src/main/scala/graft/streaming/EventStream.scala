@@ -396,18 +396,18 @@ object EventStream {
     (counters.toMap, seen)
   }
 
-  /** Streaming twin of [[graft.operators.TextAnalysis.heavyHitters]]'s
-    * candidate stage: a per-group Misra–Gries summary (4k counters) as
-    * keyed custom state — the "trending tokens over an unbounded stream"
-    * shape, state bounded at 4k counters per group FOREVER.
+  /** Streaming heavy-hitters candidate stage: a per-group Misra–Gries
+    * summary (4k counters) as keyed custom state — the "trending tokens
+    * over an unbounded stream" shape, state bounded at 4k counters per
+    * group FOREVER.
     *
-    * Guarantee carried over from the batch op's pigeonhole argument: any
-    * item whose share of the group's stream is STRICTLY above 1/(4k+1) is guaranteed
+    * Guarantee (the Misra–Gries pigeonhole argument): any item whose
+    * share of the group's stream is STRICTLY above 1/(4k+1) is guaranteed
     * present in the current candidate set (MG with b counters never evicts
     * anything above share 1/(b+1)), so share-≥1/k items always survive.
     * Candidates are a SUPERSET with lower-bound counts — the exact-count
-    * confirmation join stays a batch job, exactly as in the two-pass
-    * batch operator. The fold is deterministic in arrival order (insert
+    * confirmation join stays a batch job, the second pass of the classic
+    * two-pass algorithm. The fold is deterministic in arrival order (insert
     * gated only on size, decrement-all hits every counter equally), so
     * the streaming state after N batches equals one sequential MG pass
     * over the concatenated stream — StreamingSpec pins that parity.

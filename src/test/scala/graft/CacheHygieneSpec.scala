@@ -11,8 +11,8 @@ import org.apache.spark.sql.functions._
   * unpersist, so one missed release per operator accumulates across a
   * 341-query registry session (the r9 ADVICE leak class). RDD-level
   * localCheckpoint blocks are cleaner-managed and deliberately not counted.
-  * Corpus-sized-output operators (boilerplateRemoval) are documented
-  * exemptions and not asserted here. */
+  * Operators with corpus-sized output are documented exemptions and not
+  * asserted here. */
 class CacheHygieneSpec extends SparkTestBase {
   import spark.implicits._
 
@@ -23,11 +23,6 @@ class CacheHygieneSpec extends SparkTestBase {
     assert(org.apache.spark.sql.classic.GraftSqlBridge.cacheRegistryEmpty(cs),
       s"$label left entries in the DataFrame cache registry")
   }
-
-  private def docs: DataFrame = (1 to 40).map { i =>
-    val base = Seq("alpha", "beta", "gamma", "delta", "eps", "zeta")
-    (i.toLong, (0 until 12).map(j => base((i + j * j) % 6)).mkString(" "))
-  }.toDF("doc_id", "text")
 
   private def edges: DataFrame = {
     // hub edges keep the degree sequence non-uniform (a regular graph has
@@ -72,19 +67,6 @@ class CacheHygieneSpec extends SparkTestBase {
 
   test("text, profile, and temporal kernels release their caches") {
     spark.catalog.clearCache()
-    assertClean("unigramSurprisal")(
-      TextAnalysis.unigramSurprisal(docs, "doc_id", "text"))
-    assertClean("unigramSurprisalTiered")(
-      TextAnalysis.unigramSurprisalTiered(docs, "doc_id", "text", 3))
-    assertClean("kneserNeyBigram")(TextAnalysis.kneserNeyBigram(docs, "text"))
-    assertClean("exactQuantiles")(TextAnalysis.exactQuantiles(
-      (1 to 100).map(_.toLong).toDF("v"), "v"))
-    assertClean("groupedQuantiles")(TextAnalysis.groupedQuantiles(
-      (1 to 100).map(i => (s"g${i % 3}", i.toLong)).toDF("g", "v"), "g", "v"))
-    assertClean("tfidfTopTerms")(TextAnalysis.tfidfTopTerms(docs, "doc_id", "text"))
-    assertClean("bm25")(TextAnalysis.bm25(docs, "doc_id", "text", Seq("alpha")))
-    assertClean("madOutliers")(Profile.madOutliers(
-      (1 to 100).map(i => (s"g${i % 2}", (i % 17).toLong)).toDF("g", "v"), "g", "v"))
     assertClean("gapFillHourly")(Temporal.gapFillHourly(
       (1 to 50).map(i => (s"k${i % 2}",
         java.sql.Timestamp.valueOf(f"2024-01-01 ${i % 20}%02d:00:00"), i.toLong))

@@ -1,41 +1,10 @@
 package graft
 
-import graft.operators.{Layout, TextAnalysis}
-import org.apache.spark.sql.functions._
+import graft.operators.Layout
 
-/** CCNet pipeline tiers and zone-map pruning census invariants. */
+/** Zone-map pruning census invariants. */
 class CcnetZonemapSpec extends SparkTestBase {
   import spark.implicits._
-
-  test("ccnetTiers: tier counts partition each language's deduped docs") {
-    // 9 distinct-text docs + 1 doc that is a pure copy of doc 1's line set
-    val docs = ((1 to 9).map(i =>
-      (i.toLong, s"the quick brown fox number$i jumps over dog$i today fine", "en")) :+
-      (10L, "the quick brown fox number1 jumps over dog1 today fine", "dup"))
-      .toDF("doc_id", "text", "lang")
-    val out = TextAnalysis.ccnetTiers(docs, "doc_id", "text", 4).collect()
-    // doc 10's lines are all first-claimed by doc 1 → it leaves the corpus
-    assert(out.map(_.getAs[Long]("n_docs")).sum == 9L)
-    // terciles partition: each (lang, tier) cell is nonempty only for
-    // head/middle/tail and every doc lands in exactly one cell
-    assert(out.forall(r => Set("head", "middle", "tail")(r.getAs[String]("tier"))))
-    // cross-doc line dedup: the shared first/last lines ("the quick brown
-    // fox", "today fine") survive only in doc 1, so doc 1 keeps all 10
-    // tokens and docs 2–9 keep only their distinctive middle line (4) —
-    // 10 + 8·4 = 42 surviving tokens
-    assert(out.map(_.getAs[Long]("n_tokens")).sum == 42L)
-  }
-
-  test("ccnetTiers is partitioning-independent") {
-    val docs = (1 to 30).map(i =>
-      (i.toLong, s"word$i the and of stuff thing$i item$i value$i blob$i end$i", "x"))
-      .toDF("doc_id", "text", "lang")
-    val a = TextAnalysis.ccnetTiers(docs, "doc_id", "text", 4)
-      .orderBy("lang", "tier").collect().toSeq
-    val b = TextAnalysis.ccnetTiers(docs.repartition(7, col("text")), "doc_id", "text", 4)
-      .orderBy("lang", "tier").collect().toSeq
-    assert(a == b)
-  }
 
   test("zoneMapPruningCensus: sorted layout prunes, natural layout reads everything") {
     // 40 folders × 25 objects, names cluster by folder when sorted

@@ -3,9 +3,8 @@ package graft
 import graft.operators.{Graph, Vectors}
 import org.apache.spark.sql.functions._
 
-/** Vector-search semantics (ANN-vs-exact agreement, upsert determinism),
-  * cluster resolution over near-dup pairs, and the text scoring/sampling
-  * kernels that ride along (BM25, repetition, PII, stratified sampling).
+/** Vector-search semantics (ANN-vs-exact agreement, upsert determinism)
+  * and cluster resolution over near-dup pairs.
   */
 class DedupVectorsSpec extends SparkTestBase {
   import spark.implicits._
@@ -280,39 +279,6 @@ class DedupVectorsSpec extends SparkTestBase {
     val dist = Graph.resolveClusters(pairs, localEdgeThreshold = 0L)
       .orderBy("id").collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(dist.toSeq == got.toSeq)
-  }
-
-  test("bm25: higher tf ranks higher; absent terms score nothing") {
-    val docs = Seq(
-      (1L, "vector vector vector table row"),
-      (2L, "vector table row scan join"),
-      (3L, "table row scan join merge")).toDF("doc_id", "text")
-    val got = graft.operators.TextAnalysis.bm25(docs, "doc_id", "text",
-      Seq("vector"), 10).collect().map(r => (r.getLong(0), r.getDouble(1)))
-    assert(got.map(_._1).toSeq == Seq(1L, 2L)) // doc 3 has no query term
-    assert(got(0)._2 > got(1)._2)
-  }
-
-  test("repetition signals: multiplicities and fractions, 1-word edge") {
-    val docs = Seq((1L, "a b a b c"), (2L, "x")).toDF("doc_id", "text")
-    val got = graft.operators.TextAnalysis.repetitionSignals(docs, "doc_id", "text")
-      .orderBy("doc_id").collect()
-    // doc 1: words [a,b,a,b,c] → 5/3 distinct, 'a' ×2; bigrams
-    // [a b, b a, a b, b c] → 4/3 distinct, 'a b' ×2
-    assert(got(0).toSeq == Seq(1L, 5L, 3L, 2L, 4L, 3L, 2L, 0.4, 0.5))
-    // doc 2: single word → no bigrams, zero fractions
-    assert(got(1).toSeq == Seq(2L, 1L, 1L, 1L, 0L, 0L, 0L, 0.0, 0.0))
-  }
-
-  test("PII redaction: per-category counts and placeholder rewrite") {
-    val docs = Seq(
-      (1L, "mail a.b@x.io or c@y.org, call 555-123-4567, host 192.168.0.1"),
-      (2L, "clean text")).toDF("doc_id", "text")
-    val got = graft.operators.TextAnalysis.redactPii(docs, "doc_id", "text")
-      .orderBy("doc_id").collect()
-    assert(got(0).toSeq == Seq(1L, 2, 1, 1,
-      "mail <EMAIL> or <EMAIL>, call <PHONE>, host <IP>"))
-    assert(got(1).toSeq == Seq(2L, 0, 0, 0, "clean text"))
   }
 
   test("upsert is last-wins by priority and deterministic") {

@@ -72,24 +72,4 @@ class PathFnsSpec extends SparkTestBase {
       .select("name").collect().map(_.getString(0)).toSeq
     assert(got == Seq("b", "c"))
   }
-
-  test("canonicalizeUrl: every normalization step, one at a time and combined") {
-    import spark.implicits._
-    val cases = Seq(
-      // (raw, canonical)
-      ("HTTPS://WWW.Ex.COM/a/b", "https://ex.com/a/b"),          // case + www
-      ("https://ex.com:443/a", "https://ex.com/a"),              // default port
-      ("http://ex.com:80/", "http://ex.com"),                    // port + root slash
-      ("https://ex.com/a/b/", "https://ex.com/a/b"),             // trailing slash
-      ("https://ex.com/a#frag", "https://ex.com/a"),             // fragment
-      ("https://ex.com/a?b=2&a=1", "https://ex.com/a?a=1&b=2"),  // param order
-      ("https://ex.com/a?utm_source=x&a=1&fbclid=y", "https://ex.com/a?a=1"),
-      ("https://ex.com/a?utm_source=x", "https://ex.com/a"),     // all params dropped
-      ("https://ex.com", "https://ex.com"),                      // bare root
-      ("http://ex.com/a", "http://ex.com/a"),                    // http stays http
-      ("https://ex.com:8443/a", "https://ex.com:8443/a"))        // non-default port kept
-    val got = cases.map(_._1).toDF("u")
-      .select(canonicalizeUrl(col("u"))).collect().map(_.getString(0)).toSeq
-    assert(got == cases.map(_._2))
-  }
 }

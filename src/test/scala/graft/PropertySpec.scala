@@ -48,34 +48,6 @@ class PropertySpec extends SparkTestBase {
     }
   }
 
-  // ── URL canonicalization is idempotent (fixed point of cleanup) ──
-
-  test("canonicalizeUrl is idempotent over random messy URLs") {
-    val urlGen: Gen[String] = for {
-      scheme <- Gen.oneOf("http://", "https://", "HTTP://", "HTTPS://")
-      www <- Gen.oneOf("", "www.", "WWW.")
-      host <- Gen.oneOf("ex.com", "Sub.Ex.COM", "a-b.org")
-      port <- Gen.oneOf("", ":80", ":443", ":8080")
-      path <- Gen.oneOf("", "/", "/a", "/a/b/", "/a//")
-      params <- Gen.someOf(Seq("a=1", "b=2", "utm_source=x", "fbclid=z", "z=9"))
-      frag <- Gen.oneOf("", "#frag", "#a/b?c=1")
-    } yield {
-      val q = if (params.isEmpty) "" else "?" + params.mkString("&")
-      s"$scheme$www$host$port$path$q$frag"
-    }
-    val urls = sample(urlGen, 400)
-    val once = urls.toDF("u").select(PathFns.canonicalizeUrl(col("u")))
-      .collect().map(_.getString(0)).toSeq
-    val twice = once.toDF("u").select(PathFns.canonicalizeUrl(col("u")))
-      .collect().map(_.getString(0)).toSeq
-    assert(once == twice, "canonical form must be a fixed point")
-    // and no canonical URL retains the noise the cleanup removes
-    once.foreach { u =>
-      assert(!u.contains("#") && !u.contains("utm_") && !u.contains("fbclid"))
-      assert(!u.startsWith("https://www.") && !u.startsWith("http://www."))
-    }
-  }
-
   // ── byte ordering: Spark orderBy == COLLATE "C" (SURVEY §1.2) ──
 
   test("Spark string ordering is UTF-8 byte order (COLLATE \"C\" parity)") {

@@ -574,31 +574,6 @@ class StatsSpec extends SparkTestBase {
     assert(v >= 0.0 && v <= 1.0 + 1e-9, s"V out of [0,1]: $v")
   }
 
-  test("text_burstiness: Fano num/den match a replay; zero-variance term scores fano < 1") {
-    val rows = Registry.all("text_burstiness").fn(spark, sfDir).collect()
-    assert(rows.nonEmpty)
-    val docs = Tables.documents(spark, sfDir)
-      .select(col("doc_id"), col("text")).collect()
-      .map(r => (r.getLong(0), r.getString(1)))
-    val n = BigInt(docs.length)
-    val perTerm = docs.flatMap { case (id, t) =>
-      t.trim.toLowerCase.split("\\s+").filter(_.nonEmpty)
-        .groupBy(identity).map { case (w, g) => (w, g.length.toLong) }
-    }.groupBy(_._1)
-    rows.foreach { r =>
-      val w = r.getString(0)
-      val cs = perTerm(w).map(_._2)
-      val s1 = BigInt(cs.map(BigInt(_)).sum.toString)
-      val s2 = cs.map(c => BigInt(c) * c).sum
-      assert(r.getAs[Long]("df") == cs.length.toLong, s"$w df")
-      assert(r.getAs[String]("fano_num") == (n * s2 - s1 * s1).toString, s"$w num")
-      assert(r.getAs[String]("fano_den") == ((n - 1) * s1).toString, s"$w den")
-      // a term appearing at most once per doc has var < mean (sub-Poisson)
-      if (cs.max == 1L)
-        assert(r.getAs[Double]("fano") < 1.0, s"$w: once-per-doc term must be sub-Poisson")
-    }
-  }
-
   test("events_anomaly_spc: integer gate equals the float 3-sigma rule away from boundaries") {
     val res = Registry.all("events_anomaly_spc").fn(spark, sfDir)
       .collect().map(r => r.getString(0) ->
@@ -628,28 +603,6 @@ class StatsSpec extends SparkTestBase {
       assert(nh == n && na == alarms, s"$et census mismatch")
       assert(alarms == alarmsF, s"$et integer vs float gate diverge")
       assert(wh == worst._2 && wd == worst._1.toString, s"$et worst hour mismatch")
-    }
-  }
-
-  test("text_simpson_diversity: num/den match a replay; bounds hold") {
-    val rows = Registry.all("text_simpson_diversity").fn(spark, sfDir).collect()
-    assert(rows.nonEmpty)
-    val docs = Tables.documents(spark, sfDir)
-      .select(col("source"), col("text")).collect()
-      .map(r => (r.getString(0), r.getString(1)))
-    rows.foreach { r =>
-      val src = r.getString(0)
-      val toks = docs.filter(_._1 == src)
-        .flatMap(_._2.trim.toLowerCase.split("\\s+")).filter(_.nonEmpty)
-      val counts = toks.groupBy(identity).map(_._2.length.toLong)
-      val num = counts.map(c => BigInt(c) * (c - 1)).sum
-      val n = BigInt(toks.length)
-      assert(r.getAs[Long]("n_types") == counts.size.toLong, s"$src types")
-      assert(r.getAs[Long]("n_tokens") == toks.length.toLong, s"$src tokens")
-      assert(r.getAs[String]("lam_num") == num.toString, s"$src num")
-      assert(r.getAs[String]("lam_den") == (n * (n - 1)).toString, s"$src den")
-      val d = r.getAs[Double]("simpson_diversity")
-      assert(d >= 0.0 && d <= 1.0, s"$src diversity out of [0,1]: $d")
     }
   }
 

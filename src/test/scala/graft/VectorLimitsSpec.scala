@@ -66,6 +66,16 @@ class VectorLimitsSpec extends AnyFunSuite {
     intercept[IllegalArgumentException] {
       Vectors.deleteByKeys(df, "vec_id", (1L to 501L).toSeq)
     }
+    val vecs = (1L to 10L).map(i => (i, Seq(i.toDouble, 1.0))).toDF("vec_id", "emb")
+    for (metric <- Seq("l2", "Euclidean", "dot")) intercept[IllegalArgumentException] {
+      Vectors.knn(vecs, "vec_id", "emb", Seq(1.0, 0.0), metric, 5)
+    }
+    for (k <- Seq(0, 101)) intercept[IllegalArgumentException] {
+      Vectors.knn(vecs, "vec_id", "emb", Seq(1.0, 0.0), "cosine", k)
+    }
     assert(Vectors.getByKeys(df, "vec_id", Seq(1L, 2L)).count() == 2)
+    for (metric <- Seq("cosine", "euclidean"); k <- Seq(1, 100))
+      assert(Vectors.knn(vecs, "vec_id", "emb", Seq(1.0, 0.0), metric, k)
+        .count() == math.min(k, 10))
   }
 }

@@ -142,9 +142,9 @@ def main():
                 results[name] = f"TYPE-MISMATCH (spark, duck): {tbad}"
                 continue
             # LIST-typed graded columns crash the driver's pandas sorter
-            # (unhashable numpy.ndarray — r6 text_winnowing). Reject them
-            # here so that class can never ship again; grade a joined
-            # string (array_join / array_to_string) instead.
+            # (unhashable numpy.ndarray — an r6 fingerprint-array query).
+            # Reject them here so that class can never ship again; grade a
+            # joined string (array_join / array_to_string) instead.
             lbad = sorted(c for c in gc
                           if gt.get(c, "").endswith("[]")
                           or et.get(c, "").endswith("[]"))
