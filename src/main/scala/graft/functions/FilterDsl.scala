@@ -1,9 +1,12 @@
 package graft.functions
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, GraftSqlBridge}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.LeafExpression
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, JavaCode}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, DoubleType, StringType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, StringType}
 
 import scala.jdk.CollectionConverters._
 
@@ -23,6 +26,9 @@ import scala.jdk.CollectionConverters._
   * which stays inside whole-stage codegen. Implicit top-level maps mean
   * `{"a": 1, "b": 2}` ≡ `{"$and":[{"a":1},{"b":2}]}` and a bare scalar value
   * means `$eq` — same shorthand as the reference.
+  *
+  * Every numeric comparand is a [[DoubleParam]], not a literal, so filters
+  * that differ only in their numbers share one generated class.
   */
 object FilterDsl {
 
@@ -74,8 +80,10 @@ object FilterDsl {
   private def fieldText(m: Column, ex: Map[String, Column], field: String): Column =
     ex.getOrElse(field, get_json_object(m, s"$$.$field"))
 
+  private def number(v: JsonNode): Column = GraftSqlBridge.column(DoubleParam(v.asDouble))
+
   private def scalarLit(v: JsonNode): Column =
-    if (v.isNumber) lit(v.asDouble) else if (v.isBoolean) lit(v.asBoolean.toString)
+    if (v.isNumber) number(v) else if (v.isBoolean) lit(v.asBoolean.toString)
     else lit(v.asText)
 
   /** JSON-array parse of the field text, attempted only when the text CAN be
@@ -90,11 +98,11 @@ object FilterDsl {
                      v: JsonNode): Column = {
     val f = fieldText(m, ex, field)
     val scalarEq =
-      if (v.isNumber) f.try_cast(DoubleType) === v.asDouble
+      if (v.isNumber) f.try_cast(DoubleType) === number(v)
       else f === scalarLit(v)
     val arrEq =
       if (v.isNumber)
-        array_contains(asArray(f, DoubleType), v.asDouble)
+        array_contains(asArray(f, DoubleType), number(v))
       else
         array_contains(asArray(f, StringType), scalarLit(v))
     coalesce(scalarEq, lit(false)) || coalesce(arrEq, lit(false))
@@ -154,5 +162,25 @@ object FilterDsl {
         f.isNotNull && !coalesce(inExpr(f, vs), lit(false))
       case other => throw new IllegalArgumentException(s"unknown operator $other")
     }
+  }
+}
+
+/** A per-request double held by reference in the generated code.
+  *
+  * Spark writes a numeric literal into the generated Java source, so an
+  * expression over a literal that changes per request compiles a new class
+  * per request. This leaf reads the value from the generated class's
+  * references array instead, and is not foldable, so Catalyst keeps it a
+  * leaf and the source is the same for every value. Use it only where no
+  * data-source pushdown needs a literal. */
+case class DoubleParam(value: Double) extends LeafExpression {
+  override def dataType: DataType = DoubleType
+  override def nullable: Boolean = false
+  override def foldable: Boolean = false
+  override def eval(input: InternalRow): Any = value
+
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("param", java.lang.Double.valueOf(value))
+    ExprCode.forNonNullValue(JavaCode.expression(s"$ref.doubleValue()", DoubleType))
   }
 }

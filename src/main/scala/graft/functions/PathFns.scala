@@ -62,10 +62,6 @@ object PathFns {
   /** F8 `split_part(name,'/',n)` — n-th path segment (0027:28,44). */
   def splitPart(name: Column, n: Int): Column = element_at(split(name, "/"), n)
 
-  /** F9 `rtrim(p,'/')` — folder display name without trailing delimiter
-    * (0050:265). */
-  def rtrimSlash(p: Column): Column = rtrim(p, "/")
-
   /** F11 `date_trunc('milliseconds', ts)` — cursor-stable timestamp
     * (0039-add-search-v2-sort-support.sql:46). */
   def truncMs(ts: Column): Column = date_trunc("millisecond", ts)

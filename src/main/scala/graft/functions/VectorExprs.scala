@@ -43,6 +43,9 @@ object VectorExprs {
 
   /** Σ (a(i)−b(i))² as double, sequential (L2 distance squared). */
   def l2Sq(a: Column, b: Column): Column = c(VecL2Sq(e(a), e(b)))
+
+  /** Cosine distance `1 − ⟨a,q⟩/(|a|·|q|)` in one pass — see [[VecCosineDist]]. */
+  def cosineDist(a: Column, q: Column): Column = c(VecCosineDist(e(a), e(q)))
 }
 
 /** Portable md5-derived 60-bit hash (static forwarder — callable from
@@ -217,6 +220,85 @@ case class VecL2Sq(left: Expression, right: Expression)
     })
 
   override protected def withNewChildrenInternal(l: Expression, r: Expression): VecL2Sq =
+    copy(left = l, right = r)
+}
+
+/** Cosine distance `1 − d / (sqrt(na) · sqrt(nq))` with d = Σ a(i)·q(i),
+  * na = Σ a(i)², nq = Σ q(i)², all three accumulated in one pass.
+  *
+  * Bit-identical to `1 − vecDot(a,q) / (sqrt(vecDot(a,a)) · sqrt(vecDot(q,q)))`:
+  * each sum is the same strictly left-to-right fold from 0.0 that [[VecDot]]
+  * makes (d over the common prefix, each norm over its own array), and the
+  * final arithmetic is the same sequence of double operations. Unlike that
+  * composition it leaves no foldable `sqrt(vecDot(q, q))` for Catalyst to
+  * turn into a per-query double literal in the generated Java, so every
+  * query compiles to the same class. A zero-norm side gives 0/0 = NaN
+  * (plain Java division), which sorts after every number. */
+case class VecCosineDist(left: Expression, right: Expression)
+    extends BinaryExpression with ArrayNumericCheck {
+  override def dataType: DataType = DoubleType
+  override def checkInputDataTypes(): TypeCheckResult =
+    checkNumericArray(left, "left") match {
+      case TypeCheckResult.TypeCheckSuccess => checkNumericArray(right, "right")
+      case f => f
+    }
+
+  override def nullSafeEval(a: Any, b: Any): Any = {
+    val x = a.asInstanceOf[ArrayData]
+    val y = b.asInstanceOf[ArrayData]
+    val n = math.min(x.numElements(), y.numElements())
+    var d = 0.0
+    var na = 0.0
+    var nq = 0.0
+    var i = 0
+    while (i < n) {
+      val p = getElem(left, x, i)
+      val q = getElem(right, y, i)
+      d += p * q
+      na += p * p
+      nq += q * q
+      i += 1
+    }
+    while (i < x.numElements()) { val p = getElem(left, x, i); na += p * p; i += 1 }
+    i = n
+    while (i < y.numElements()) { val q = getElem(right, y, i); nq += q * q; i += 1 }
+    1.0 - d / (math.sqrt(na) * math.sqrt(nq))
+  }
+
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (a, b) => {
+      val i = ctx.freshName("i")
+      val n = ctx.freshName("n")
+      val d = ctx.freshName("d")
+      val na = ctx.freshName("na")
+      val nq = ctx.freshName("nq")
+      val p = ctx.freshName("p")
+      val q = ctx.freshName("q")
+      s"""
+         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
+         |double $d = 0.0;
+         |double $na = 0.0;
+         |double $nq = 0.0;
+         |for (int $i = 0; $i < $n; $i++) {
+         |  double $p = ${getter(left, a, i)};
+         |  double $q = ${getter(right, b, i)};
+         |  $d += $p * $q;
+         |  $na += $p * $p;
+         |  $nq += $q * $q;
+         |}
+         |for (int $i = $n; $i < $a.numElements(); $i++) {
+         |  double $p = ${getter(left, a, i)};
+         |  $na += $p * $p;
+         |}
+         |for (int $i = $n; $i < $b.numElements(); $i++) {
+         |  double $q = ${getter(right, b, i)};
+         |  $nq += $q * $q;
+         |}
+         |${ev.value} = 1.0 - $d / (java.lang.Math.sqrt($na) * java.lang.Math.sqrt($nq));
+       """.stripMargin
+    })
+
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): VecCosineDist =
     copy(left = l, right = r)
 }
 

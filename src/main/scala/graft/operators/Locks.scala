@@ -30,15 +30,6 @@ object Locks {
   def hashStringToInt(s: Column): Column =
     graft.functions.VectorExprs.djb2Uint32(s)
 
-  /** The lock-key string for an object (pg.ts:1257: version is appended only
-    * when present). */
-  def lockKeyString(bucketId: Column, name: Column,
-                    version: Option[Column] = None): Column =
-    version match {
-      case Some(v) => concat(bucketId, lit("/"), name, lit("/"), v)
-      case None => concat(bucketId, lit("/"), name)
-    }
-
   /** Deterministic grant schedule for a lock-request log.
     *
     * Input `requests` must carry `key_str` (the string fed to the hash),

@@ -44,12 +44,14 @@ object Vectors {
        sqrt(graft.functions.VectorExprs.vecDot(y, y))))
       * lit(1000000000.0)).cast("long")
 
-  def norm2(a: Column): Column = graft.functions.VectorExprs.vecDot(a, a)
-
   /** Cosine distance `1 - <a,q>/(|a||q|)` (pgvector `<=>`, halfvec_cosine_ops,
-    * migrations/vector_store/0001-init.sql:34). */
+    * migrations/vector_store/0001-init.sql:34), on the one-pass
+    * [[graft.functions.VecCosineDist]] kernel. A zero vector on either side
+    * gives NaN, as pgvector's `cosine_distance` does; Spark orders NaN after
+    * every number, so a zero vector ranks last in [[knn]] instead of
+    * failing the query. */
   def cosineDistance(a: Column, q: Column): Column =
-    lit(1.0) - dot(a, q) / (sqrt(norm2(a)) * sqrt(norm2(q)))
+    graft.functions.VectorExprs.cosineDist(a, q)
 
   /** Euclidean distance (pgvector `<->`, halfvec_l2_ops). */
   def l2Distance(a: Column, q: Column): Column =

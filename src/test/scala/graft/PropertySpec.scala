@@ -1,7 +1,12 @@
 package graft
 
-import graft.functions.{PathFns, TokenCodec, VectorExprs}
+import graft.functions.{PathFns, TokenCodec, VecCosineDist, VecDot, VectorExprs}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Divide, Literal, Multiply, Sqrt, Subtract}
+import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType}
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
@@ -170,6 +175,39 @@ class PropertySpec extends SparkTestBase {
           * lit(1000000000.0)).cast("long").as("ref"))
       .collect()
     rows.foreach(r => assert(r.getLong(0) == r.getLong(1)))
+  }
+
+  test("VecCosineDist equals the VecDot composition bit-for-bit, codegen and interpreted") {
+    // the fused kernel must not move a cosine oracle row: same three
+    // left-to-right sums, same final double arithmetic
+    val pairGen: Gen[(List[Double], List[Double])] = for {
+      len <- Gen.choose(1, 128)
+      a <- Gen.listOfN(len, Gen.chooseNum(-2.0, 2.0))
+      b <- Gen.listOfN(len, Gen.chooseNum(-2.0, 2.0))
+    } yield (a.map(x => if (math.abs(x) < 0.05) 0.1 else x), // keep norms > 0
+             b.map(x => if (math.abs(x) < 0.05) 0.1 else x))
+    val pairs = sample(pairGen, 300, seed = 11L)
+    def bits(d: Double): Long = java.lang.Double.doubleToRawLongBits(d)
+    for (et <- Seq(FloatType, DoubleType)) {
+      val a = BoundReference(0, ArrayType(et, containsNull = false), nullable = false)
+      val q = BoundReference(1, ArrayType(et, containsNull = false), nullable = false)
+      val fast = VecCosineDist(a, q)
+      val ref = Subtract(Literal(1.0),
+        Divide(VecDot(a, q), Multiply(Sqrt(VecDot(a, a)), Sqrt(VecDot(q, q)))))
+      val compiled = GenerateUnsafeProjection.generate(Seq(fast, ref))
+      def arr(xs: List[Double]): ArrayData =
+        if (et == FloatType) ArrayData.toArrayData(xs.map(_.toFloat).toArray)
+        else ArrayData.toArrayData(xs.toArray)
+      pairs.foreach { case (x, y) =>
+        val row = InternalRow(arr(x), arr(y))
+        val out = compiled(row)
+        val interpreted = fast.eval(row).asInstanceOf[Double]
+        assert(bits(out.getDouble(0)) == bits(out.getDouble(1)), s"codegen $et $x $y")
+        assert(bits(interpreted) == bits(ref.eval(row).asInstanceOf[Double]),
+          s"interpreted $et $x $y")
+        assert(bits(interpreted) == bits(out.getDouble(0)), s"codegen vs interpreted $et")
+      }
+    }
   }
 
   test("withRunningMaxExcl equals the single-window running max on random data") {

@@ -78,4 +78,19 @@ class VectorLimitsSpec extends AnyFunSuite {
       assert(Vectors.knn(vecs, "vec_id", "emb", Seq(1.0, 0.0), metric, k)
         .count() == math.min(k, 10))
   }
+
+  test("cosine kNN ranks a zero vector last with distance NaN instead of failing") {
+    val spark = SparkTestBase.spark
+    import spark.implicits._
+    val vecs = Seq((1L, Seq(0.0, 0.0)), (2L, Seq(1.0, 0.0)), (3L, Seq(0.0, 1.0)))
+      .toDF("vec_id", "emb")
+    def run(metric: String): Seq[(Long, Double)] =
+      Vectors.knn(vecs, "vec_id", "emb", Seq(1.0, 0.0), metric, 3)
+        .select("vec_id", "distance").collect()
+        .map(r => (r.getLong(0), r.getDouble(1))).toSeq
+    val cos = run("cosine")
+    assert(cos.map(_._1) == Seq(2L, 3L, 1L))
+    assert(cos(0)._2 == 0.0 && cos(1)._2 == 1.0 && cos(2)._2.isNaN)
+    assert(run("euclidean") == Seq((2L, 0.0), (1L, 1.0), (3L, 1.414213562)))
+  }
 }
