@@ -31,8 +31,8 @@ import org.apache.spark.sql.execution.joins.{CartesianProductExec, ShuffledHashJ
   *     executing the query and re-reading `executedPlan`, not an
   *     automatic failure (currently 0/346, so the risk is latent);
   *  4. unpruned partitioned scans (r11 verdict item 7b): a scan of a
-  *     partitioned layout (objects is bucket_id-partitioned; IVF/kNN-graph
-  *     are the stored index layouts) with NO partition filters while a
+  *     partitioned layout (objects is bucket_id-partitioned; zorder_events
+  *     is the stored Z-order layout) with NO partition filters while a
   *     FilterExec in the same plan still consumes that scan's own
   *     partition-column attribute in a conjunct referencing ONLY partition
   *     columns (Catalyst's own prunability rule) — pruning was expected
@@ -86,7 +86,7 @@ object PlanAudit {
     "objects", "s3_keys", "parts",
     "copurchase_edges", "copurchase_adj", "copurchase_pairs")
   private val CorpusScanPrefixes =
-    Seq("inverted_idx", "zorder_events", "mh_corpus", "knn_graph")
+    Seq("zorder_events")
   private def isCorpusScan(f: FileSourceScanExec): Boolean = {
     val n = f.relation.location.rootPaths.headOption
       .map(_.getName).getOrElse("")

@@ -16,8 +16,7 @@ import org.apache.spark.sql.SparkSession
   *
   * Measured r13, interleaved same-JVM A/B over 12 join-heavy registry
   * queries at sf0.1 (3 reps, medians): total 28.54 s @ 10m → 26.68 s @ 64m
-  * (−6.5%); d1_upsert_merge −31%, embedding_mmr_rerank −14%,
-  * j3_orphan_db −14%, dedup_cc_incremental −13%; worst regression
+  * (−6.5%); d1_upsert_merge −31%, j3_orphan_db −14%; worst regression
   * a4_first_per_prefix +15% (0.11 s absolute).
   *
   * Rejected after the same r13 A/B:

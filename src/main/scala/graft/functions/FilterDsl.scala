@@ -109,12 +109,15 @@ object FilterDsl {
   }
 
   /** $in/$nin membership with the array-values bridge (filter.test.ts:145-155:
-    * `->>f = ANY(vs) OR EXISTS(jsonb_array_elements(f) = ANY(vs))`). */
+    * `->>f = ANY(vs) OR EXISTS(jsonb_array_elements(f) = ANY(vs))`). The
+    * numeric branch tests membership against an array literal, which the
+    * generated code holds by reference: `isin` would write each number
+    * into the Java source and compile a class per request. */
   private def inExpr(f: Column, vs: Seq[JsonNode]): Column =
     if (vs.forall(_.isNumber)) {
-      val scalarIn = f.try_cast(DoubleType).isin(vs.map(_.asDouble): _*)
-      val arrIn = arrays_overlap(asArray(f, DoubleType),
-        typedLit(vs.map(_.asDouble)))
+      val nums = typedLit(vs.map(_.asDouble))
+      val scalarIn = array_contains(nums, f.try_cast(DoubleType))
+      val arrIn = arrays_overlap(asArray(f, DoubleType), nums)
       coalesce(scalarIn, lit(false)) || coalesce(arrIn, lit(false))
     } else {
       val scalarIn = f.isin(vs.map(_.asText): _*)

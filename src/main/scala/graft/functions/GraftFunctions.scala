@@ -24,10 +24,7 @@ object GraftFunctions {
       args => VecDot(args(0), args(1))),
     ("vec_l2sq",
       "vec_l2sq(a, b) - squared L2 distance over numeric arrays",
-      args => VecL2Sq(args(0), args(1))),
-    ("sign_hamming",
-      "sign_hamming(a, b) - Hamming distance between 1-bit sign sketches",
-      args => SignHamming(args(0), args(1))))
+      args => VecL2Sq(args(0), args(1))))
 
   /** In-session registration (idempotent — re-registering replaces). */
   def install(spark: SparkSession): Unit = fns.foreach { case (name, usage, b) =>

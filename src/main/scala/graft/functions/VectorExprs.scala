@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, GraftSqlBridge}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
 /** Codegen'd Catalyst expressions for the per-row hot loops that Spark's
@@ -28,18 +28,6 @@ object VectorExprs {
 
   /** Top 60 bits of md5(s) as a long — see [[Md5Top60]]. */
   def md5Top60(s: Column): Column = c(Md5Top60(e(s)))
-
-  /** One-pass exact co-moment sums over a quantized integer vector column —
-    * see [[QuantizedCoMoment]]. Returns the flat long buffer
-    * [n, marginals(d), upper-triangle Σqᵢqⱼ]. */
-  def quantizedCoMoment(q: Column, dim: Int): Column =
-    c(QuantizedCoMoment(e(q), dim).toAggregateExpression())
-
-  /** Count of positions where sign(a(i)) ≠ sign(b(i)) (sign = value > 0) —
-    * the Hamming distance between 1-bit sign sketches, fused into one
-    * codegen'd pass over the float arrays (no materialized bit vectors, no
-    * interpreted `transform` in the ANN hot path). Integer result. */
-  def signHamming(a: Column, b: Column): Column = c(SignHamming(e(a), e(b)))
 
   /** Σ (a(i)−b(i))² as double, sequential (L2 distance squared). */
   def l2Sq(a: Column, b: Column): Column = c(VecL2Sq(e(a), e(b)))
@@ -132,50 +120,6 @@ case class VecDot(left: Expression, right: Expression)
     })
 
   override protected def withNewChildrenInternal(l: Expression, r: Expression): VecDot =
-    copy(left = l, right = r)
-}
-
-/** Hamming distance between the sign sketches of two numeric arrays: the
-  * count of positions where (a(i) > 0) ≠ (b(i) > 0), over the common
-  * prefix. One fused pass — the 1-bit ANN filter kernel. */
-case class SignHamming(left: Expression, right: Expression)
-    extends BinaryExpression with ArrayNumericCheck {
-  override def dataType: DataType = LongType
-  override def checkInputDataTypes(): TypeCheckResult =
-    checkNumericArray(left, "left") match {
-      case TypeCheckResult.TypeCheckSuccess => checkNumericArray(right, "right")
-      case f => f
-    }
-
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
-    var s = 0L
-    var i = 0
-    while (i < n) {
-      if ((getElem(left, x, i) > 0) != (getElem(right, y, i) > 0)) s += 1L
-      i += 1
-    }
-    s
-  }
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val s = ctx.freshName("s")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |long $s = 0L;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  if ((${getter(left, a, i)} > 0) != (${getter(right, b, i)} > 0)) $s++;
-         |}
-         |${ev.value} = $s;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): SignHamming =
     copy(left = l, right = r)
 }
 
@@ -300,96 +244,6 @@ case class VecCosineDist(left: Expression, right: Expression)
 
   override protected def withNewChildrenInternal(l: Expression, r: Expression): VecCosineDist =
     copy(left = l, right = r)
-}
-
-/** Exact co-moment sums over quantized integer vectors in ONE aggregate pass
-  * — the kernel behind [[graft.operators.Vectors.covarianceMatrix]].
-  *
-  * The HOF formulation explodes every row into d(d+1)/2 pair structs
-  * (d = 64 → 2080× row blowup) and pushes ~70M rows through the hash
-  * aggregate at sf0.1. This aggregate accumulates the same EXACT integer
-  * sums in a d(d+1)/2 + d + 1 long buffer per partition — the shuffle then
-  * carries one ~17 KB array per map task instead of the exploded relation,
-  * and the per-row cost is a tight primitive loop.
-  *
-  * Buffer layout: [0] = n (rows folded), [1 .. d] = marginals Σqᵢ,
-  * [1+d ..] = upper-triangle Σqᵢqⱼ in (i, j ≥ i) row-major order. Rows whose
-  * array is null, has the wrong length, or contains null elements are
-  * skipped (the fixture is uniform-d; ragged rows carry no defined pair
-  * semantics). Integer arithmetic throughout — bit-identical to the exploded
-  * groupBy it replaces, so the DuckDB-oracle hash cannot move. */
-case class QuantizedCoMoment(
-    child: Expression,
-    dim: Int,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends org.apache.spark.sql.catalyst.expressions.aggregate
-    .TypedImperativeAggregate[Array[Long]] {
-
-  private val bufLen = 1 + dim + dim * (dim + 1) / 2
-
-  override def children: Seq[Expression] = child :: Nil
-  override def nullable: Boolean = false
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def createAggregationBuffer(): Array[Long] = new Array[Long](bufLen)
-
-  override def update(buffer: Array[Long],
-      input: org.apache.spark.sql.catalyst.InternalRow): Array[Long] = {
-    val v = child.eval(input)
-    if (v != null) {
-      val arr = v.asInstanceOf[ArrayData]
-      if (arr.numElements() == dim) {
-        var ok = true
-        var i = 0
-        while (ok && i < dim) { if (arr.isNullAt(i)) ok = false; i += 1 }
-        if (ok) {
-          val q = new Array[Long](dim)
-          i = 0
-          while (i < dim) { q(i) = arr.getLong(i); i += 1 }
-          buffer(0) += 1L
-          var k = 1 + dim
-          i = 0
-          while (i < dim) {
-            val qi = q(i)
-            buffer(1 + i) += qi
-            var j = i
-            while (j < dim) { buffer(k) += qi * q(j); j += 1; k += 1 }
-            i += 1
-          }
-        }
-      }
-    }
-    buffer
-  }
-
-  override def merge(buffer: Array[Long], other: Array[Long]): Array[Long] = {
-    var i = 0
-    while (i < bufLen) { buffer(i) += other(i); i += 1 }
-    buffer
-  }
-
-  override def eval(buffer: Array[Long]): Any = new GenericArrayData(buffer)
-
-  override def serialize(buffer: Array[Long]): Array[Byte] = {
-    val bb = java.nio.ByteBuffer.allocate(bufLen * 8)
-    bb.asLongBuffer().put(buffer)
-    bb.array()
-  }
-
-  override def deserialize(storage: Array[Byte]): Array[Long] = {
-    val out = new Array[Long](bufLen)
-    java.nio.ByteBuffer.wrap(storage).asLongBuffer().get(out)
-    out
-  }
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): QuantizedCoMoment =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): QuantizedCoMoment =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): QuantizedCoMoment =
-    copy(child = newChildren.head)
 }
 
 /** DJB2-xor advisory-lock key, bit-for-bit the reference's

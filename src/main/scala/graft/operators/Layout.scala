@@ -5,8 +5,7 @@ import org.apache.spark.sql.functions._
 
 /** Z-order (Morton-curve) data layout: a space-filling 1-D clustering key
   * over two dimensions, so a 2-D box predicate prunes at the DIRECTORY
-  * level instead of scanning the full relation. This is the multi-dim
-  * analogue of [[Vectors.writeIvfPartitioned]]'s stored-list layout and the
+  * level instead of scanning the full relation. This is the
   * mechanism behind Delta/Iceberg `OPTIMIZE ZORDER BY`: co-locate rows
   * whose (x, y) cells are close on the curve, then let ordinary Hive-style
   * partition pruning (plus parquet min/max on the sorted z column within
@@ -125,7 +124,7 @@ object Layout {
   private val built = new java.util.concurrent.ConcurrentHashMap[String, ZBounds]()
 
   /** Build the layout once per process (bench/notebook loops must not pay
-    * the CTAS per query — same contract as [[Vectors.ensureKnnGraph]]).
+    * the CTAS per query).
     * `df` is by-name: never computed on the skip path. */
   def ensureZordered(df: => DataFrame, xCol: Column, yCol: Column,
                      path: String): ZBounds =

@@ -6,10 +6,8 @@ import org.apache.spark.sql.functions._
 /** Distributed two-pass prefix sums — the scale-safe replacement for a
   * global `Window.orderBy` (which moves ALL data to a single partition).
   * Range-partition in the target order, census the partitions (a
-  * partition-count-sized collect — the same driver-literal pattern as IVF
-  * centroids), broadcast the exclusive offsets back, and run the running
-  * sum per PARTITION KEY. Shared by vocabulary-coverage cutoffs, exact
-  * quantiles, and the k-means++ crossing search.
+  * partition-count-sized collect), broadcast the exclusive offsets back,
+  * and run the running sum per PARTITION KEY.
   */
 object Prefix {
 

@@ -41,7 +41,8 @@ class CodegenStabilitySpec extends SparkTestBase {
       assert(n == 0)
     }
 
-  for ((op, first, second) <- Seq(("$gte", 1995, 2003), ("$lt", 2001, 1993), ("$eq", 1999, 2010)))
+  for ((op, first, second) <- Seq(("$gte", "1995", "2003"), ("$lt", "2001", "1993"),
+      ("$eq", "1999", "2010"), ("$in", "[1995, 2003]", "[1991, 2017]")))
     test(s"filter $op: a new number compiles no new class") {
       val n = compilesOfSecond(first, second) { y =>
         vectors.filter(FilterDsl.filter(col("metadata"), s"""{"year": {"$op": $y}}"""))

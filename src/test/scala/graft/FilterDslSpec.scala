@@ -74,6 +74,27 @@ class FilterDslSpec extends SparkTestBase {
     assert(ids("""{"tags": {"$nin": ["remix"]}}""") == Seq(2L))
   }
 
+  test("numeric $in/$nin: scalars, numeric text, arrays, missing and non-numeric fields") {
+    val nums = Seq(
+      (1L, """{"n": 3}"""),
+      (2L, """{"n": 3.0}"""),
+      (3L, """{"n": "3"}"""),
+      (4L, """{"n": [1, 7]}"""),
+      (5L, """{"n": "seven"}"""),
+      (6L, """{"n": null}"""),
+      (7L, """{"m": 3}"""),
+      (8L, """{"n": 4}"""))
+    def numIds(filterJson: String): Seq[Long] =
+      nums.toDF("id", "m").filter(FilterDsl.filter(col("m"), filterJson))
+        .select("id").collect().map(_.getLong(0)).toSeq.sorted
+    assert(numIds("""{"n": {"$in": [3, 7]}}""") == Seq(1L, 2L, 3L, 4L))
+    assert(numIds("""{"n": {"$in": [1.5]}}""") == Seq())
+    assert(numIds("""{"n": {"$in": [4]}}""") == Seq(8L))
+    // $nin needs the field present and non-null; non-numeric text is "not in"
+    assert(numIds("""{"n": {"$nin": [3, 7]}}""") == Seq(5L, 8L))
+    assert(numIds("""{"n": {"$nin": [1]}}""") == Seq(1L, 2L, 3L, 5L, 8L))
+  }
+
   test("$exists is key presence, not non-null (jsonb_exists semantics)") {
     assert(ids("""{"genre": {"$exists": true}}""") == Seq(1L, 2L, 3L, 5L, 6L))
     assert(ids("""{"genre": {"$exists": false}}""") == Seq(4L))

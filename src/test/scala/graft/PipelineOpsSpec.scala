@@ -1,10 +1,9 @@
 package graft
 
 import graft.operators.{Linkage, Profile}
-import org.apache.spark.sql.functions._
 
-/** Round-3 pipeline additions: profiling, record linkage, k-means
-  * refinement and per-group trend kernels. */
+/** Round-3 pipeline additions: profiling, record linkage and per-group
+  * trend kernels. */
 class PipelineOpsSpec extends SparkTestBase {
   import spark.implicits._
 
@@ -35,41 +34,6 @@ class PipelineOpsSpec extends SparkTestBase {
     assert(r.toSeq == Seq(
       (10L, "rd widget", 1L, "red widget", 1),
       (12L, "red blot", 3L, "red bolt", 2)))
-  }
-
-  test("kmeansRefine: matches local Lloyd reference and lowers distortion") {
-    import graft.operators.Vectors
-    val emb = Tables.embeddings(spark, sfDir)
-    val data = emb.select(col("vec_id"), col("embedding").cast("array<double>")).collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
-    val init = data.filter(_._1 % 7 == 3).sortBy(_._1).take(4)
-      .map { case (id, v) => (id, v.toSeq) }.toSeq
-
-    def assign(cents: Seq[(Long, Seq[Double])]) = data.map { case (_, v) =>
-      cents.map { case (cid, cv) =>
-        (cv.zip(v).map { case (a, b) => (a - b) * (a - b) }.sum, cid)
-      }.min
-    }
-    def distortion(cents: Seq[(Long, Seq[Double])]) = assign(cents).map(_._1).sum
-
-    val refined = Vectors.kmeansRefine(emb, "embedding", init, 2)
-    assert(refined.map(_._1).toSet.subsetOf(init.map(_._1).toSet))
-    assert(distortion(refined) < distortion(init), "refinement must lower distortion")
-
-    // one step agrees with a local reference mean (6 dp rounding)
-    val step1 = Vectors.kmeansRefine(emb, "embedding", init, 1).toMap
-    val members = data.map { case (_, v) =>
-      val cid = init.map { case (c, cv) =>
-        (cv.zip(v).map { case (a, b) => (a - b) * (a - b) }.sum, c)
-      }.min._2
-      (cid, v)
-    }.groupBy(_._1)
-    members.foreach { case (cid, rows) =>
-      val mean = rows.map(_._2).transpose.map(ds => ds.sum / ds.length)
-      step1(cid).zip(mean).foreach { case (got, want) =>
-        assert(math.abs(got - want) < 2e-6, s"centroid $cid mean drift")
-      }
-    }
   }
 
   test("linearTrend recovers an exact fit; degenerate x gives NULL slope") {

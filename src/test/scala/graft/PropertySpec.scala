@@ -155,28 +155,6 @@ class PropertySpec extends SparkTestBase {
     rows.foreach(r => assert(r.getLong(0) == r.getLong(1)))
   }
 
-  test("quantizedCos9 equals the interpreted HOF aggregate form bit-for-bit") {
-    // the r11 codegen swap's exact claim: VecDot sums strictly left-to-right
-    // from 0.0, same as aggregate(zip_with(...)) — so the d9 key is
-    // bit-identical, not approximately equal
-    val pairGen: Gen[(List[Double], List[Double])] = for {
-      len <- Gen.choose(3, 48)
-      a <- Gen.listOfN(len, Gen.chooseNum(-2.0, 2.0))
-      b <- Gen.listOfN(len, Gen.chooseNum(-2.0, 2.0))
-    } yield (a.map(x => if (math.abs(x) < 0.05) 0.1 else x), // keep norms > 0
-             b.map(x => if (math.abs(x) < 0.05) 0.1 else x))
-    val pairs = sample(pairGen, 300, seed = 7L)
-    val rows = pairs.toDF("a", "b")
-      .select(graft.operators.Vectors.quantizedCos9(col("a"), col("b")).as("fast"),
-        floor((lit(1.0) -
-          expr("aggregate(zip_with(a, b, (p, q) -> p * q), CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)") /
-          (sqrt(expr("aggregate(a, CAST(0.0 AS DOUBLE), (acc, v) -> acc + v * v)")) *
-           sqrt(expr("aggregate(b, CAST(0.0 AS DOUBLE), (acc, v) -> acc + v * v)"))))
-          * lit(1000000000.0)).cast("long").as("ref"))
-      .collect()
-    rows.foreach(r => assert(r.getLong(0) == r.getLong(1)))
-  }
-
   test("VecCosineDist equals the VecDot composition bit-for-bit, codegen and interpreted") {
     // the fused kernel must not move a cosine oracle row: same three
     // left-to-right sums, same final double arithmetic

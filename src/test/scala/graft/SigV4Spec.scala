@@ -208,14 +208,4 @@ class SigV4Spec extends SparkTestBase {
     val full = chain(ld2, sc2, seed2, phs2)
     assert(full.size == phs2.size + 1 && full.init.last != full.last)
   }
-
-  test("v3_graph_beam_search: beam census invariants hold") {
-    val rows = Registry.all("v3_graph_beam_search").fn(spark, sfDir).collect()
-    assert(rows.nonEmpty)
-    rows.foreach { r =>
-      assert(r.getLong(1) <= 5L)             // n_beam <= k
-      assert(r.getLong(3) <= r.getLong(1))   // recall5 <= n_beam <= 5
-      assert(r.getLong(2) >= 0L)             // cosine d9 sums non-negative
-    }
-  }
 }

@@ -93,4 +93,14 @@ class VectorLimitsSpec extends AnyFunSuite {
     assert(cos(0)._2 == 0.0 && cos(1)._2 == 1.0 && cos(2)._2.isNaN)
     assert(run("euclidean") == Seq((2L, 0.0), (1L, 1.0), (3L, 1.414213562)))
   }
+
+  test("upsert is last-wins by priority and deterministic") {
+    val spark = SparkTestBase.spark
+    import spark.implicits._
+    val batches = Seq((1L, "v1", 1), (1L, "v2", 2), (2L, "w1", 1))
+      .toDF("key", "value", "priority")
+    val got = Vectors.upsert(batches, "key", "priority")
+      .orderBy("key").collect().map(r => (r.getLong(0), r.getString(1)))
+    assert(got.toSeq == Seq((1L, "v2"), (2L, "w1")))
+  }
 }
