@@ -3,8 +3,9 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Iterative graph analytics over edge lists: connected components
-  * ([[resolveClusters]]) and PageRank in FIXED-POINT integer arithmetic.
+/** Iterative graph analytics over edge lists (walks, triangles, core
+  * peeling, Louvain, label propagation, BFS), with PageRank in FIXED-POINT
+  * integer arithmetic.
   *
   * Why integers: float PageRank sums in-neighbor contributions with a
   * partition-order-dependent double sum — reruns and engines disagree in
@@ -374,116 +375,6 @@ object Graph {
       .localCheckpoint()
     e.unpersist(); deg.unpersist()
     out
-  }
-
-  /** Duplicate-cluster resolution: near-dup PAIRS → connected components →
-    * one canonical keeper per cluster (the min id — the rule every dedup
-    * pipeline needs after pair generation, since near-dup is transitive in
-    * practice: a~b, b~c ⇒ keep one of {a,b,c}).
-    *
-    * Min-label propagation (the Pregel/GraphX connected-components algorithm
-    * without the GraphX dependency): every node starts labeled with itself;
-    * each round, a node adopts the min label in its neighborhood; fixpoint ⇒
-    * labels = component minima. The driver loop is the standard shape for
-    * iterative graph algorithms on DataFrames — each round is ONE
-    * shuffle-join bounded by the edge count, rounds needed = graph diameter
-    * (near-dup clusters are shallow: a handful of rounds). Each round's
-    * result persists and the previous unpersists, so lineage stays O(1).
-    *
-    * Adaptive execution, same shape as Spark's own broadcast-join threshold:
-    * below `localEdgeThreshold` edges (long ids only) the whole component
-    * resolution runs as ONE executor task — union-find over the coalesced
-    * edge list via mapPartitions, executor-side, no driver collect. A dedup
-    * pair list is near-dup EDGES, which are orders of magnitude rarer than
-    * docs; even a 100 TB corpus commonly yields a pair list in the millions,
-    * where a 4-shuffle-per-round distributed loop is pure scheduling
-    * overhead (measured: ~0.2 s vs ~4 s at sf0.1). Above the threshold the
-    * distributed pointer-jump loop takes over unchanged.
-    *
-    * `pairs` holds the edges as (id_a, id_b); the distributed loop stops
-    * after 20 rounds. Returns (id, cluster) — cluster is the component's
-    * min id. */
-  def resolveClusters(pairs: DataFrame,
-                      localEdgeThreshold: Long = 4L << 20): DataFrame = {
-    // Eager localCheckpoint severs the pair-generation lineage: without it,
-    // EVERY round's plan re-embeds (and Catalyst re-optimizes) the whole
-    // upstream pair-generating pipeline — the classic iterative-DataFrame
-    // trap (a near-dup resolution over this kernel went 152 s → ~5 s at
-    // sf0.1 from this change).
-    val p = pairs.select(col("id_a").as("src"), col("id_b").as("dst")).localCheckpoint()
-    val integral = p.schema.fields.forall(f => f.dataType match {
-      case org.apache.spark.sql.types.LongType | org.apache.spark.sql.types.IntegerType => true
-      case _ => false
-    })
-    if (integral && p.count() <= localEdgeThreshold) return resolveClustersLocal(p)
-    // undirected: both directions
-    val edges = p.unionByName(p.select(col("dst").as("src"), col("src").as("dst")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // init fused with round 1: label(v) = min(v, min neighbor) is one
-    // aggregation over the edge list — no join needed while labels still
-    // equal ids
-    var labels = edges.groupBy(col("src"))
-      .agg(min(col("dst")).as("_m"))
-      .select(col("src").as("id"), least(col("src"), col("_m")).as("label"))
-      .localCheckpoint()
-    var iter = 0
-    var changed = 1L
-    while (changed > 0 && iter < 20) {
-      // step 1: adopt the min label in the neighborhood
-      val nbrMin = edges
-        .join(labels.withColumnRenamed("id", "dst"), Seq("dst"))
-        .groupBy(col("src").as("id")).agg(min(col("label")).as("nbr"))
-      val step1 = labels.join(nbrMin, Seq("id"), "left")
-        .select(col("id"), col("label").as("old"),
-          least(col("label"), coalesce(col("nbr"), col("label"))).as("l1"))
-      // step 2: pointer jumping — follow my label to ITS label, halving the
-      // remaining chain length every round (O(log diameter) convergence vs
-      // O(diameter) for plain propagation)
-      val mapping = step1.select(col("id").as("mid"), col("l1").as("mlabel"))
-      val step2 = step1.join(mapping, step1("l1") === mapping("mid"), "left")
-        .select(col("id"), col("old"),
-          least(col("l1"), coalesce(col("mlabel"), col("l1"))).as("label"))
-      val mat = step2.localCheckpoint() // flat lineage for the next round
-      changed = mat.filter(col("label") < col("old")).count()
-      labels = mat.drop("old")
-      iter += 1
-    }
-    edges.unpersist()
-    labels.select(col("id"), col("label").as("cluster"))
-  }
-
-  /** Small-graph path: union-find (union by rank + path compression) over the
-    * edge list in a single executor task. coalesce(1) moves the edges to one
-    * partition WITHOUT a shuffle; the task is O(E α(E)) time and O(V+E)
-    * memory — at the 4M-edge threshold that's tens of MB, the same order a
-    * broadcast-join side would occupy. Output is deterministic: every node
-    * labels with its component's min id, rows sorted by the caller. */
-  private def resolveClustersLocal(edges: DataFrame): DataFrame = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-    edges.select(col("src").cast("long"), col("dst").cast("long")).as[(Long, Long)]
-      .coalesce(1)
-      .mapPartitions { it =>
-        val parent = scala.collection.mutable.LongMap.empty[Long]
-        def find(x: Long): Long = {
-          var r = x
-          while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
-          var c = x // path compression
-          while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
-          r
-        }
-        val nodes = scala.collection.mutable.ArrayBuffer.empty[Long]
-        it.foreach { case (a, b) =>
-          if (!parent.contains(a)) { parent(a) = a; nodes += a }
-          if (!parent.contains(b)) { parent(b) = b; nodes += b }
-          val (ra, rb) = (find(a), find(b))
-          // union by min root keeps the invariant root == component min so
-          // far, making the final labels independent of edge order
-          if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
-        }
-        nodes.iterator.map(v => (v, find(v)))
-      }
-      .toDF("id", "cluster")
   }
 
   def labelPropagation(edges: DataFrame, iters: Int,

@@ -8,37 +8,45 @@ import org.apache.spark.sql.functions._
   * core operator family (SURVEY §3.1, reference
   * src/storage/object.ts:619-721 + migrations/tenant/0050-search-v2-optimised.sql).
   *
-  * Spark-first shape: one declarative pipeline
-  * `filter(prefix, cursor) → commonPrefix → folders ∪ files → orderBy → limit(k+1)`.
-  * The reference's hybrid skip-scan (O(k·log n) index seeks) exists because
-  * Postgres reads heap pages; a columnar scan + groupBy is the Spark idiom —
-  * predicate pushdown prunes row groups on `bucket_id`/`name` min-max stats,
-  * and TakeOrderedAndProject makes the final top-k a distributed heap, so no
-  * global sort materializes at 100 TB.
+  * Spark-first shape: `filter(prefix, cursor) → coalesce(1) → entry →
+  * aggregate → orderBy → limit`, one job of one task ([[entries]]). The
+  * reference's hybrid skip-scan (O(k·log n) index seeks) exists because
+  * Postgres reads heap pages; here predicate pushdown prunes row groups and
+  * pages on `bucket_id`/`name` min-max stats, and the rows left are read
+  * once, with no shuffle. Trade-off: a listing is single-task, so a root
+  * listing of a huge bucket runs on one thread, as one Postgres backend
+  * running 0050 does.
   */
 object Listing {
 
-  /** Result schema shared by all listing variants: folder rows carry NULL
-    * size/timestamps (reference 0027:29-36, object.ts:663-667). */
-  private def folderRows(withCp: DataFrame): DataFrame =
-    withCp.filter(col("cp").isNotNull)
-      .groupBy(col("cp").as("name"))
-      .agg(count(lit(1)).as("_n")) // groupBy (not distinct) keeps one shuffle
-      .select(col("name"), lit(true).as("is_folder"),
-        lit(null).cast("long").as("size"),
-        lit(null).cast("timestamp").as("created_at"))
+  /** One row per listing entry of `scoped`, in one pass: a row under a
+    * folder maps to `folder(cp)` (`cp` its common prefix), any other row to
+    * its own key, grouped by (entry `name`, `is_folder`) so a file named
+    * like an rtrimmed folder (`A/123` beside `A/123/x`) stays its own row.
+    * `aggs` may read `cp`, NULL on a file's row ([[fileOnly]]).
+    * `coalesce(1)` adds no shuffle and already meets the aggregate's
+    * clustering requirement, so Catalyst plans no Exchange: the listing and
+    * the sort or top-k above it are one job, one stage and one task. */
+  private def entries(scoped: DataFrame, cp: Column, folder: Column => Column,
+                      aggs: Column*): DataFrame =
+    scoped.coalesce(1)
+      .withColumn("cp", cp)
+      .groupBy(coalesce(folder(col("cp")), col("name")).as("name"),
+        col("cp").isNotNull.as("is_folder"))
+      .agg(aggs.head, aggs.tail: _*)
 
-  private def fileRows(withCp: DataFrame): DataFrame =
-    withCp.filter(col("cp").isNull)
-      .select(col("name"), lit(false).as("is_folder"), col("size"), col("created_at"))
+  /** A file's own `c` in an [[entries]] aggregate; NULL on a folder row
+    * (reference 0027:29-36, object.ts:663-667). */
+  private def fileOnly(c: String): Column = min(when(col("cp").isNull, col(c))).as(c)
 
   /** ListObjectsV2 (S3 semantics, reference s3-handler.ts:204-276 +
     * storage.search_v2 0050:598-672): delimiter collapse into common
     * prefixes, byte-ordered keyset pagination via `startAfter`, page cap.
     *
     * Scale notes: `limit` caps at 1000 (s3-handler.ts:219) so the result is
-    * tiny; everything before the limit is a single scan + one partial-agg
-    * shuffle over only the keys under `prefix` (pushed-down filters).
+    * tiny; everything before the limit is one scan of only the keys under
+    * `prefix` past the cursor (pushed-down filters) into one aggregate, in
+    * one task with no shuffle ([[entries]]).
     */
   def listObjectsV2(objects: DataFrame, bucket: String, prefix: String,
                     delimiter: Option[String] = Some("/"),
@@ -50,10 +58,8 @@ object Listing {
       .filter(startAfter.map(t => col("name") > lit(t)).getOrElse(lit(true)))
     delimiter match {
       case Some(d) =>
-        val withCp = scoped.withColumn("cp", commonPrefix(col("name"), prefix, d))
-        // per-branch limit before union (reference 0027:41-52, U2): k+k→k
-        folderRows(withCp).orderBy(col("name")).limit(cap)
-          .unionByName(fileRows(withCp).orderBy(col("name")).limit(cap))
+        entries(scoped, commonPrefix(col("name"), prefix, d), identity,
+          fileOnly("size"), fileOnly("created_at"))
           .orderBy(col("name")).limit(cap)
       case None =>
         scoped.select(col("name"), lit(false).as("is_folder"), col("size"),
@@ -68,8 +74,8 @@ object Listing {
     val cap = math.min(limit, 1500)
     val scoped = objects.filter(col("bucket_id") === bucket &&
       hasPrefixCI(col("name"), prefix))
-    val withCp = scoped.withColumn("cp", commonPrefix(col("name"), prefix, "/"))
-    folderRows(withCp).unionByName(fileRows(withCp))
+    entries(scoped, commonPrefix(col("name"), prefix, "/"), identity,
+      fileOnly("size"), fileOnly("created_at"))
       .orderBy(lower(col("name")), col("name"))
       .offset(offset).limit(cap)
   }
@@ -83,21 +89,15 @@ object Listing {
     val cap = math.min(limit, 1500)
     val scoped = objects.filter(col("bucket_id") === bucket &&
       hasPrefix(col("name"), prefix))
-    val withCp = scoped.withColumn("cp", commonPrefix(col("name"), prefix, "/"))
-    val folders = withCp.filter(col("cp").isNotNull)
-      .groupBy(col("cp").as("name"))
-      .agg(min(col("created_at")).as("created_at"))
-      .select(col("name"), lit(true).as("is_folder"), col("created_at"))
-    val files = withCp.filter(col("cp").isNull)
-      .select(col("name"), lit(false).as("is_folder"), col("created_at"))
-    val unioned = folders.unionByName(files)
+    val listed = entries(scoped, commonPrefix(col("name"), prefix, "/"), identity,
+      min(col("created_at")).as("created_at"))
     val paged = after match {
       case Some((ts, tok)) =>
         // cursor timestamp parses in the session tz (UTC) — never via
         // java.sql.Timestamp, whose valueOf uses the JVM default tz
-        unioned.filter(keysetAfter(col("created_at"), col("name"),
+        listed.filter(keysetAfter(col("created_at"), col("name"),
           to_timestamp(lit(ts)), lit(tok)))
-      case None => unioned
+      case None => listed
     }
     paged.orderBy(truncMs(col("created_at")), col("name")).limit(cap)
   }
@@ -146,8 +146,10 @@ object Listing {
     * of the delimiter; the combined relation sorts on
     * `COALESCE(date_trunc(ms, sortCol), epoch)` with byte-ordered name
     * tiebreak, and the O5 cursor is the same row-value predicate as
-    * [[sortedListing]]. One partial-agg shuffle (folders) + top-k — the
-    * listObjectsV2 plan shape with a sort key swapped in. */
+    * [[sortedListing]]. One aggregate + top-k in one task — the
+    * listObjectsV2 plan shape with a sort key swapped in. A folder and a
+    * file of the same name (`A/123` beside `A/123/x`) tie on name; the
+    * folder sorts first ascending and last descending. */
   def sortedListingV2(objects: DataFrame, bucket: String, prefix: String,
                       sortColumn: String, sortOrder: String, limit: Int,
                       after: Option[(String, String)] = None): DataFrame = {
@@ -157,23 +159,18 @@ object Listing {
     }
     val scoped = objects
       .filter(col("bucket_id") === bucket && hasPrefix(col("name"), prefix))
-      .withColumn("cp", commonPrefix(col("name"), prefix, "/"))
-    // the sort column must survive the projection: folders carry NULL
+    // the sort column must survive the aggregate: folders carry NULL
     // last_accessed_at (0050:733 — epoch-coalesced by the sort key), files
     // carry theirs when the relation has one
-    val hasLaa = objects.columns.contains("last_accessed_at")
-    val fileLaa: Column =
-      if (hasLaa) col("last_accessed_at") else lit(null).cast("timestamp")
-    val folders = scoped.filter(col("cp").isNotNull)
-      .groupBy(rtrim(col("cp"), "/").as("name"))
-      .agg(min(col("created_at")).as("created_at"))
-      .select(col("name"), lit(true).as("is_prefix"),
-        col("created_at").as("updated_at"), col("created_at"),
-        lit(null).cast("timestamp").as("last_accessed_at"))
-    val files = scoped.filter(col("cp").isNull)
-      .select(col("name"), lit(false).as("is_prefix"),
-        col("updated_at"), col("created_at"), fileLaa.as("last_accessed_at"))
-    val combined = folders.unionByName(files)
+    val laa =
+      if (objects.columns.contains("last_accessed_at")) fileOnly("last_accessed_at")
+      else lit(null).cast("timestamp").as("last_accessed_at")
+    val combined = entries(scoped, commonPrefix(col("name"), prefix, "/"), rtrim(_, "/"),
+        min(col("created_at")).as("created_at"), fileOnly("updated_at"), laa)
+      .select(col("name"), col("is_folder").as("is_prefix"),
+        when(col("is_folder"), col("created_at")).otherwise(col("updated_at"))
+          .as("updated_at"),
+        col("created_at"), col("last_accessed_at"))
     val epoch = to_timestamp(lit("1970-01-01 00:00:00"))
     val key: Column =
       if (colName == "name") col("name")
@@ -189,9 +186,10 @@ object Listing {
         combined.filter(if (desc) col("name") < tok else col("name") > tok)
       case None => combined
     }
-    val (k1, k2) =
-      if (desc) (key.desc, col("name").desc) else (key.asc, col("name").asc)
-    paged.orderBy(k1, k2).limit(math.min(limit, 1500))
+    val order =
+      if (desc) Seq(key.desc, col("name").desc, col("is_prefix").asc)
+      else Seq(key.asc, col("name").asc, col("is_prefix").desc)
+    paged.orderBy(order: _*).limit(math.min(limit, 1500))
       .select(col("name"), col("is_prefix"), col("updated_at"), col("created_at"))
   }
 
@@ -227,14 +225,14 @@ object Listing {
     * jumps over the whole subtree. What the loop RETURNS is exactly this
     * relation: each folder with the peeked (minimum) key beneath it — plus
     * `n_entries`, which the index-seek version can't see without heap reads
-    * (its O(k·log n) win is precisely NOT counting). One partial-agg shuffle
-    * over pruned row groups; `min(name)` combines map-side, so at 100 TB the
-    * shuffle carries one row per folder, not per object. [[skipScanFolders]]
-    * replays the reference's actual seek loop; `SkipScanSpec` pins loop ≡
-    * relation. */
+    * (its O(k·log n) win is precisely NOT counting). The [[entries]] shape:
+    * the pruned rows are read by one task into one aggregate and sorted in
+    * place, with no shuffle. [[skipScanFolders]] replays the reference's
+    * actual seek loop; `DmlOpsSpec` pins loop ≡ relation. */
   def foldersPeek(objects: DataFrame, bucket: String, prefix: String): DataFrame =
     objects
       .filter(col("bucket_id") === bucket && hasPrefix(col("name"), prefix))
+      .coalesce(1)
       .withColumn("cp", commonPrefix(col("name"), prefix, "/"))
       .filter(col("cp").isNotNull)
       .groupBy(col("cp").as("folder"))

@@ -261,18 +261,4 @@ class GraphSpec extends SparkTestBase {
       .orderBy("v").collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
     assert(re == base, "integer gain argmax must be partitioning-invariant")
   }
-
-  test("resolveClusters: components labeled by min id, chains included") {
-    val pairs = Seq((2L, 1L), (2L, 3L), (3L, 7L), (10L, 11L))
-      .toDF("id_a", "id_b")
-    val got = Graph.resolveClusters(pairs).orderBy("id")
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
-    // {1,2,3,7} is a chain (diameter 3) → all label 1; {10,11} → 10
-    assert(got.toSeq == Seq((1L, 1L), (2L, 1L), (3L, 1L), (7L, 1L),
-      (10L, 10L), (11L, 10L)))
-    // distributed pointer-jump path (threshold 0 forces it) agrees exactly
-    val dist = Graph.resolveClusters(pairs, localEdgeThreshold = 0L)
-      .orderBy("id").collect().map(r => (r.getLong(0), r.getLong(1)))
-    assert(dist.toSeq == got.toSeq)
-  }
 }

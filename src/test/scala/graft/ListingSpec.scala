@@ -2,13 +2,21 @@ package graft
 
 import graft.functions.TokenCodec
 import graft.operators.Listing
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 
 /** Listing semantics against a reference-shaped fixture: delimiter collapse,
   * folder-row NULL shape, cursors, caps — mirrors the behaviors inventoried
   * in the reference's acceptance/API_COVERAGE.md (listing continuation /
-  * start-after / delimiter).
+  * start-after / delimiter). Then the plan shape every delimiter listing
+  * keeps (one job, no shuffle), and the listings against plain Scala models
+  * of their semantics over random key sets.
   */
 class ListingSpec extends SparkTestBase {
+  import ListingSpec.Obj
   import spark.implicits._
 
   private val ts = java.sql.Timestamp.valueOf("2020-06-01 12:00:00.123")
@@ -145,4 +153,212 @@ class ListingSpec extends SparkTestBase {
     assert(page1.map(_.getString(0)).toSeq == full.take(100))
     assert(page2 == full.slice(100, 200))
   }
+
+  // ── plan shape: a delimiter listing is one Spark job with no shuffle ──
+
+  /** Spark jobs started while `body` runs, counted by a listener. */
+  private def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    ListenerBusDrain.drain(sc) // earlier jobs' events must not reach it
+    sc.addSparkListener(listener)
+    try { body; ListenerBusDrain.drain(sc); jobs.get }
+    finally sc.removeSparkListener(listener)
+  }
+
+  test("delimiter listings and foldersPeek plan no shuffle and run one Spark job") {
+    val objects = Tables.objects(spark, sfDir)
+    // a key inside one of R/'s folders, so the page starts mid-folder
+    val cursor = Listing.listObjectsV2(objects, "F", "R/", None, None, 1000)
+      .collect().map(_.getString(0)).find(_.indexOf('/', 2) > 0).get
+    val listings: Seq[(String, DataFrame)] = Seq(
+      "listObjectsV2" -> Listing.listObjectsV2(objects, "F", "R/", Some("/"), None, 100),
+      "listObjectsV2 startAfter" ->
+        Listing.listObjectsV2(objects, "F", "R/", Some("/"), Some(cursor), 100),
+      "searchLegacy" -> Listing.searchLegacy(objects, "F", "r/", 50, 20),
+      "sortedListingV2 by name" ->
+        Listing.sortedListingV2(objects, "F", "N/", "name", "asc", 100),
+      "sortedListingV2 by created_at" ->
+        Listing.sortedListingV2(objects, "F", "N/", "created_at", "desc", 100),
+      "searchByTimestamp" -> Listing.searchByTimestamp(objects, "F", "R/",
+        Some(("1996-06-01 00:00:00", "R/")), 150),
+      "foldersPeek" -> Listing.foldersPeek(objects, "F", "R/"))
+    for ((what, df) <- listings) {
+      val jobs = jobsOf(df.collect())
+      // descends into AQE's final plan and its query stages
+      val plan = df.queryExecution.executedPlan
+      assert(new AdaptiveSparkPlanHelper {}.collect(plan) { case x: ShuffleExchangeLike => x }
+        .isEmpty, s"$what plans a shuffle:\n$plan")
+      assert(jobs == 1, s"$what ran $jobs Spark jobs:\n$plan")
+    }
+  }
+
+  // ── the listings against brute-force models over random key sets ──
+
+  private def micros(t: java.sql.Timestamp): Long =
+    Math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000
+  private def truncMs(us: Long): Long = Math.floorDiv(us, 1000L) * 1000L
+  /** A cursor timestamp as the session (UTC) parses it. */
+  private def cursorTs(us: Long): String =
+    java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm:ss.SSS")
+      .format(java.time.LocalDateTime.ofEpochSecond(Math.floorDiv(us, 1000000L),
+        (Math.floorMod(us, 1000000L) * 1000).toInt, java.time.ZoneOffset.UTC))
+
+  private def frame(objs: Seq[Obj]): DataFrame = {
+    def ts(us: Long) = java.sql.Timestamp.from(java.time.Instant.EPOCH.plusNanos(us * 1000))
+    objs.map(o => (o.bucket, o.name, o.size, ts(o.created), ts(o.updated)))
+      .toDF("bucket_id", "name", "size", "created_at", "updated_at")
+  }
+
+  private def cpOf(name: String, prefix: String, d: String): Option[String] = {
+    val i = name.indexOf(d, prefix.length)
+    if (i >= 0) Some(name.substring(0, i + d.length)) else None
+  }
+
+  /** (name, is_folder, size, created µs) rows, folders with NULL metadata. */
+  private type Entry = (String, Boolean, Option[Long], Option[Long])
+  private def modelEntries(scoped: Seq[Obj], prefix: String, d: String): Seq[Entry] = {
+    val (under, files) = scoped.partition(o => cpOf(o.name, prefix, d).isDefined)
+    under.flatMap(o => cpOf(o.name, prefix, d)).distinct.map(f => (f, true, None, None)) ++
+      files.map(o => (o.name, false, Some(o.size), Some(o.created)))
+  }
+  private def entryRow(r: Row): Entry = (r.getString(0), r.getBoolean(1),
+    if (r.isNullAt(2)) None else Some(r.getLong(2)),
+    if (r.isNullAt(3)) None else Some(micros(r.getTimestamp(3))))
+
+  private def modelListV2(objs: Seq[Obj], b: String, prefix: String, d: String,
+                          after: Option[String], maxKeys: Int): Seq[Entry] =
+    modelEntries(objs.filter(o => o.bucket == b && o.name.startsWith(prefix) &&
+      after.forall(o.name > _)), prefix, d).sortBy(_._1).take(math.min(maxKeys, 1000))
+
+  private def modelSearchLegacy(objs: Seq[Obj], b: String, prefix: String,
+                                limit: Int, offset: Int): Seq[Entry] =
+    modelEntries(objs.filter(o => o.bucket == b &&
+      o.name.toLowerCase.startsWith(prefix.toLowerCase)), prefix, "/")
+      .sortBy(e => (e._1.toLowerCase, e._1)).slice(offset, offset + math.min(limit, 1500))
+
+  /** Folders and files of one level with their (updated, created) µs: a
+    * folder takes MIN(created_at) of its keys as both. */
+  private def modelTimed(objs: Seq[Obj], b: String, prefix: String,
+                         folder: String => String): Seq[(String, Boolean, Long, Long)] = {
+    val scoped = objs.filter(o => o.bucket == b && o.name.startsWith(prefix))
+    val (under, files) = scoped.partition(o => cpOf(o.name, prefix, "/").isDefined)
+    under.groupBy(o => folder(cpOf(o.name, prefix, "/").get)).toSeq.map { case (f, os) =>
+      val c = os.map(_.created).min
+      (f, true, c, c)
+    } ++ files.map(o => (o.name, false, o.updated, o.created))
+  }
+
+  private def modelSearchByTimestamp(objs: Seq[Obj], b: String, prefix: String,
+                                     after: Option[(Long, String)], limit: Int)
+      : Seq[(String, Boolean, Long)] =
+    modelTimed(objs, b, prefix, identity)
+      .map(e => (e._1, e._2, e._4))
+      .filter(e => after.forall { case (a, tok) =>
+        truncMs(e._3) > a || (truncMs(e._3) == a && e._1 > tok) })
+      .sortBy(e => (truncMs(e._3), e._1)).take(math.min(limit, 1500))
+
+  private def modelSortedV2(objs: Seq[Obj], b: String, prefix: String, sortCol: String,
+                            desc: Boolean, after: Option[(Long, String)], limit: Int)
+      : Seq[(String, Boolean, Long, Long)] = {
+    val all = modelTimed(objs, b, prefix, _.reverse.dropWhile(_ == '/').reverse)
+    def key(e: (String, Boolean, Long, Long)): Long =
+      if (sortCol == "name") 0L else truncMs(if (sortCol == "created_at") e._4 else e._3)
+    // a name cursor carries a = 0, the key of every row sorted by name
+    val paged = all.filter(e => after.forall { case (a, tok) =>
+      val k = key(e)
+      if (desc) k < a || (k == a && e._1 < tok) else k > a || (k == a && e._1 > tok) })
+    // ascending: key, name, then the folder before a file of the same name
+    val asc = paged.sortBy(e => (key(e), e._1, !e._2))
+    (if (desc) asc.reverse else asc).take(math.min(limit, 1500))
+  }
+
+  /** Random buckets over a small alphabet, so keys ending in the delimiter,
+    * `a/b` beside `a/b/c`, mixed case and equal milliseconds are common. */
+  private def randomObjects(seed: Long): Seq[Obj] = {
+    val r = new scala.util.Random(seed)
+    val segs = Seq("a", "b", "A", "ab", "B", "a-b", "")
+    def key(): String = {
+      val k = Seq.fill(1 + r.nextInt(3))(segs(r.nextInt(segs.length))).mkString("/")
+      if (r.nextInt(5) == 0) k + "/" else k
+    }
+    val t0 = 1577836800000000L // 2020-01-01 00:00:00 UTC
+    for {
+      b <- Seq("b1", "b2")
+      name <- Seq.fill(10 + r.nextInt(40))(key()).filter(_.nonEmpty).distinct
+    } yield {
+      val created = t0 + r.nextInt(4) * 1000L + r.nextInt(1000)
+      Obj(b, name, r.nextInt(1000).toLong, created, created + r.nextInt(3) * 1000L)
+    }
+  }
+
+  private val fixedObjects: Seq[Obj] = {
+    val t0 = 1577836800000000L
+    Seq("a/", "a/b", "a/b/", "a/b/c", "a/b-c", "a//x", "A/b", "ab", "ab/c", "b", "b-c")
+      .zipWithIndex.map { case (n, i) => Obj("b1", n, i.toLong, t0 + (i % 3) * 1000L + i, t0 + i) }
+  }
+
+  test("listObjectsV2 and searchLegacy match the model over random key sets") {
+    for ((objs, seed) <- (fixedObjects +: (1L to 2L).map(randomObjects)).zipWithIndex) {
+      val df = frame(objs)
+      val r = new scala.util.Random(seed.toLong)
+      val names = objs.filter(_.bucket == "b1").map(_.name)
+      def pick(): String = names(r.nextInt(names.length))
+      for (prefix <- Seq("", "a", "a/", "a/b", "A", pick().take(2)); d <- Seq("/", "-")) {
+        val inFolder = names.filter(n => n.startsWith(prefix) && cpOf(n, prefix, d).isDefined)
+        val afters = None +: inFolder.headOption.map(Some(_)).toSeq :+ Some(prefix + "a/a")
+        for (after <- afters; maxKeys <- Seq(1, 1000)) {
+          val got = Listing.listObjectsV2(df, "b1", prefix, Some(d), after, maxKeys)
+            .collect().map(entryRow).toSeq
+          assert(got == modelListV2(objs, "b1", prefix, d, after, maxKeys),
+            s"listObjectsV2 set=$seed prefix='$prefix' d='$d' after=$after maxKeys=$maxKeys")
+        }
+      }
+      for (prefix <- Seq("", "a", "A/", "a/b"); offset <- Seq(0, 2); limit <- Seq(1, 1000)) {
+        val got = Listing.searchLegacy(df, "b1", prefix, limit, offset)
+          .collect().map(entryRow).toSeq
+        assert(got == modelSearchLegacy(objs, "b1", prefix, limit, offset),
+          s"searchLegacy set=$seed prefix='$prefix' offset=$offset limit=$limit")
+      }
+    }
+  }
+
+  test("sortedListingV2 and searchByTimestamp match the model over random key sets") {
+    for ((objs, seed) <- (fixedObjects +: (5L to 6L).map(randomObjects)).zipWithIndex) {
+      val df = frame(objs)
+      val b1 = objs.filter(_.bucket == "b1")
+      // cursors on an existing (ms-truncated timestamp, name), so equal
+      // milliseconds leave only the name to separate rows
+      val cursors = None +: b1.take(2).map(o => Some((truncMs(o.created), o.name)))
+      for (prefix <- Seq("", "a", "a/"); cur <- cursors) {
+        for (limit <- Seq(1, 1000)) {
+          val got = Listing.searchByTimestamp(df, "b1", prefix,
+            cur.map { case (us, n) => (cursorTs(us), n) }, limit)
+            .collect().map(x => (x.getString(0), x.getBoolean(1), micros(x.getTimestamp(2)))).toSeq
+          assert(got == modelSearchByTimestamp(objs, "b1", prefix, cur, limit),
+            s"searchByTimestamp set=$seed prefix='$prefix' cursor=$cur limit=$limit")
+        }
+        for (sortCol <- Seq("name", "created_at", "updated_at"); desc <- Seq(false, true);
+             limit <- if (cur.isEmpty) Seq(1, 1000) else Seq(1000)) {
+          val after = cur.map { case (us, n) => (if (sortCol == "name") "" else cursorTs(us), n) }
+          val got = Listing.sortedListingV2(df, "b1", prefix, sortCol,
+            if (desc) "desc" else "asc", limit, after)
+            .collect().map(x => (x.getString(0), x.getBoolean(1),
+              micros(x.getTimestamp(2)), micros(x.getTimestamp(3)))).toSeq
+          val want = modelSortedV2(objs, "b1", prefix, sortCol, desc,
+            cur.map { case (us, n) => (if (sortCol == "name") 0L else us, n) }, limit)
+          assert(got == want,
+            s"sortedListingV2 set=$seed prefix='$prefix' $sortCol desc=$desc cursor=$cur limit=$limit")
+        }
+      }
+    }
+  }
+}
+
+object ListingSpec {
+  /** One key of the listing models: bucket, name, size and µs timestamps. */
+  final case class Obj(bucket: String, name: String, size: Long, created: Long, updated: Long)
 }

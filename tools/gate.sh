@@ -8,7 +8,8 @@
 #   3. tools/check.py        (DuckDB oracle compare, driver-parity)
 #   4. graft.PlanAudit       (registry-wide plan linter)
 #   5. perfbench/run.py      (api_mix + vector_query, seed 1, 15 s; each run
-#                             must exit 0 and report "correct": true)
+#                             must exit 0 and report "correct": true; both
+#                             run, and a red run's `  error:` lines are logged)
 #
 # Exit nonzero on ANY red step. Usage: tools/gate.sh [round-tag]
 set -o pipefail
@@ -56,6 +57,10 @@ if [ $RC -ne 0 ] || ! grep -qE "audit: 0 flagged" /tmp/gate_audit.log; then
   echo "GATE RED: PlanAudit rc=$RC" | tee -a "$LOG"; exit 1
 fi
 
+# Both workloads run even when the first is red, and a red run's failed
+# requests are named in the log by their `  error:` lines, so a failure can
+# be told apart from a known benchmark defect after the fact.
+PERF_RED=0
 for W in api_mix vector_query; do
   echo "--- perfbench ${W} ---" >> "$LOG"
   python3 perfbench/run.py --workload "$W" --seed 1 --seconds 15 --trace 0 \
@@ -64,10 +69,13 @@ for W in api_mix vector_query; do
   grep -E '^\{"correct":' "/tmp/gate_perf_${W}.log" | tail -1 >> "$LOG"
   if [ $RC -ne 0 ] || \
      ! grep -qE '^\{"correct": true,' "/tmp/gate_perf_${W}.log"; then
+    grep -E '^  error:' "/tmp/gate_perf_${W}.log" >> "$LOG"
     echo "GATE RED: perfbench ${W} rc=$RC (see /tmp/gate_perf_${W}.log)" \
-      | tee -a "$LOG"; exit 1
+      | tee -a "$LOG"
+    PERF_RED=1
   fi
 done
+if [ $PERF_RED -ne 0 ]; then exit 1; fi
 
 echo "=== GATE ${TAG} — finished $(date -u '+%F %T') UTC — ALL GREEN ===" >> "$LOG"
 echo "GATE GREEN"
